@@ -168,7 +168,7 @@ def q_crawl_bfs_depth3_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
     from webcrawler_woc_spark.plans.state import Warehouse
 
     cfg = CrawlConfig(whitelist=WHITELIST, words=[], depth=3, use_bloom=True, n_buckets=8)
-    wh = Warehouse(spark, tempfile.mkdtemp(prefix="wcw_entry_"), n_buckets=8)
+    wh = Warehouse(spark, tempfile.mkdtemp(prefix="wcw_entry_"))
     try:
         crawl(spark, wh, _pages(spark, sf_dir), [(SEED, 1.0)], cfg)
         # the seen set is tiny (bounded by the crawled frontier); snapshot it

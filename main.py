@@ -220,7 +220,7 @@ def main(argv: list[str] | None = None) -> int:
         http_base=args.http_base,
         http_max_per_host=args.http_max_per_host,
     )
-    wh = Warehouse(spark, args.warehouse, n_buckets=args.n_buckets)
+    wh = Warehouse(spark, args.warehouse)
     summary = crawl(spark, wh, pages, [(args.url, 1.0)], cfg)
     print(f"crawl finished: {summary}")
 

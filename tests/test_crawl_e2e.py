@@ -47,7 +47,7 @@ def run_both(spark, pages, pages_dict, tmp, **kw):
         use_bloom=kw.get("use_bloom", True),
         timeout_ms=kw.get("timeout_ms"),
     )
-    wh = Warehouse(spark, tmp, n_buckets=8)
+    wh = Warehouse(spark, tmp)
     crawl(spark, wh, pages, SEEDS, cfg)
     oracle = crawl_oracle(
         pages_dict,
@@ -101,6 +101,15 @@ class TestDepth2:
         }
         expected = {(l["url"], l["link_type"], l["crawled"]) for l in oracle.links_out}
         assert engine == expected
+
+    def test_links_out_fields_exclude_slot(self, run):
+        """The JSON sinks (main.py -o) keep the Link fields; the politeness
+        slot stored with crawled rows stays internal to the crawl order."""
+        wh, _ = run
+        assert set(read_links_out(wh).columns) == {
+            "url", "url_hash", "host", "content_type", "headers", "crawled",
+            "ipv4", "ipv6", "link_type", "contains_words", "wave",
+        }
 
     def test_rejected_disjoint_from_frontier(self, run):
         wh, oracle = run
@@ -260,7 +269,7 @@ class TestRobotsDisallow:
         cfg = CrawlConfig(
             whitelist=["h0.example"], depth=3, respect_disallow=respect, use_bloom=True
         )
-        wh = Warehouse(spark, tmp, n_buckets=4)
+        wh = Warehouse(spark, tmp)
         crawl(spark, wh, pages, [("http://h0.example/page/0", 1.0)], cfg,
               content_type_expr=ct_expr)
         oracle = crawl_oracle(
@@ -314,7 +323,7 @@ class TestTrapFilter:
         cfg = CrawlConfig(
             whitelist=["h0.example"], depth=3, trap_filter=trap_filter, use_bloom=True
         )
-        wh = Warehouse(spark, tmp, n_buckets=4)
+        wh = Warehouse(spark, tmp)
         crawl(spark, wh, pages, [("http://h0.example/page/0", 1.0)], cfg,
               content_type_expr=ct_expr)
         return {r["url"] for r in read_seen(wh).collect()}
@@ -353,7 +362,7 @@ class TestBroadcastFallbackEquivalence:
         seeds = [("http://host0.example/page/0", 1.0)]
 
         def run(path):
-            wh = Warehouse(spark, str(path), n_buckets=8)
+            wh = Warehouse(spark, str(path))
             crawl(spark, wh, pages, seeds, cfg)
             seen = sorted(r["url"] for r in read_seen(wh).collect())
             counts = {w: i["counts"] for w, i in wh.manifest["waves"].items()}

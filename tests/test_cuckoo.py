@@ -164,7 +164,7 @@ class TestCuckooSeenFilterInCrawl:
 
         def run(seen_filter, tmp):
             cfg = CrawlConfig(whitelist=wl, depth=2, n_buckets=8, seen_filter=seen_filter)
-            wh = Warehouse(spark, tmp, n_buckets=8)
+            wh = Warehouse(spark, tmp)
             summary = crawl(spark, wh, pages, seeds, cfg)
             order = sorted(
                 (r["wave"], r["host"], r["slot"], r["url"])
@@ -216,7 +216,7 @@ class TestReviewHardening:
         seeds = [("http://host0.example/page/0", 1.0)]
         wl = [f"host{i}.example" for i in range(5)]
         with tempfile.TemporaryDirectory() as tmp:
-            wh = Warehouse(spark, tmp, n_buckets=8)
+            wh = Warehouse(spark, tmp)
             crawl(spark, wh, pages, seeds,
                   CrawlConfig(whitelist=wl, depth=1, n_buckets=8, seen_filter="cuckoo"))
             # deeper rerun with the default bloom filter must refuse EARLY

@@ -216,7 +216,7 @@ class TestHttpCrawlParity:
 
         def run(cfg):
             with tempfile.TemporaryDirectory() as tmp:
-                wh = Warehouse(spark, tmp, n_buckets=8)
+                wh = Warehouse(spark, tmp)
                 crawl(spark, wh, pages, SEEDS, cfg)
                 links = {
                     tuple(r)

@@ -3,8 +3,11 @@ manifest and converges to the identical final state (SURVEY.md §5.2-3)."""
 
 from __future__ import annotations
 
+import json
+import os
 import tempfile
 
+import numpy as np
 import pytest
 
 from webcrawler_woc_spark.config import CrawlConfig
@@ -37,18 +40,18 @@ class TestResume:
 
         with tempfile.TemporaryDirectory() as t1, tempfile.TemporaryDirectory() as t2:
             # uninterrupted reference run
-            wh_full = Warehouse(spark, t1, n_buckets=8)
+            wh_full = Warehouse(spark, t1)
             crawl(spark, wh_full, pages, SEEDS, cfg_full)
 
             # interrupted run: stop after wave 1 (simulated kill: new driver
             # process == new Warehouse object reading the manifest)
             cfg_partial = CrawlConfig(whitelist=WL, depth=2, use_bloom=True, n_buckets=8)
-            wh_a = Warehouse(spark, t2, n_buckets=8)
+            wh_a = Warehouse(spark, t2)
             crawl(spark, wh_a, pages, SEEDS, cfg_partial)
             assert wh_a.last_wave == 2  # waves 0,1 + residual-flush entry
 
             # resume with the full depth from a FRESH Warehouse (manifest read)
-            wh_b = Warehouse(spark, t2, n_buckets=8)
+            wh_b = Warehouse(spark, t2)
             assert wh_b.last_wave == 2
             # drop the residual-flush pseudo-wave so wave 2 re-runs properly
             del wh_b.manifest["waves"]["2"]
@@ -61,13 +64,11 @@ class TestResume:
     def test_bloom_sidecar_reloaded_on_resume(self, spark, pages):
         cfg = CrawlConfig(whitelist=WL, depth=2, use_bloom=True, n_buckets=8)
         with tempfile.TemporaryDirectory() as tmp:
-            wh = Warehouse(spark, tmp, n_buckets=8)
+            wh = Warehouse(spark, tmp)
             crawl(spark, wh, pages, SEEDS, cfg)
-            bloom = wh.load_bloom()
+            bloom = wh.load_seen_filter()
             assert bloom is not None
             # every seen url_hash must be in the bloom (no false negatives)
-            import numpy as np
-
             hashes = np.array(
                 [r["url_hash"] for r in wh.read_waves("seen").select("url_hash").collect()],
                 dtype=np.int64,
@@ -77,12 +78,133 @@ class TestResume:
     def test_manifest_lists_lineage(self, spark, pages):
         cfg = CrawlConfig(whitelist=WL, depth=1, use_bloom=False, n_buckets=8)
         with tempfile.TemporaryDirectory() as tmp:
-            wh = Warehouse(spark, tmp, n_buckets=8)
+            wh = Warehouse(spark, tmp)
             crawl(spark, wh, pages, SEEDS, cfg)
             info = wh.manifest["waves"]["0"]
             assert info["counts"]["scheduled"] == 1
             assert info["host_lineage"][0]["host"] == "host0.example"
-            assert set(info["tables"]) >= {"links_out", "seen", "rejected", "frontier"}
+            assert set(info["tables"]) == {"links_out", "frontier", "extracted_text"}
+
+
+def _filter_arrays(filt, path: str) -> dict:
+    """Every array of a seen filter (bloom or cuckoo), via its sidecar."""
+    filt.save(path)
+    with np.load(path) as z:
+        return {k: z[k].copy() for k in z.files}
+
+
+def _assert_same_arrays(a: dict, b: dict) -> None:
+    assert a.keys() == b.keys()
+    for k in a:
+        assert np.array_equal(a[k], b[k]), k
+
+
+def _comparable_manifest(wh) -> dict:
+    """The manifest with the warehouse root and the wall-clock fields
+    (timings, wall_sec, committed_at) taken out."""
+    m = json.loads(json.dumps(wh.manifest).replace(wh.path, "<root>"))
+    for info in m["waves"].values():
+        for k in ("timings", "wall_sec", "committed_at"):
+            info.pop(k, None)
+    return m
+
+
+class TestWarehouseLayout:
+    def test_waves_write_only_the_three_tables(self, spark, pages):
+        cfg = CrawlConfig(whitelist=WL, depth=2, use_bloom=True, n_buckets=8)
+        with tempfile.TemporaryDirectory() as tmp:
+            wh = Warehouse(spark, tmp)
+            crawl(spark, wh, pages, SEEDS, cfg)
+            waves = wh.manifest["waves"]
+            assert wh.manifest["format"] == 2
+            assert sorted(waves) == ["0", "1", "2"]  # waves 0, 1 + residual flush
+            for w in ("0", "1"):
+                assert set(waves[w]["tables"]) == {"links_out", "frontier", "extracted_text"}
+            assert set(waves["2"]["tables"]) == {"links_out"}
+            assert sorted(d for d in os.listdir(tmp) if os.path.isdir(os.path.join(tmp, d))) == [
+                "extracted_text", "frontier", "links_out",
+            ]
+
+    def test_seven_table_warehouse_refuses_to_open(self, spark):
+        with tempfile.TemporaryDirectory() as tmp:
+            manifest = {
+                "last_wave": 0,
+                "n_buckets": 8,
+                "waves": {"0": {
+                    "tables": {t: os.path.join(tmp, t, "wave=0") for t in (
+                        "links_out", "seen", "rejected", "frontier", "flagged",
+                        "extracted_text", "crawl_order",
+                    )},
+                    "counts": {"scheduled": 1},
+                }},
+            }
+            with open(os.path.join(tmp, "manifest.json"), "w") as f:
+                json.dump(manifest, f)
+            with pytest.raises(ValueError, match="7-table layout"):
+                Warehouse(spark, tmp)
+
+
+class _WriteFailed(RuntimeError):
+    pass
+
+
+class TestFailedWaveWrite:
+    @pytest.mark.parametrize("fail", ["table", "sidecar"])
+    @pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+    def test_failed_write_leaves_filter_and_retry_matches(
+        self, spark, pages, monkeypatch, kind, fail
+    ):
+        """A write that raises in wave 1 of a resumed crawl (the frontier
+        table, or the seen-filter sidecar commit_wave saves) leaves the
+        in-memory seen filter untouched; retrying the wave in the same
+        process, with the same filter object, commits the manifest and
+        sidecar of an uninterrupted crawl."""
+        from webcrawler_woc_spark.plans.crawl import seed_frontier
+        from webcrawler_woc_spark.plans.wave import run_wave
+
+        cfg = CrawlConfig(whitelist=WL, depth=2, n_buckets=8, seen_filter=kind)
+        with tempfile.TemporaryDirectory() as t1, tempfile.TemporaryDirectory() as t2:
+            wh_ref = Warehouse(spark, t1)
+            crawl(spark, wh_ref, pages, SEEDS, cfg)
+
+            wh = Warehouse(spark, t2)
+            seed_frontier(spark, wh, SEEDS)
+            run_wave(spark, wh, pages, 0, cfg, None)
+
+            wh = Warehouse(spark, t2)  # the resumed crawl
+            filt = wh.load_seen_filter()
+            before = _filter_arrays(filt, os.path.join(t2, "before.npz"))
+            if fail == "table":
+                write = Warehouse.write_wave_table
+
+                def failing(self, table, wave, df):
+                    if table == "frontier":
+                        raise _WriteFailed(table)
+                    return write(self, table, wave, df)
+
+                monkeypatch.setattr(Warehouse, "write_wave_table", failing)
+            else:
+                def failing_save(self, path):
+                    raise _WriteFailed(path)
+
+                monkeypatch.setattr(type(filt), "save", failing_save)
+            with pytest.raises(_WriteFailed):
+                run_wave(spark, wh, pages, 1, cfg, filt)
+            monkeypatch.undo()
+            assert wh.last_wave == 0
+            _assert_same_arrays(_filter_arrays(filt, os.path.join(t2, "after.npz")), before)
+
+            run_wave(spark, wh, pages, 1, cfg, filt)
+            _assert_same_arrays(  # the committed wave's rows reached the filter
+                _filter_arrays(filt, os.path.join(t2, "retried.npz")),
+                _filter_arrays(wh.load_seen_filter(), os.path.join(t2, "committed.npz")),
+            )
+            crawl(spark, wh, pages, SEEDS, cfg)  # depth reached: residual flush only
+            assert _comparable_manifest(wh) == _comparable_manifest(wh_ref)
+            _assert_same_arrays(
+                _filter_arrays(wh.load_seen_filter(), os.path.join(t2, "got.npz")),
+                _filter_arrays(wh_ref.load_seen_filter(), os.path.join(t1, "want.npz")),
+            )
 
 
 class TestMidWaveResume:
@@ -100,7 +222,7 @@ class TestMidWaveResume:
 
         with tempfile.TemporaryDirectory() as t1, tempfile.TemporaryDirectory() as t2:
             # clean reference wave
-            wh_ref = Warehouse(spark, t1, n_buckets=8)
+            wh_ref = Warehouse(spark, t1)
             crawl(spark, wh_ref, pages, SEEDS, cfg)
             ref_counts = wh_ref.wave_counts(0)
 
@@ -109,7 +231,7 @@ class TestMidWaveResume:
             # visibility point — this is exactly the state a kill between
             # writes and commit leaves, except every table finished;
             # partial-table crashes differ only in which writes get skipped)
-            wh_b = Warehouse(spark, t2, n_buckets=8)
+            wh_b = Warehouse(spark, t2)
             crawl(spark, wh_b, pages, SEEDS, cfg)
             counts_first = wh_b.wave_counts(0)
             manifest_path = os.path.join(wh_b.path, "manifest.json")
@@ -130,7 +252,7 @@ class TestMidWaveResume:
             }
 
             # rerun the wave in a FRESH Warehouse (manifest re-read)
-            wh_c = Warehouse(spark, t2, n_buckets=8)
+            wh_c = Warehouse(spark, t2)
             counts = run_wave(spark, wh_c, pages, 0, cfg, bloom=None)
             assert counts == counts_first == ref_counts
             for t, p in tables.items():
@@ -151,10 +273,10 @@ class TestMidWaveResume:
         cfg_new = CrawlConfig(whitelist=WL[:2], depth=1, use_bloom=True, n_buckets=8)
 
         with tempfile.TemporaryDirectory() as t1, tempfile.TemporaryDirectory() as t2:
-            wh_ref = Warehouse(spark, t1, n_buckets=8)
+            wh_ref = Warehouse(spark, t1)
             crawl(spark, wh_ref, pages, SEEDS, cfg_new)  # clean new-cfg run
 
-            wh_b = Warehouse(spark, t2, n_buckets=8)
+            wh_b = Warehouse(spark, t2)
             crawl(spark, wh_b, pages, SEEDS, cfg_old)  # crashed old-cfg run
             manifest_path = os.path.join(wh_b.path, "manifest.json")
             m = json.load(open(manifest_path))
@@ -171,7 +293,7 @@ class TestMidWaveResume:
                 t: os.path.getmtime(os.path.join(p, "_SUCCESS")) for t, p in tables.items()
             }
 
-            wh_c = Warehouse(spark, t2, n_buckets=8)
+            wh_c = Warehouse(spark, t2)
             counts = run_wave(spark, wh_c, pages, 0, cfg_new, bloom=None)
             assert counts == wh_ref.wave_counts(0)  # new-cfg results, not stale
             for t, p in tables.items():
@@ -191,7 +313,7 @@ class TestMidWaveResume:
         cfg = CrawlConfig(whitelist=WL, depth=1, use_bloom=True, n_buckets=8)
 
         with tempfile.TemporaryDirectory() as t2:
-            wh_b = Warehouse(spark, t2, n_buckets=8)
+            wh_b = Warehouse(spark, t2)
             crawl(spark, wh_b, pages, SEEDS, cfg)  # "crashed" attempt
             manifest_path = os.path.join(wh_b.path, "manifest.json")
             m = json.load(open(manifest_path))
@@ -209,7 +331,7 @@ class TestMidWaveResume:
                 t: os.path.getmtime(os.path.join(p, "_SUCCESS")) for t, p in tables.items()
             }
 
-            wh_c = Warehouse(spark, t2, n_buckets=8)
+            wh_c = Warehouse(spark, t2)
             run_wave(spark, wh_c, pages, 0, cfg, bloom=None, input_fp="")
             for t, p in tables.items():
                 assert os.path.getmtime(os.path.join(p, "_SUCCESS")) != mtimes[t], (

@@ -98,7 +98,7 @@ class TestStripTrackingWired:
         cfg = CrawlConfig(
             whitelist=["h0.example"], depth=2, strip_tracking=strip, use_bloom=True
         )
-        wh = Warehouse(spark, tmp, n_buckets=4)
+        wh = Warehouse(spark, tmp)
         crawl(
             spark, wh, pages,
             [("http://h0.example/page/0?utm_campaign=x", 1.0)], cfg,

@@ -182,7 +182,7 @@ def test_crawl_loop_sharded_probe_parity(spark, sf_dir, kind):
             whitelist=wl, depth=2, n_buckets=8,
             seen_filter=kind, seen_probe=seen_probe,
         )
-        wh = Warehouse(spark, tmp, n_buckets=8)
+        wh = Warehouse(spark, tmp)
         summary = crawl(spark, wh, pages, seeds, cfg)
         order = sorted(
             (r["wave"], r["host"], r["slot"], r["url"])

@@ -119,7 +119,7 @@ class TestXmlSitemapsInCrawl:
             whitelist=["h0.example"], depth=None, n_buckets=4, sitemap_xml=xml_on
         )
         with tempfile.TemporaryDirectory() as tmp:
-            wh = Warehouse(spark, tmp, n_buckets=4)
+            wh = Warehouse(spark, tmp)
             crawl(spark, wh, pages, [(self.SEED, 1.0)], cfg, content_type_expr=ct)
             return {r["url"] for r in read_seen(wh).collect()}
 

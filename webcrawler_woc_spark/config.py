@@ -8,8 +8,8 @@ from dataclasses import dataclass, field
 # Rows above which a wave-side DataFrame (frontier / matched urls / extracted
 # children) is NOT broadcast: at ~100 bytes per URL, 1M rows is ~100 MB of
 # broadcast state — near the safe ceiling for driver collect + per-executor
-# replication. Above it the operators fall back to the bucketed co-partitioned
-# shuffle join (see operators/fetch.py and operators/routing.py docstrings);
+# replication. Above it the operators fall back to a shuffle join (see
+# operators/fetch.py and operators/routing.py docstrings);
 # with host_budget set the broadcast side is provably <= hosts * budget, so
 # the fallback only triggers for unbudgeted crawls with huge wave out-degree.
 BROADCAST_MAX_ROWS = 1_000_000
@@ -39,7 +39,7 @@ class CrawlConfig:
       disables the cap, matching raw reference semantics. When robots.txt
       Crawl-delay is cached for a host, its effective budget is
       ``max(1, host_budget // crawl_delay)``.
-    * ``n_buckets`` — url_hash bucket count for state-table partitioning.
+    * ``n_buckets`` — url_hash bucket count of the seen filter's sidecar.
     * ``use_bloom`` — Bloom prefilter ahead of the exact seen anti-join.
     * ``timeout_ms`` — request-timeout simulation (reference cli.rs:34-35,
       default 10 s): matched pages whose synthetic latency exceeds this are

@@ -22,7 +22,6 @@ from .html import (
     links_from_text,
     sitemap_urls_from_robots,
 )
-from .urlnorm import host_of, normalize_url
 
 
 def _decode(html) -> str:
@@ -31,19 +30,6 @@ def _decode(html) -> str:
     if isinstance(html, (bytes, bytearray)):
         return bytes(html).decode("utf-8", errors="replace")
     return str(html)
-
-
-@pandas_udf(StringType())
-def canonicalize_url_udf(href: pd.Series, base: pd.Series) -> pd.Series:
-    """normalize_url over a batch: canonical URL string or null (drop)."""
-    return pd.Series(
-        [normalize_url(h, b) for h, b in zip(href, base)], dtype="object"
-    )
-
-
-@pandas_udf(StringType())
-def host_udf(url: pd.Series) -> pd.Series:
-    return url.map(lambda u: host_of(u) if u is not None else None)
 
 
 @pandas_udf(ArrayType(StringType()))

@@ -259,10 +259,12 @@ def _fast_join(bscheme: str, bnetloc: str, bpath: str, rel: str) -> str | None:
     case (scheme-less, authority-less rel with a non-empty path), skipping
     the base re-parse urljoin pays on EVERY call — the hot 55% of the link
     kernel (cross-validated against stdlib urljoin in
-    tests/test_round6_opt.py). Returns None to mean 'fall back to urljoin'.
+    tests/test_round6_opt.py). Unlike urljoin it keeps an empty query or
+    fragment ('p?' -> '.../p?'), as WHATWG does. Returns None to mean 'fall
+    back to join_url's slower paths'.
     """
-    if not rel or rel.startswith("//") or _rel_scheme_re.match(rel):
-        return None
+    if not rel or not bnetloc or rel.startswith("//") or _rel_scheme_re.match(rel):
+        return None  # authority-less bases (mailto:, data:) never join here
     frag = None
     if "#" in rel:
         rel, frag = rel.split("#", 1)
@@ -270,7 +272,7 @@ def _fast_join(bscheme: str, bnetloc: str, bpath: str, rel: str) -> str | None:
     if "?" in rel:
         rel, query = rel.split("?", 1)
     if rel == "":
-        return None  # query/fragment-only refs keep base parts — fall back
+        return None  # query/fragment-only refs keep base parts — join_url
     if rel.startswith("/"):
         segments = rel.split("/")
     else:
@@ -323,6 +325,14 @@ def join_url(base: str, rel: str) -> str | None:
     base_canon, bscheme, bnetloc, bpath = parts
     rel_clean = rel.translate(_TAB_NL).strip()
     joined = _fast_join(bscheme, bnetloc, bpath, rel_clean)
+    if joined is None and bnetloc and rel_clean[:1] in ("?", "#"):
+        # query/fragment-only: the base up to the replaced part, keeping an
+        # empty query or fragment (WHATWG; urljoin would drop '?' and '#'
+        # and, for '?', keep the base's query)
+        head = base_canon.split("#", 1)[0]
+        if rel_clean[0] == "?":
+            head = head.split("?", 1)[0]
+        joined = head + rel_clean
     if joined is None:
         try:
             joined = urljoin(base_canon, rel_clean)

@@ -155,7 +155,7 @@ def bloom_prefiltered_anti_join(
 
     With a Bloom filter: definitely-new rows bypass the join entirely;
     maybe-seen rows are confirmed by a scan-only exact anti-join
-    (routing.anti_join_scan: the cumulative seen table is scanned against a
+    (routing.anti_join_scan: the cumulative seen set is scanned against a
     broadcast of the small maybe-seen set, never shuffled). Without a bloom:
     the same scan-only anti-join over all candidates.
     """

@@ -14,7 +14,6 @@ from ..functions.udfs import (
     extract_links_udf,
     extract_text_udf,
     link_type_col,
-    make_contains_words_udf,
 )
 
 # Exact MIME-equality gate (reference crawler.rs:225-227 via
@@ -28,11 +27,6 @@ HTML_MIMES = ("text/html", "text/html; charset=utf-8")
 def mime_ok(content_type_col):
     """lower(content_type) ∈ HTML_MIMES — the one shared MIME predicate."""
     return F.lower(content_type_col).isin(*HTML_MIMES)
-
-
-def mime_gate(fetched: DataFrame) -> DataFrame:
-    """Rows whose body will be parsed (crawler.rs:225-227)."""
-    return fetched.filter(F.col("fetched") & mime_ok(F.col("content_type")))
 
 
 def html_body_gate(url_col, content_type_expr, timeout_ms: int | None):
@@ -50,15 +44,6 @@ def html_body_gate(url_col, content_type_expr, timeout_ms: int | None):
     if timeout_ms is not None:
         gate = gate & (synth_fetch_ms(url_col) < F.lit(timeout_ms))
     return gate
-
-
-def scan_words(gated: DataFrame, words: list[str]) -> DataFrame:
-    """contains_words column: case-sensitive raw-html scan (links.rs:285-290).
-
-    Empty word list => constant false, no UDF in the plan at all."""
-    if not words:
-        return gated.withColumn("contains_words", F.lit(False))
-    return gated.withColumn("contains_words", make_contains_words_udf(words)(F.col("html")))
 
 
 def extract_child_links(gated: DataFrame) -> DataFrame:

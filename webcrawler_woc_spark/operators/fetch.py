@@ -19,8 +19,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.udfs import host_udf
-
 
 FETCH_MS_MOD = 10**15 - 11  # same field as textstats.FINGERPRINT_MOD
 
@@ -109,10 +107,11 @@ def fetch_join(
 ) -> DataFrame:
     """Simulated fetch of every frontier URL.
 
-    Returns one row per frontier URL with columns::
+    Returns one row per frontier URL: the frontier's columns (at least url,
+    url_hash, host, priority; a politeness schedule's ``slot`` rides along
+    to the wave's links_out rows), then::
 
-        url, url_hash, host, priority, fetched(bool), content_type, headers,
-        ipv4, ipv6, html, page_text
+        fetched(bool), content_type, headers, ipv4, ipv6, html, page_text
 
     * ``fetched`` false => fetch failure: content_type/headers/ipv4/ipv6/html
       are NULL (reference crawler.rs:209-216 emits the bare link);
@@ -143,25 +142,24 @@ def fetch_join(
 
     if matched is None:
         matched = fetch_matched(frontier, pages, frontier_rows=frontier_rows)
+    keys = frontier.columns
     matched_urls = matched.select(F.col("p_url").alias("url"))
     if small_enough_to_broadcast(frontier_rows):  # |matched| <= |frontier|
         matched_urls = F.broadcast(matched_urls)
     failed = frontier.join(matched_urls, "url", "left_anti").select(
-        "url", "url_hash", "host", "priority",
+        *keys,
         F.lit(None).cast("string").alias("p_url"),
         F.lit(None).cast("binary").alias("html"),
         F.lit(None).cast("string").alias("page_text"),
     )
-    joined = matched.select(
-        "url", "url_hash", "host", "priority", "p_url", "html", "page_text"
-    ).unionByName(failed)
+    joined = matched.select(*keys, "p_url", "html", "page_text").unionByName(failed)
     fetched = F.col("p_url").isNotNull()
     if timeout_ms is not None:
         # timed-out rows keep their frontier identity but lose the response
         # (body never read, crawler.rs:209-216) — same shape as a miss
         fetched = fetched & (synth_fetch_ms(F.col("url")) < F.lit(timeout_ms))
         joined = joined.select(
-            "url", "url_hash", "host", "priority", "p_url",
+            *keys, "p_url",
             F.when(fetched, F.col("html")).alias("html"),
             F.when(fetched, F.col("page_text")).alias("page_text"),
         )
@@ -175,10 +173,7 @@ def fetch_join(
     )
     host = F.col("host")
     return joined.select(
-        F.col("url"),
-        F.col("url_hash"),
-        host,
-        F.col("priority"),
+        *keys,
         fetched.alias("fetched"),
         ct.alias("content_type"),
         headers.alias("headers"),

@@ -35,12 +35,10 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, StructType
 
-FETCH_SCHEMA = (
-    "url string, url_hash bigint, host string, priority double, "
-    "fetched boolean, content_type string, headers map<string,string>, "
-    "html binary"
-)
+# the kernel passes its frontier columns through and appends these
+RESPONSE_SCHEMA = "fetched boolean, content_type string, headers map<string,string>, html binary"
 
 # the reference's default timeout (cli.rs:34-35) arrives via cfg.timeout_ms
 # (the CLI defaults --timeout to 10 s); kept here for reference/tests
@@ -108,17 +106,11 @@ def _make_fetch_batches(timeout_s: float, cap: int, http_base: str | None):
                 results = list(
                     pool.map(lambda args: fetch_one(sems, *args), zip(pdf["url"], pdf["host"]))
                 )
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"].values,
-                    "url_hash": pdf["url_hash"].values,
-                    "host": pdf["host"].values,
-                    "priority": pdf["priority"].values,
-                    "fetched": [r[0] for r in results],
-                    "content_type": [r[1] for r in results],
-                    "headers": [r[2] for r in results],
-                    "html": [r[3] for r in results],
-                }
+            yield pdf.assign(
+                fetched=[r[0] for r in results],
+                content_type=[r[1] for r in results],
+                headers=[r[2] for r in results],
+                html=[r[3] for r in results],
             )
 
     return fetch_batches
@@ -132,8 +124,8 @@ def http_fetch_join(
 ) -> DataFrame:
     """Fetch every frontier row (url, url_hash, host, priority) over HTTP.
 
-    Returns the ``fetch_join`` contract columns: url, url_hash, host,
-    priority, fetched, content_type, headers, ipv4, ipv6, html, page_text
+    Returns the ``fetch_join`` contract columns: the frontier's columns,
+    then fetched, content_type, headers, ipv4, ipv6, html, page_text
     (page_text is NULL — a real fetch has no golden text; extraction derives
     text from the body downstream, same as the gated simulation path).
     """
@@ -145,15 +137,11 @@ def http_fetch_join(
     timeout_s = (timeout_ms if timeout_ms is not None else 300_000) / 1000.0
     fetch_batches = _make_fetch_batches(timeout_s, max(1, max_per_host), http_base)
 
-    raw = frontier.select("url", "url_hash", "host", "priority").repartition(
-        F.col("host")
-    ).mapInPandas(fetch_batches, schema=FETCH_SCHEMA)
+    schema = StructType(frontier.schema.fields + DataType.fromDDL(RESPONSE_SCHEMA).fields)
+    raw = frontier.repartition(F.col("host")).mapInPandas(fetch_batches, schema=schema)
     fetched = F.col("fetched")
     return raw.select(
-        "url",
-        "url_hash",
-        "host",
-        "priority",
+        *frontier.columns,
         "fetched",
         "content_type",
         "headers",

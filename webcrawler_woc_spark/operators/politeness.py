@@ -322,16 +322,6 @@ def schedule_wave(
     return scheduled, deferred
 
 
-def crawl_order(scheduled: DataFrame, wave: int) -> DataFrame:
-    """Golden crawl-order rows (wave, host, slot, url)."""
-    return scheduled.select(
-        F.lit(wave).cast("int").alias("wave"),
-        F.col("host"),
-        F.col("slot"),
-        F.col("url"),
-    )
-
-
 def robots_meta_flags(pages: DataFrame, body_col: str = "html") -> DataFrame:
     """Per-page robots directives from the two in-band channels robots.txt
     cannot express (RFC 9309 covers only URL-space access): the

@@ -13,8 +13,8 @@ Scale notes:
   (bounded by wave out-degree), never the cumulative seen set when the
   Bloom prefilter (operators/bloom.py) is on — the exact anti-join then runs
   against the small maybe-seen remainder.
-* seen/rejected tables are bucketed by pmod(url_hash, n_buckets) so the
-  anti-join co-partitions wave over wave.
+* the seen and rejected sets are filtered views of the warehouse's
+  links_out rows (plans/state.py VIEWS); anti_join_scan only scans them.
 """
 
 from __future__ import annotations
@@ -63,10 +63,8 @@ def anti_join_scan(
 
     ``small_rows`` gates the broadcast: past BROADCAST_MAX_ROWS (an
     unbudgeted wave with huge out-degree) broadcasting ``small`` would OOM,
-    so fall back to the plain shuffled left-anti — in the full-scale layout
-    the seen table is bucketed by pmod(url_hash, n_buckets) at rest (see
-    module docstring), so a storage-partitioned join moves only ``small``;
-    the in-sandbox fallback shuffles both sides, which is slower but safe.
+    so fall back to the plain shuffled left-anti, which shuffles both sides:
+    slower, but safe.
     """
     from ..config import small_enough_to_broadcast
 

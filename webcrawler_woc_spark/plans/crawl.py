@@ -68,7 +68,7 @@ def seed_frontier(
             rows.append((0, canon, float(priority)))
     df = spark.createDataFrame(rows, "wave int, url string, priority double")
     df = with_host(with_url_hash(df)).select("wave", "url", "url_hash", "host", "priority")
-    wh.write_wave_table("frontier", 0, df, bucket=True)
+    wh.write_wave_table("frontier", 0, df)
     return df
 
 
@@ -171,6 +171,7 @@ def _flush_residual(wh: Warehouse, residual: DataFrame, final_wave: int) -> None
         F.lit(None).cast("string").alias("ipv6"),
         link_type_col(F.col("url")).alias("link_type"),
         F.lit(False).alias("contains_words"),
+        F.lit(None).cast("int").alias("slot"),
     )
     # the count rides the write as an observation — the previous read-back
     # count() was a whole extra job per crawl (guide §1.5 zero-extra-jobs
@@ -197,8 +198,10 @@ def _flush_residual(wh: Warehouse, residual: DataFrame, final_wave: int) -> None
 
 def read_links_out(wh: Warehouse) -> DataFrame | None:
     """All emitted links across waves (the four JSON files' content,
-    partitioned by (link_type, crawled) at rest)."""
-    return wh.read_waves("links_out")
+    partitioned by (link_type, crawled) at rest); the politeness ``slot``
+    stays internal to the crawl-order view."""
+    links = wh.read_waves("links_out")
+    return links.drop("slot") if links is not None else None
 
 
 def read_seen(wh: Warehouse) -> DataFrame | None:

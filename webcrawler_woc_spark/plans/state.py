@@ -13,9 +13,13 @@ snapshot-commit contract is implemented directly over parquet):
   (north rule: "resumable from checkpoint with per-partition lineage +
   metrics").
 
-Tables: frontier, seen, rejected, links_out, flagged, crawl_order.
-State tables are repartitioned by ``pmod(url_hash, n_buckets)`` on write so
-wave-over-wave anti-joins co-partition.
+Tables (manifest ``format`` 2): each wave writes ``links_out`` (one row per
+discovered link — the wave's crawled urls with their politeness ``slot``,
+then its newly rejected links), ``frontier`` (the next wave's input) and
+``extracted_text``; the depth-mode residual flush adds uncrawled rows to
+``links_out`` at wave = depth. ``seen``, ``rejected``, ``flagged`` and
+``crawl_order`` are never stored: ``read_waves`` serves them as filtered
+projections of ``links_out`` (``VIEWS``).
 """
 
 from __future__ import annotations
@@ -26,20 +30,27 @@ import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators.bloom import PartitionedBloom
 
-STATE_TABLES = ("frontier", "seen", "rejected", "links_out", "flagged", "crawl_order")
+FORMAT = 2
+
+# name -> (filter over links_out, projected columns); ``wave`` is the
+# partition column of the links_out/wave=K directories
+VIEWS = {
+    "seen": ("crawled", ("url_hash", "url", "wave")),
+    "rejected": ("NOT crawled", ("url_hash", "url", "wave")),
+    "flagged": ("crawled AND contains_words", ("url", "wave")),
+    "crawl_order": ("crawled", ("wave", "host", "slot", "url")),
+}
 
 
 class Warehouse:
-    def __init__(self, spark: SparkSession, path: str, n_buckets: int = 32):
+    def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         # absolute root: manifest table paths must resolve regardless of the
         # cwd a later (resuming) process runs from
         self.path = os.path.abspath(path)
-        self.n_buckets = n_buckets
         os.makedirs(path, exist_ok=True)
         self._manifest_path = os.path.join(path, "manifest.json")
         self.manifest = self._load_manifest()
@@ -47,10 +58,25 @@ class Warehouse:
     # ------------------------------------------------------------------ io
 
     def _load_manifest(self) -> dict:
-        if os.path.exists(self._manifest_path):
-            with open(self._manifest_path) as f:
-                return json.load(f)
-        return {"last_wave": -1, "waves": {}, "n_buckets": self.n_buckets}
+        if not os.path.exists(self._manifest_path):
+            return {"format": FORMAT, "last_wave": -1, "waves": {}}
+        with open(self._manifest_path) as f:
+            manifest = json.load(f)
+        fmt = manifest.get("format")
+        if fmt != FORMAT:
+            # an older layout's links_out lacks the slot the crawl-order view reads
+            layout = (
+                "the 7-table layout (seen, rejected, flagged and crawl_order stored "
+                "per wave; no manifest 'format')"
+                if fmt is None
+                else f"manifest format {fmt!r}"
+            )
+            raise ValueError(
+                f"warehouse {self.path} was written in {layout}; this engine reads "
+                f"format {FORMAT} (links_out, frontier, extracted_text) — start the "
+                "crawl in a fresh warehouse directory"
+            )
+        return manifest
 
     def _commit_manifest(self) -> None:
         tmp = self._manifest_path + ".tmp"
@@ -61,34 +87,33 @@ class Warehouse:
     def table_wave_path(self, table: str, wave: int) -> str:
         return os.path.join(self.path, table, f"wave={wave}")
 
-    def write_wave_table(self, table: str, wave: int, df: DataFrame, bucket: bool = False) -> str:
+    def write_wave_table(self, table: str, wave: int, df: DataFrame) -> str:
         path = self.table_wave_path(table, wave)
-        if bucket and "url_hash" in df.columns:
-            # repartition by the bucket EXPRESSION without pinning the
-            # partition count: AQE sizes the shuffle to the data (guide
-            # §2.2/§6 — scale-adaptive, not a constant), so a 30-URL wave
-            # writes 1-2 files instead of n_buckets near-empty ones while a
-            # 10^9-URL wave still spreads across the full shuffle width.
-            # Rows with equal pmod(url_hash, n_buckets) stay co-located in
-            # one file, which is the at-rest property the bucketed readers
-            # (and the sharded-probe sidecar builder) rely on.
-            df = df.repartition(F.pmod(F.col("url_hash"), F.lit(self.n_buckets)))
         df.write.mode("overwrite").parquet(path)
         return path
 
     def read_waves(self, table: str, up_to_wave: int | None = None) -> DataFrame | None:
-        """Union of all committed wave snapshots of a table (manifest-driven)."""
+        """Union of all committed wave snapshots of a table (manifest-driven).
+        A ``VIEWS`` name reads the waves' ``links_out``, filtered and
+        projected; the residual flush is not a wave's routing output (its
+        uncrawled rows were never rejected), so no view reads it."""
+        view = VIEWS.get(table)
+        source = "links_out" if view else table
         last = self.manifest["last_wave"] if up_to_wave is None else up_to_wave
         paths = [
-            p
+            info["tables"][source]
             for w_str, info in self.manifest["waves"].items()
             if int(w_str) <= last
-            for t, p in info.get("tables", {}).items()
-            if t == table
+            and source in info.get("tables", {})
+            and not (view and "residual_flush" in info["counts"])
         ]
         if not paths:
             return None
-        return self.spark.read.option("basePath", os.path.join(self.path, table)).parquet(*paths)
+        df = self.spark.read.option("basePath", os.path.join(self.path, source)).parquet(*paths)
+        if view:
+            cond, cols = view
+            df = df.filter(cond).select(*cols)
+        return df
 
     def read_frontier(self, wave: int) -> DataFrame | None:
         path = self.table_wave_path("frontier", wave)
@@ -163,10 +188,6 @@ class Warehouse:
         info = self.manifest["waves"].get(str(last))
         d = info.get("sharded_dir") if info else None
         return d if d and os.path.isdir(d) else None
-
-    def load_bloom(self, wave: int | None = None) -> PartitionedBloom | None:
-        """Legacy alias: the sidecar loader, whatever kind it holds."""
-        return self.load_seen_filter(wave)
 
     def destroy(self) -> None:
         shutil.rmtree(self.path, ignore_errors=True)

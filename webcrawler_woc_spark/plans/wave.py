@@ -8,8 +8,10 @@ Maps the reference's wave body (src/crawler.rs:53-99 / 135-192) to:
     children (+ sitemap children on wave 0 of no-depth) --wave dedup-->
       --bloom prefilter + anti-join seen--> next frontier candidates
       --anti-join rejected--> newly rejected (emitted once)
-    writes: links_out (self rows + rejected rows), flagged, seen += scheduled,
-            frontier_{w+1} = candidates ∪ deferred, crawl_order, lineage
+    writes: links_out (self rows with their slot + rejected rows),
+            frontier_{w+1} = candidates ∪ deferred, extracted_text; lineage
+            and counts go to the manifest. seen, rejected, flagged and crawl
+            order are views of links_out (plans/state.py VIEWS).
 
 Determinism: all order comes from explicit sorts (politeness slots); the
 wave barrier is the parquet write action; within-wave seen semantics are the
@@ -18,6 +20,7 @@ race-free batch interpretation (see operators/routing.py docstring).
 
 from __future__ import annotations
 
+import copy
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -27,7 +30,7 @@ from ..config import CrawlConfig
 from ..operators.bloom import PartitionedBloom, bloom_prefiltered_anti_join
 from ..operators.extract import extract_child_links, mime_ok
 from ..operators.fetch import fetch_join, with_host, with_url_hash
-from ..operators.politeness import crawl_order, schedule_wave
+from ..operators.politeness import schedule_wave
 from ..operators.routing import dedup_wave, route_children
 from ..functions.udfs import link_type_col, make_contains_words_udf
 from .state import Warehouse
@@ -89,7 +92,7 @@ def run_wave(
 
     # -- politeness schedule (defines deterministic crawl order) ------------
     scheduled, deferred = schedule_wave(frontier, robots, cfg.host_budget)
-    scheduled = scheduled.cache()  # reused: fetch, seen-update, anti-join
+    scheduled = scheduled.cache()  # reused: fetch, seen-filter build, anti-join
 
     # -- fetch simulation ---------------------------------------------------
     # ``matched`` is cached so the corpus is scanned EXACTLY ONCE per wave:
@@ -140,7 +143,8 @@ def run_wave(
     # page bytes — cache the slim projection, not the html payload.
     fetched = fetched.drop("html", "page_text").cache()
 
-    # -- self rows: every scheduled URL becomes a crawled Link --------------
+    # -- self rows: every scheduled URL becomes a crawled Link, carrying its
+    # politeness slot (the crawl-order view reads it back) -----------------
     self_links = fetched.select(
         F.col("url"),
         F.col("url_hash"),
@@ -152,6 +156,7 @@ def run_wave(
         F.col("ipv6"),
         link_type_col(F.col("url")).alias("link_type"),
         F.col("contains_words"),
+        F.col("slot"),
         F.col("fetched"),
     )
 
@@ -203,9 +208,8 @@ def run_wave(
     _timed("cache_scheduled", scheduled.count)  # politeness window only
     extracted = _timed("cache_children", children.count)  # corpus scan + matched cache
 
-    # deduped feeds BOTH routing branches (next-frontier and rejected), and
-    # newly_rejected feeds BOTH the rejected write and links_out — cached, or
-    # the dedup shuffle + anti-join subplans re-run once per consuming write
+    # deduped feeds BOTH routing branches (next-frontier and rejected) —
+    # cached, or the dedup shuffle re-runs once per consuming write
     deduped = with_host(with_url_hash(dedup_wave(children))).cache()
 
     # -- routing ------------------------------------------------------------
@@ -274,18 +278,14 @@ def run_wave(
         sched_keys = F.broadcast(sched_keys)
     sc_frontier = sc_frontier.join(sched_keys, ["url_hash", "url"], "left_anti")
 
-    # two independent fill chains over already-materialized caches — overlap
-    # them (fetched reads matched; rejected reads deduped, so that pair chains)
-    newly_rejected = newly_rejected.cache()
+    # two independent fills over already-materialized caches — overlap them
+    # (fetched reads matched; deduped reads children). newly_rejected is
+    # not cached: links_out is its only consumer.
     from concurrent.futures import ThreadPoolExecutor as _TPE
-
-    def _fill_routing():
-        _timed("cache_deduped", deduped.count)
-        _timed("cache_rejected", newly_rejected.count)
 
     with _TPE(max_workers=2) as _pool:
         f1 = _pool.submit(_timed, "cache_fetched", fetched.count)
-        f2 = _pool.submit(_fill_routing)
+        f2 = _pool.submit(_timed, "cache_deduped", deduped.count)
         f1.result(), f2.result()
 
     # a deferred url rediscovered as a child merges deterministically to the
@@ -323,6 +323,7 @@ def run_wave(
         F.lit(None).cast("string").alias("ipv6"),
         F.col("link_type"),
         F.lit(False).alias("contains_words"),
+        F.lit(None).cast("int").alias("slot"),
         F.lit(True).alias("fetched"),  # unused for rejected; kept for schema
     )
     links_out = self_links.unionByName(rejected_links)
@@ -349,18 +350,10 @@ def run_wave(
 
     from ..operators.extract import extracted_text
 
-    new_seen = scheduled.select("url_hash", "url")
-    new_rej = newly_rejected.select("url_hash", "url")
-    flagged = fetched.filter(F.col("contains_words")).select("url")
-    order_df = crawl_order(scheduled, wave)
     writes = {
-        "links_out": ("w_links_out", wave, links_out.drop("fetched"), False),
-        "seen": ("w_seen", wave, new_seen, True),
-        "rejected": ("w_rejected", wave, new_rej, True),
-        "frontier": ("w_frontier", wave + 1, next_frontier, True),
-        "flagged": ("w_flagged", wave, flagged, False),
-        "extracted_text": ("w_text", wave, extracted_text(gated), False),
-        "crawl_order": ("w_order", wave, order_df, False),
+        "links_out": ("w_links_out", wave, links_out.drop("fetched")),
+        "frontier": ("w_frontier", wave + 1, next_frontier),
+        "extracted_text": ("w_text", wave, extracted_text(gated)),
     }
     # mid-wave resume: a wave that crashed BETWEEN table writes left some
     # tables complete (parquet _SUCCESS marker) but no manifest entry. Wave
@@ -396,29 +389,32 @@ def run_wave(
 
     skipped: set[str] = set()
 
-    def _write_or_skip(table: str, wv: int, df_, bucket: bool) -> str:
+    def _write_or_skip(table: str, wv: int, df_) -> str:
         path = wh.table_wave_path(table, wv)
         if not stale_attempt and _os.path.exists(_os.path.join(path, "_SUCCESS")):
             skipped.add(table)
             return path
-        return wh.write_wave_table(table, wv, df_, bucket=bucket)
+        return wh.write_wave_table(table, wv, df_)
 
-    # seen-filter update job, defined here so it can OVERLAP the write pool
-    # below (it reads only the already-filled scheduled cache; the merged
-    # sidecar is persisted by commit_wave AFTER the pool joins). Both kinds
+    # seen-filter build job, defined here so it can OVERLAP the write pool
+    # below (it reads only the already-filled scheduled cache). Both kinds
     # build distributed (one small table/bitmap per bucket reaches the
-    # driver, never the URLs) and merge into the running filter.
+    # driver, never the URLs); the rows are merged into a copy of the
+    # running filter after every write has succeeded, and the copy replaces
+    # the running filter's state only once commit_wave (which saves it) has
+    # returned, so a failed wave leaves the filter as the last commit left it.
+    new_seen = scheduled.select("url_hash", "url")
     kind = cfg.seen_filter_kind()
-    _filter_update = None
+    _filter_build = _filter_merge = None
     if kind == "bloom":
         if bloom is None:
             bloom = PartitionedBloom(cfg.n_buckets)
         from ..operators.bloom import build_bucket_bitmaps
 
-        def _filter_update(b=bloom):
-            rows = build_bucket_bitmaps(new_seen, b.n_buckets, b.m_bits, b.k)
-            b.merge_spark_bitmaps(rows)
+        def _filter_build(b=bloom):
+            return build_bucket_bitmaps(new_seen, b.n_buckets, b.m_bits, b.k)
 
+        _filter_merge = PartitionedBloom.merge_spark_bitmaps
     elif kind == "cuckoo":
         if bloom is None:
             from ..operators.cuckoo import PartitionedCuckoo
@@ -426,9 +422,10 @@ def run_wave(
             bloom = PartitionedCuckoo(cfg.n_buckets)
         from ..operators.cuckoo import build_bucket_tables, merge_spark_tables
 
-        def _filter_update(b=bloom):
-            rows = build_bucket_tables(new_seen, b.n_buckets, b.m)
-            merge_spark_tables(b, rows)
+        def _filter_build(b=bloom):
+            return build_bucket_tables(new_seen, b.n_buckets, b.m)
+
+        _filter_merge = merge_spark_tables
 
     def _lineage_job():
         return [
@@ -450,23 +447,22 @@ def run_wave(
     with ThreadPoolExecutor(max_workers=len(writes) + 3) as pool:
         futs = {
             table: pool.submit(
-                _timed, tkey, lambda t=table, w=wv, d=df_, b=bucket: _write_or_skip(t, w, d, b)
+                _timed, tkey, lambda t=table, w=wv, d=df_: _write_or_skip(t, w, d)
             )
-            for table, (tkey, wv, df_, bucket) in writes.items()
+            for table, (tkey, wv, df_) in writes.items()
         }
         f_frontier_in = pool.submit(_timed, "c_frontier_in", frontier.count)
         f_lineage = pool.submit(_timed, "c_lineage", _lineage_job)
         f_filter = (
-            pool.submit(_timed, "bloom_update", _filter_update)
-            if _filter_update is not None
+            pool.submit(_timed, "bloom_update", _filter_build)
+            if _filter_build is not None
             else None
         )
         for table, fut in futs.items():
             table_paths[table] = fut.result()
         frontier_in = f_frontier_in.result()
         host_lineage = f_lineage.result()
-        if f_filter is not None:
-            f_filter.result()
+        filter_rows = f_filter.result() if f_filter is not None else None
 
     # -- metrics (observed on the writes: exact, zero extra jobs) -----------
     if "links_out" in skipped:
@@ -496,10 +492,16 @@ def run_wave(
         "new_frontier": new_frontier_n,
         "new_rejected": new_rejected_n,
     }
+    new_filter = bloom
+    if _filter_merge is not None:
+        new_filter = copy.deepcopy(bloom)
+        _filter_merge(new_filter, filter_rows)
     wh.commit_wave(
-        wave, table_paths, counts, host_lineage, time.time() - t0, bloom, timings,
+        wave, table_paths, counts, host_lineage, time.time() - t0, new_filter, timings,
         sharded=cfg.seen_probe_mode() == "sharded",
     )
+    if new_filter is not bloom:
+        vars(bloom).update(vars(new_filter))  # the wave is committed: so is its filter
     try:
         _os.remove(staging_path)  # the wave is committed; the sidecar is spent
     except OSError:
@@ -516,7 +518,6 @@ def run_wave(
     fetched.unpersist()
     children.unpersist()
     deduped.unpersist()
-    newly_rejected.unpersist()
     return counts
 
 

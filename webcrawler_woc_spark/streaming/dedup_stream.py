@@ -1,15 +1,16 @@
 """Stateful streaming URL dedup — the seen-set as a Structured Streaming
 custom stateful operator (``applyInPandasWithState``).
 
-The batch engine keeps the seen-set in bucketed parquet + Bloom sidecars
-(operators/bloom.py); in a continuous-ingest deployment the same semantics
-live in the state store: group by canonical URL, keep a one-bit 'seen' state
-per group, emit each URL exactly once — the streaming twin of the reference's
-``crawled`` HashSet membership (src/crawler.rs:82-99).
+The batch engine keeps the seen-set as a view of its links_out parquet +
+Bloom sidecars (operators/bloom.py); in a continuous-ingest deployment the
+same semantics live in the state store: group by canonical URL, keep a
+one-bit 'seen' state per group, emit each URL exactly once — the streaming
+twin of the reference's ``crawled`` HashSet membership
+(src/crawler.rs:82-99).
 
 Scale notes: one state-store entry per distinct URL, keyed by
 (url_hash, url) — state lookups are hash-partitioned by the same 64-bit key
-the batch engine buckets on, and the per-group state is a single boolean, so
+the batch engine's seen filter buckets on, and the per-group state is a single boolean, so
 10^10 URLs cost ~10^10 * O(few bytes) across the cluster's RocksDB state
 stores with no skew beyond the URL distribution itself.
 """
