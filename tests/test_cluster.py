@@ -84,3 +84,29 @@ def test_zero_norm_vector_is_never_a_duplicate_and_never_crashes(spark):
     ).collect()}
     assert out[1]       # undefined cosine -> not anyone's duplicate
     assert not out[2]   # the real duplicate is still caught
+
+
+def test_null_and_short_vectors_are_kept_and_never_keepers(spark):
+    """kmeans_int assigns a NULL or a short (ragged) embedding a cluster
+    with a NULL dist; the within-cluster kernel must keep such rows, never
+    mark them a duplicate nor let them make another row one."""
+    from webcrawler_woc_spark.operators.cluster import kmeans_int, semantic_dedup
+
+    rows = [
+        (0, None),          # NULL vector, lowest id: would be every row's keeper
+        (1, [1.0]),         # short vector
+        (2, [1.0, 0.0]),
+        (3, [0.0, 1.0]),
+        (4, [1.0, 0.0]),    # true duplicate of 2
+        (5, [0.0, 1.0]),    # true duplicate of 3
+    ]
+    df = _emb(spark, rows)
+    assigned = {r.vec_id: r.dist for r in kmeans_int(df, k=2, iterations=1).collect()}
+    assert sorted(assigned) == list(range(6))  # kmeans keeps both rows...
+    assert assigned[0] is None and assigned[1] is None  # ...with no distance
+    out = {r.vec_id: r.keep for r in semantic_dedup(
+        df, k=2, iterations=1, threshold_ppm=990_000
+    ).collect()}
+    assert out[0] and out[1]      # kept
+    assert out[2] and out[3]      # not duplicates of the NULL/short rows
+    assert not out[4] and not out[5]  # the real duplicates are still caught

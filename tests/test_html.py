@@ -1,5 +1,7 @@
 """Unit tests for the pinned HTML kernels (SURVEY.md §5.2-1)."""
 
+import pytest
+
 from webcrawler_woc_spark.functions.html import (
     contains_words,
     extract_hrefs,
@@ -27,6 +29,16 @@ class TestFastStrictParity:
             '<a href="">e</a>',
             '<a\nhref="nl">n</a>',
             '<a class="c" href="second-attr">x</a>',
+            # where a regex over "<a ...>" alone would differ from the walk
+            '<a-b href="x">n</a-b><a href="y">y</a>',
+            '<a data-href="x" href="y">y</a>',
+            '<a href href="y">y</a>',
+            '<a href="x" HREF="y">x</a>',
+            '<div title="<a href=z>"><a href="y">y</a></div>',
+            '<script><a href="s"></script><a href="y">y</a>',
+            '<!-- <a href="c"> --><a href="y">y</a>',
+            '<a title="x>y" href="y">y</a>',
+            '<script><a href="s">',
         ]
         for html in cases:
             assert extract_hrefs(html) == extract_hrefs_strict(html), html
@@ -97,6 +109,85 @@ class TestExtractText:
     def test_deterministic(self):
         html = "<title>X</title><p>one</p><div>two</div>"
         assert extract_text(html) == extract_text(html) == "X\none\ntwo"
+
+
+# (html, extract_text's result, whether the one-scan path handles it): the
+# HTMLParser (3.11) behaviours the scan reproduces, then markup it leaves to
+# the walk
+TEXT_CASES = [
+    # entities are decoded per data segment between tags, not over the text
+    ("x&am<b>p;y", "x&amp;y", True),
+    ("a &amp; b &lt;c&gt; &eacute;&#233;&#xe9;", "a & b <c> ééé", True),
+    # a self-closing tag is a start then an end tag: <br/> emits two
+    # newlines, and <script/> leaves the skip depth unchanged
+    ("a<br/>b<br />c", "a\nb\nc", True),
+    ("<script/>a<p>b", "a\nb", True),
+    ("<noscript/>a", "a", True),
+    # block tags inside noscript/template still emit newlines
+    ("a<noscript>x<p>y</p></noscript>b", "a\nb", True),
+    ("a<template><div>t</div></template>b", "a\nb", True),
+    # script/style bodies are raw text up to their closing tag
+    ('<script>if (a<b) x="</p>";</script>c', "c", True),
+    ("<style>p>a{}</style>d<SCRIPT>x</SCRIPT >e", "de", True),
+    ("a<script>x<p>y", "a", True),  # unclosed: the rest is dropped
+    ("<script>a</ſcript>b</script>c", "c", True),  # closes on ASCII names only
+    # uppercase tags, \r\n, multibyte text, ">" inside a quoted value
+    ("<P>A</P><DIV>B</DIV><BR>C", "A\nB\nC", True),
+    ("<p>a\r\nb</p>\r\n<p>c</p>", "a\nb\nc", True),
+    ("<p>héllo wörld — 你好</p>", "héllo wörld — 你好", True),
+    ("<a title=\"x>y\" href='p>q'>t</a>", "t", True),
+    ("<p\nclass = c\tid=x >a</p >", "a", True),
+    # left to the walk: <! and <? markup, unconsumed "<"
+    ("<!-- <p>c</p> -->a", "a", False),
+    ("<!DOCTYPE html><p>a</p>", "a", False),
+    ("<?xml version='1.0'?><p>a</p>", "a", False),
+    ("<p>a</p><p", "a\n<p", False),
+    ("a < b", "a < b", False),
+    ("<ſcript>x</p>y", "<ſcript>x\ny", False),
+    ("<p>a</ p>", "a", False),
+    # a quote inside an unquoted attribute value
+    ('<a b=c"d>x</a>"<p>y', 'x"\ny', False),
+]
+
+
+class TestTextKernelCases:
+    @pytest.mark.parametrize("html,text,fast", TEXT_CASES)
+    def test_matches_walk(self, html, text, fast):
+        from webcrawler_woc_spark.functions.html import (
+            _joined_text,
+            _text_chunks_fast,
+            _text_chunks_strict,
+        )
+
+        assert extract_text(html) == _joined_text(_text_chunks_strict(html)) == text
+        chunks = _text_chunks_fast(html)
+        assert (chunks is not None) == fast
+        if fast:
+            assert "".join(chunks) == "".join(_text_chunks_strict(html))
+
+    def test_self_closing_block_emits_two_newlines(self):
+        from webcrawler_woc_spark.functions.html import _text_chunks_fast, _text_chunks_strict
+
+        assert "".join(_text_chunks_strict("a<br/>b")) == "a\n\nb"
+        assert "".join(_text_chunks_fast("a<br/>b")) == "a\n\nb"
+
+    def test_corpus_pages_take_the_fast_path(self, sf_dir):
+        """A scan that silently always fell back would keep every digest
+        green and lose the whole speed-up: every generated corpus page must
+        be handled by the scan itself."""
+        import pyarrow.parquet as pq
+
+        from webcrawler_woc_spark.functions.html import _hrefs_fast, _text_chunks_fast
+        from webcrawler_woc_spark.sources.corpus import py_doc_page
+
+        docs = pq.read_table(f"{sf_dir}/documents.parquet").to_pylist()
+        n_docs = len(docs)
+        for d in docs[:: max(1, n_docs // 200)]:
+            page = py_doc_page(d["doc_id"], d["text"], d["lang"], n_docs)
+            html = page["html"].decode("utf-8")
+            assert _text_chunks_fast(html) is not None, page["url"]
+            assert _hrefs_fast(html) is not None, page["url"]
+            assert extract_text(html) == page["text"]
 
 
 class TestContainsWords:

@@ -148,20 +148,34 @@ class _WriteFailed(RuntimeError):
     pass
 
 
+# Where wave 1 of a resumed crawl fails. The ids of the table-write cases
+# start with "table"; the frontier write keeps the bare id.
+FAILURES = [
+    pytest.param(("table", "frontier"), id="table"),
+    pytest.param(("table", "links_out"), id="table-links_out"),
+    pytest.param(("table", "extracted_text"), id="table-extracted_text"),
+    pytest.param(("sidecar", None), id="sidecar"),
+    pytest.param(("build", None), id="build"),
+]
+
+
 class TestFailedWaveWrite:
-    @pytest.mark.parametrize("fail", ["table", "sidecar"])
+    @pytest.mark.parametrize("fail", FAILURES)
     @pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
     def test_failed_write_leaves_filter_and_retry_matches(
         self, spark, pages, monkeypatch, kind, fail
     ):
-        """A write that raises in wave 1 of a resumed crawl (the frontier
-        table, or the seen-filter sidecar commit_wave saves) leaves the
-        in-memory seen filter untouched; retrying the wave in the same
-        process, with the same filter object, commits the manifest and
-        sidecar of an uninterrupted crawl."""
+        """A failure in wave 1 of a resumed crawl (one of the three table
+        writes, the seen-filter sidecar commit_wave saves, or the seen-filter
+        build) leaves the in-memory seen filter untouched; retrying the wave
+        in the same process, with the same filter object, commits the
+        manifest and sidecar of an uninterrupted crawl."""
+        from webcrawler_woc_spark.operators import bloom as bloom_op
+        from webcrawler_woc_spark.operators import cuckoo as cuckoo_op
         from webcrawler_woc_spark.plans.crawl import seed_frontier
         from webcrawler_woc_spark.plans.wave import run_wave
 
+        where, failing_table = fail
         cfg = CrawlConfig(whitelist=WL, depth=2, n_buckets=8, seen_filter=kind)
         with tempfile.TemporaryDirectory() as t1, tempfile.TemporaryDirectory() as t2:
             wh_ref = Warehouse(spark, t1)
@@ -174,20 +188,26 @@ class TestFailedWaveWrite:
             wh = Warehouse(spark, t2)  # the resumed crawl
             filt = wh.load_seen_filter()
             before = _filter_arrays(filt, os.path.join(t2, "before.npz"))
-            if fail == "table":
+            if where == "table":
                 write = Warehouse.write_wave_table
 
                 def failing(self, table, wave, df):
-                    if table == "frontier":
+                    if table == failing_table:
                         raise _WriteFailed(table)
                     return write(self, table, wave, df)
 
                 monkeypatch.setattr(Warehouse, "write_wave_table", failing)
-            else:
+            elif where == "sidecar":
                 def failing_save(self, path):
                     raise _WriteFailed(path)
 
                 monkeypatch.setattr(type(filt), "save", failing_save)
+            else:
+                def failing_build(*args):
+                    raise _WriteFailed("seen-filter build")
+
+                monkeypatch.setattr(bloom_op, "build_bucket_bitmaps", failing_build)
+                monkeypatch.setattr(cuckoo_op, "build_bucket_tables", failing_build)
             with pytest.raises(_WriteFailed):
                 run_wave(spark, wh, pages, 1, cfg, filt)
             monkeypatch.undo()

@@ -77,9 +77,10 @@ def semantic_dedup(
     (the sequential fold the ANN operators and the SQL oracles share) —
     value-exact vs the previous 25M-row pair join, at vectorized-numpy
     speed instead of one interpreted Catalyst fold per pair (guide §4.2).
-    Zero-norm vectors (upstream garbage a clusterer must tolerate) are
-    guarded: their cosine is undefined, so they never register as
-    anyone's duplicate."""
+    Zero-norm and NULL vectors (upstream garbage a clusterer must
+    tolerate) are guarded: their cosine is undefined, so they are never
+    anyone's duplicate or keeper; vectors of different lengths (ragged
+    rows) are never compared with each other."""
     import numpy as np
     import pandas as pd
 
@@ -94,9 +95,22 @@ def semantic_dedup(
 
     thr = float(threshold_ppm)
 
+    no_dups = pd.DataFrame({"vec_id": np.array([], dtype=np.int64)})
+
     def _cluster_dups(pdf: pd.DataFrame) -> pd.DataFrame:
+        # a NULL vector has no similarity to anything, and two vectors of
+        # different lengths none to each other (the NULL propagation of the
+        # old pair join): such rows are never a duplicate and never a keeper,
+        # so each vector length is compared on its own
+        pdf = pdf[pdf["dv"].notna()]
+        lengths = pdf["dv"].map(len)
+        return pd.concat(
+            [no_dups] + [_same_length_dups(g) for _, g in pdf.groupby(lengths)]
+        )
+
+    def _same_length_dups(pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) < 2:
-            return pd.DataFrame({"vec_id": np.array([], dtype=np.int64)})
+            return no_dups
         pdf = pdf.sort_values("vec_id")
         ids = pdf["vec_id"].to_numpy()
         V = np.stack(pdf["dv"].to_numpy()).astype(np.float64, copy=False)
