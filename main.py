@@ -143,7 +143,10 @@ def main(argv: list[str] | None = None) -> int:
              "merged filter to every executor (default; cheap at small "
              "scale); sharded keeps one sidecar file per hash bucket and "
              "each probe task loads only its own bucket (the 10^10-URL "
-             "form, where the merged filter is too big to broadcast)",
+             "form, where the merged filter is too big to broadcast). "
+             "Neither mode probes while the seen set has at most "
+             "config.BROADCAST_MAX_ROWS urls: the exact anti-join alone "
+             "is cheaper there",
     )
     ap.add_argument(
         "--sitemap-xml", action="store_true",

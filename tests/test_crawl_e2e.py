@@ -9,6 +9,7 @@ Asserts (SURVEY.md §5.2-2 / north rule):
 
 from __future__ import annotations
 
+import os
 import tempfile
 
 import pytest
@@ -378,3 +379,108 @@ class TestBroadcastFallbackEquivalence:
         monkeypatch.setattr(cfgmod, "BROADCAST_MAX_ROWS", 0)
         fallback = run(tmp_path / "wh_shuffle")
         assert fallback == base
+
+
+class TestSeenProbeGate:
+    """One size gate decides whether a wave probes the seen filter, for every
+    filter kind and probe mode: while the cumulative seen set is at most
+    BROADCAST_MAX_ROWS the wave runs the exact anti-join alone. Either way
+    the crawl equals a crawl with no filter at all, every wave still commits
+    its sidecar (and its sharded directory in sharded mode), and the
+    manifest records which path each wave took."""
+
+    COMBOS = [
+        pytest.param(kind, probe, id=f"{kind}-{probe}")
+        for kind in ("bloom", "cuckoo")
+        for probe in ("broadcast", "sharded")
+    ]
+
+    @staticmethod
+    def _crawl(spark, pages, tmp, seen_filter, seen_probe="broadcast"):
+        cfg = CrawlConfig(
+            whitelist=WHITELIST, words=WORDS, depth=3, n_buckets=8,
+            seen_filter=seen_filter, seen_probe=seen_probe,
+        )
+        wh = Warehouse(spark, tmp)
+        summary = crawl(spark, wh, pages, SEEDS, cfg)
+        seen = sorted(r["url"] for r in read_seen(wh).collect())
+        order = sorted(
+            (r["wave"], r["host"], r["slot"], r["url"]) for r in read_crawl_order(wh).collect()
+        )
+        waves = [wh.manifest["waves"][str(w)] for w in range(summary["waves"])]
+        return seen, order, waves
+
+    @pytest.fixture(scope="class")
+    def unfiltered(self, spark, pages):
+        with tempfile.TemporaryDirectory() as tmp:
+            return self._crawl(spark, pages, tmp, "none")
+
+    @pytest.fixture
+    def probe_calls(self, monkeypatch):
+        """Every sketch probe entry point, wrapped to record its calls."""
+        from webcrawler_woc_spark.operators import bloom, cuckoo, sharded_probe
+
+        calls = []
+        for mod, name in (
+            (sharded_probe, "sharded_prefiltered_anti_join"),
+            (cuckoo, "cuckoo_prefiltered_anti_join"),
+            (cuckoo, "make_might_contain_udf"),
+            (bloom, "make_might_contain_udf"),
+        ):
+            real = getattr(mod, name)
+
+            def spy(*a, _real=real, _name=f"{mod.__name__}.{name}", **kw):
+                calls.append(_name)
+                return _real(*a, **kw)
+
+            monkeypatch.setattr(mod, name, spy)
+        return calls
+
+    def test_unfiltered_crawl_is_exact(self, unfiltered):
+        _, _, waves = unfiltered
+        assert len(waves) == 3
+        assert [w["seen_probe"] for w in waves] == ["exact"] * 3
+        assert all(w["bloom"] is None for w in waves)
+
+    @pytest.mark.parametrize("kind,probe", COMBOS)
+    def test_below_gate_never_probes(
+        self, spark, pages, unfiltered, probe_calls, monkeypatch, kind, probe
+    ):
+        loads = []
+        real_load = Warehouse.load_seen_filter
+
+        def spy_load(self, *a, **kw):
+            loads.append(a)
+            return real_load(self, *a, **kw)
+
+        monkeypatch.setattr(Warehouse, "load_seen_filter", spy_load)
+        with tempfile.TemporaryDirectory() as tmp:
+            seen, order, waves = self._crawl(spark, pages, tmp, kind, probe)
+            for info in waves:
+                assert info["sidecar_kind"] == kind and os.path.exists(info["bloom"])
+                assert (info["sharded_dir"] is not None) == (probe == "sharded")
+        assert probe_calls == []
+        assert [w["seen_probe"] for w in waves] == ["exact"] * 3
+        assert (seen, order) == unfiltered[:2]
+        # crawl() loads the sidecar at start and after wave 0 of a fresh
+        # warehouse; later waves reuse the filter run_wave committed
+        assert len(loads) == 2
+        # host lineage (folded into the fetched-cache fill) matches the crawl
+        for w, info in enumerate(waves):
+            per_host = {}
+            for wv, host, _, _ in order:
+                if wv == w:
+                    per_host[host] = per_host.get(host, 0) + 1
+            assert {h["host"]: h["fetched"] for h in info["host_lineage"]} == per_host
+
+    @pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+    def test_above_gate_probes(self, spark, pages, unfiltered, probe_calls, monkeypatch, kind):
+        import webcrawler_woc_spark.config as cfgmod
+
+        monkeypatch.setattr(cfgmod, "BROADCAST_MAX_ROWS", 0)
+        with tempfile.TemporaryDirectory() as tmp:
+            seen, order, waves = self._crawl(spark, pages, tmp, kind)
+        # wave 0 has no sidecar and an empty seen set: exact on both sides
+        assert [w["seen_probe"] for w in waves] == ["exact", kind, kind]
+        assert probe_calls.count(f"webcrawler_woc_spark.operators.{kind}.make_might_contain_udf") == 2
+        assert (seen, order) == unfiltered[:2]

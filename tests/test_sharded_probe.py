@@ -159,15 +159,19 @@ def test_task_never_touches_foreign_bucket_e2e(spark, tmp_path, kind):
 
 
 @pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
-def test_crawl_loop_sharded_probe_parity(spark, sf_dir, kind):
+def test_crawl_loop_sharded_probe_parity(spark, sf_dir, kind, monkeypatch):
     """seen_probe='sharded' drives the REAL crawl loop: crawl order and wave
     counts must be identical to the broadcast-probe run (both probes answer
     bit-for-bit the same filter), and every committed wave must carry a
     sharded sidecar directory so the NEXT wave can probe without a
-    broadcast."""
+    broadcast. The seen set of this crawl is far below the probe gate, so
+    BROADCAST_MAX_ROWS is forced to 0: every wave >= 1 then probes, and the
+    sharded run must have taken the sharded probe on each of them."""
     import tempfile
 
+    import webcrawler_woc_spark.config as cfgmod
     from webcrawler_woc_spark.config import CrawlConfig
+    from webcrawler_woc_spark.operators import sharded_probe as sp
     from webcrawler_woc_spark.plans.crawl import crawl, read_crawl_order
     from webcrawler_woc_spark.plans.state import Warehouse
     from webcrawler_woc_spark.sources.corpus import pages_from_documents
@@ -176,6 +180,15 @@ def test_crawl_loop_sharded_probe_parity(spark, sf_dir, kind):
     pages.count()
     seeds = [("http://host0.example/page/0", 1.0)]
     wl = [f"host{i}.example" for i in range(5)]
+    monkeypatch.setattr(cfgmod, "BROADCAST_MAX_ROWS", 0)
+    probes = []
+    real_probe = sp.sharded_prefiltered_anti_join
+
+    def spy(*args, **kw):
+        probes.append(args[3])  # the sidecar dir: one per probing wave
+        return real_probe(*args, **kw)
+
+    monkeypatch.setattr(sp, "sharded_prefiltered_anti_join", spy)
 
     def run(seen_probe, tmp):
         cfg = CrawlConfig(
@@ -192,6 +205,7 @@ def test_crawl_loop_sharded_probe_parity(spark, sf_dir, kind):
 
     with tempfile.TemporaryDirectory() as t1, tempfile.TemporaryDirectory() as t2:
         _, s_bc, order_bc = run("broadcast", t1)
+        assert probes == []
         wh, s_sh, order_sh = run("sharded", t2)
         assert order_sh == order_bc
         assert s_sh["waves"] == s_bc["waves"]
@@ -199,6 +213,13 @@ def test_crawl_loop_sharded_probe_parity(spark, sf_dir, kind):
             d = wh.manifest["waves"][str(w)]["sharded_dir"]
             assert d is not None and os.path.isdir(d)
             assert read_meta(d)["kind"] == kind
+        # wave w >= 1 probes the sidecar wave w-1 committed (the depth
+        # flush after the last wave runs no routing)
+        n = s_sh["waves"]
+        assert n >= 2
+        waves = [wh.manifest["waves"][str(w)] for w in range(n)]
+        assert probes == [info["sharded_dir"] for info in waves[:-1]]
+        assert [info["seen_probe"] for info in waves] == ["exact"] + ["sharded"] * (n - 1)
     pages.unpersist()
 
 

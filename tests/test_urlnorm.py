@@ -4,6 +4,8 @@ Golden expectations are hand-derived from the documented behavior of the
 WHATWG URL Standard (which the Rust `url` crate implements) — SURVEY.md §1.1.
 """
 
+import pytest
+
 from webcrawler_woc_spark.functions.urlnorm import (
     host_of,
     join_url,
@@ -13,6 +15,56 @@ from webcrawler_woc_spark.functions.urlnorm import (
 )
 
 BASE = "http://host0.example/page/1"
+
+# Hand-written rows from the WHATWG URL Standard (https://url.spec.whatwg.org/)
+# as the Rust url crate parses them: (input, canonical form or None).
+WHATWG_CASES = [
+    # the special-query percent-encode set adds "'" to the query set; a
+    # non-special query and every fragment keep it
+    ("http://h.example/?q='x'", "http://h.example/?q=%27x%27"),
+    ("https://h.example/p?a='&b=`", "https://h.example/p?a=%27&b=`"),
+    ("mailto:a@h.example?subject='x'", "mailto:a@h.example?subject='x'"),
+    ("http://h.example/p#'x'", "http://h.example/p#'x'"),
+    ("http://h.example/'p'", "http://h.example/'p'"),
+    # a single- or double-dot segment may spell its dots as %2e, any case
+    ("http://h.example/a/%2e%2E/b", "http://h.example/b"),
+    ("http://h.example/a/.%2e/b", "http://h.example/b"),
+    ("http://h.example/a/%2E./b", "http://h.example/b"),
+    ("http://h.example/a/%2e/b", "http://h.example/a/b"),
+    ("http://h.example/a/b/%2e%2e", "http://h.example/a/"),
+    ("http://h.example/a/%2e", "http://h.example/a/"),
+    ("http://h.example/a/%2e%2e%2e", "http://h.example/a/%2e%2e%2e"),
+    ("http://h.example/a/%2ex", "http://h.example/a/%2ex"),
+    # the host is percent-decoded, then checked for forbidden code points
+    ("http://%68.example/", "http://h.example/"),
+    ("http://EX%41mple.com/p", "http://example.com/p"),
+    ("http://ex ample.com/", None),
+    ("http://a%2Fb.example/", None),
+    ("http://a%00b.example/", None),
+    ("http://a%25b.example/", None),
+    ("http://a^b.example/", None),
+]
+
+
+@pytest.mark.parametrize("raw,expected", WHATWG_CASES)
+def test_whatwg_case(raw, expected):
+    assert parse_absolute(raw) == expected
+    if expected is not None:
+        assert parse_absolute(expected) == expected
+
+
+@pytest.mark.parametrize(
+    "rel,expected",
+    [
+        ("%2e%2e/x", "http://host0.example/x"),
+        ("a/.%2E/x", "http://host0.example/page/x"),
+        ("%2e/x", "http://host0.example/page/x"),
+        ("?q='1'", "http://host0.example/page/1?q=%271%27"),
+        ("x?q='1'", "http://host0.example/page/x?q=%271%27"),
+    ],
+)
+def test_whatwg_join_case(rel, expected):
+    assert join_url(BASE, rel) == expected
 
 
 class TestParseAbsolute:
@@ -148,6 +200,10 @@ class TestFastPathParity:
             "http://h.e/p#",
             "http://h_x.e/p",
             "http://h.e/%41",
+            "http://h.e/p?q='x'",
+            "http://h.e/p#'x'",
+            "http://h.e/a/%2e%2e/b",
+            "http://%68.e/p",
             "foo:bar",
             "page2",
             "//proto.rel/x",

@@ -64,7 +64,10 @@ class CrawlConfig:
     # sidecar as one file per pmod(url_hash, n_buckets) bucket and each probe
     # task loads only its own bucket's file (operators/sharded_probe.py) —
     # the 10^10-URL form, where the merged filter (~20 GB at 16-bit cuckoo
-    # fingerprints) is too big to broadcast or hold per executor
+    # fingerprints) is too big to broadcast or hold per executor. Neither
+    # mode probes while the cumulative seen set is at most
+    # BROADCAST_MAX_ROWS: the wave then runs the exact anti-join alone (the
+    # sidecar is still written every wave)
     seen_probe: str = "broadcast"
     timeout_ms: int | None = None
     # enforce robots.txt Disallow rules: frontier URLs whose path starts with

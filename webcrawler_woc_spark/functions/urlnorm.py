@@ -18,12 +18,19 @@ WHATWG behaviors implemented (public spec, https://url.spec.whatwg.org):
 * strip leading/trailing C0-control/space; remove ASCII tab/newline anywhere;
 * lowercase scheme and host; strip default port (http 80, https 443, ws 80,
   wss 443, ftp 21);
-* remove path dot-segments for special schemes; empty path -> "/";
-* percent-encode the path / query / fragment percent-encode sets (UTF-8);
+* percent-decode the host, then reject forbidden domain code points
+  (shared with ``normalize_host``);
+* remove path dot-segments for special schemes, including ``%2e`` spellings
+  of the dots (``.%2e``, ``%2E%2e``); empty path -> "/";
+* percent-encode the path / query / fragment percent-encode sets (UTF-8),
+  with ``'`` encoded in a special scheme's query (the special-query set);
   existing ``%`` bytes are never re-encoded or decoded;
 * non-special schemes (mailto:, tel:, ...) keep an opaque path;
 * fragments are preserved (the reference does NOT strip fragments unless the
   raw href *starts* with ``#``).
+
+Known gap: numeric IPv4 hosts are not parsed (``http://0x7f.1/`` stays as
+written; WHATWG and the url crate give ``http://127.0.0.1/``).
 """
 
 from __future__ import annotations
@@ -51,6 +58,7 @@ _PATH_SAFE = set(
     "!$&'()*+,-./:;=@_~%[]|^"  # chars the url crate leaves verbatim in paths
 )
 _QUERY_SAFE = _PATH_SAFE | {"?", "{", "}", "`"}
+_SPECIAL_QUERY_SAFE = _QUERY_SAFE - {"'"}
 _FRAG_SAFE = _PATH_SAFE | {"?", "{", "}"}
 
 
@@ -60,6 +68,7 @@ _FRAG_SAFE = _PATH_SAFE | {"?", "{", "}"}
 _UNSAFE_RE = {
     id(_PATH_SAFE): re.compile(r"[^A-Za-z0-9!$&'()*+,\-./:;=@_~%\[\]|^]"),
     id(_QUERY_SAFE): re.compile(r"[^A-Za-z0-9!$&'()*+,\-./:;=@_~%\[\]|^?{}`]"),
+    id(_SPECIAL_QUERY_SAFE): re.compile(r"[^A-Za-z0-9!$&()*+,\-./:;=@_~%\[\]|^?{}`]"),
     id(_FRAG_SAFE): re.compile(r"[^A-Za-z0-9!$&'()*+,\-./:;=@_~%\[\]|^?{}]"),
 }
 
@@ -77,12 +86,24 @@ def _pct_encode(s: str, safe: set[str]) -> str:
     return "".join(out)
 
 
+def _dot_segment(seg: str) -> str:
+    """'.' or '..' for a WHATWG single- or double-dot path segment, whose
+    dots may be spelled '%2e' in either case ('%2E', '.%2e'); any other
+    segment unchanged."""
+    if "%" in seg and len(seg) <= 6:
+        dots = seg.lower().replace("%2e", ".")
+        if dots in (".", ".."):
+            return dots
+    return seg
+
+
 def _remove_dot_segments(path: str) -> str:
     """RFC 3986 §5.2.4 remove_dot_segments (url crate applies on parse)."""
-    if "/." not in path:  # fast path: no '.'/'..' segments anywhere
-        return path
+    if "/." not in path and "%2e" not in path and "%2E" not in path:
+        return path  # fast path: no dot segments anywhere
     output: list[str] = []
-    for seg in path.split("/"):
+    seg = ""
+    for seg in map(_dot_segment, path.split("/")):
         if seg == ".":
             continue
         if seg == "..":
@@ -90,8 +111,8 @@ def _remove_dot_segments(path: str) -> str:
                 output.pop()
             continue
         output.append(seg)
-    # trailing "." / ".." imply a trailing slash
-    if path.endswith(("/.", "/..")) and output and output[-1] != "":
+    # a trailing "." / ".." implies a trailing slash
+    if seg in (".", "..") and output and output[-1] != "":
         output.append("")
     return "/".join(output)
 
@@ -105,7 +126,7 @@ _FAST_SPECIAL_RE = re.compile(
     r"^(?:http|https|ws|wss|ftp)://"
     r"[a-z0-9](?:[a-z0-9.\-])*"
     r"/[A-Za-z0-9!$&'()*+,\-./:;=@_|\]\[^~]*"
-    r"(?:\?[A-Za-z0-9!$&'()*+,\-./:;=@_|\]\[^~?{}`]*)?"
+    r"(?:\?[A-Za-z0-9!$&()*+,\-./:;=@_|\]\[^~?{}`]*)?"
     r"(?:#[A-Za-z0-9!$&'()*+,\-./:;=@_|\]\[^~?{}]*)?$"
 )
 _FAST_OPAQUE_RE = re.compile(
@@ -190,16 +211,9 @@ def parse_absolute(raw: str) -> str | None:
             host, port = hostport.split(":", 1)
         else:
             host = hostport
-        host = host.lower()
-        if host == "":
+        host = _domain_to_ascii(host)
+        if not host:
             return None
-        try:  # IDN -> punycode like the url crate
-            host.encode("ascii")
-        except UnicodeEncodeError:
-            try:
-                host = host.encode("idna").decode("ascii")
-            except UnicodeError:
-                return None
     if port is not None:
         if port == "":
             port = None
@@ -227,7 +241,7 @@ def parse_absolute(raw: str) -> str | None:
         out += f":{port}"
     out += path
     if query is not None:
-        out += "?" + _pct_encode(query, _QUERY_SAFE)
+        out += "?" + _pct_encode(query, _SPECIAL_QUERY_SAFE)
     if frag is not None:
         out += "#" + _pct_encode(frag, _FRAG_SAFE)
     return out
@@ -281,6 +295,8 @@ def _fast_join(bscheme: str, bnetloc: str, bpath: str, rel: str) -> str | None:
             del base_parts[-1]
         segments = base_parts + rel.split("/")
         segments[1:-1] = [s for s in segments[1:-1] if s]
+    if "%" in rel:
+        segments = [_dot_segment(s) for s in segments]
     resolved: list[str] = []
     for seg in segments:
         if seg == "..":
@@ -384,6 +400,14 @@ def normalize_host(entry: str) -> str | None:
         return None
     if h.startswith("["):
         return h.lower() if h.endswith("]") and len(h) > 2 else None
+    return _domain_to_ascii(h)
+
+
+def _domain_to_ascii(h: str) -> str | None:
+    """A non-IPv6 host as ``url::Host::parse`` reads it, shared by
+    ``normalize_host`` and ``parse_absolute``: percent-decode, reject
+    forbidden domain code points, lowercase, IDN -> punycode; None when the
+    host is invalid."""
     # Host::parse percent-decodes BEFORE IDNA/validation ('ex%61mple.com' ->
     # example.com); a stray '%' surviving the decode is still a forbidden
     # host byte and rejects below, same as the url crate. C0 controls + DEL

@@ -29,6 +29,11 @@ Exactness is inherited: the sharded probe answers bit-for-bit what the
 driver-held filter answers (parity-tested for both kinds), so the
 prefiltered anti-join remains exact — no false negatives, maybe-seen rows
 confirmed by the scan-only anti-join.
+
+Like the broadcast probe, it runs only once the cumulative seen set exceeds
+``config.BROADCAST_MAX_ROWS`` (``plans/wave.py`` gates every probe mode);
+below that the wave runs the exact anti-join alone, and the sharded sidecar
+is still written every wave so a crawl that crosses the gate has it.
 """
 
 from __future__ import annotations

@@ -119,7 +119,8 @@ def crawl(
                 spark, wh, pages, wave, cfg, bloom, robots, None, content_type_expr,
                 disallow, input_fp=input_fp,
             )
-            bloom = _load_seen_filter(wh, cfg)
+            if bloom is None:
+                bloom = _load_seen_filter(wh, cfg)
             summary["waves"] += 1
             summary["scheduled_total"] += counts["scheduled"]
             last = wave
@@ -147,7 +148,8 @@ def crawl(
                 spark, wh, pages, wave, cfg, bloom, robots, extra, content_type_expr,
                 disallow, input_fp=input_fp,
             )
-            bloom = _load_seen_filter(wh, cfg)
+            if bloom is None:
+                bloom = _load_seen_filter(wh, cfg)
             summary["waves"] += 1
             summary["scheduled_total"] += counts["scheduled"]
             wave += 1

@@ -133,6 +133,7 @@ class Warehouse:
         bloom: PartitionedBloom | None,
         timings: dict | None = None,
         sharded: bool = False,
+        seen_probe: str | None = None,
     ) -> None:
         """Atomically record a completed wave (the Spark 'action barrier').
 
@@ -141,7 +142,9 @@ class Warehouse:
         legacy name; ``sidecar_kind`` records which filter wrote it).
         ``sharded=True`` additionally writes the file-per-bucket layout
         (operators/sharded_probe.py) so the next wave can probe without
-        broadcasting the merged filter."""
+        broadcasting the merged filter. ``seen_probe`` records how the wave
+        subtracted the seen set: ``exact`` (anti-join alone), ``bloom``,
+        ``cuckoo`` (broadcast probe) or ``sharded``."""
         bloom_path = None
         kind = None
         sharded_dir = None
@@ -162,6 +165,7 @@ class Warehouse:
             "bloom": bloom_path,
             "sidecar_kind": kind,
             "sharded_dir": sharded_dir,
+            "seen_probe": seen_probe,
             "timings": timings or {},
             "committed_at": time.time(),
         }

@@ -31,7 +31,7 @@ from ..operators.bloom import PartitionedBloom, bloom_prefiltered_anti_join
 from ..operators.extract import extract_child_links, mime_ok
 from ..operators.fetch import fetch_join, with_host, with_url_hash
 from ..operators.politeness import schedule_wave
-from ..operators.routing import dedup_wave, route_children
+from ..operators.routing import anti_join_scan, dedup_wave, route_children
 from ..functions.udfs import link_type_col, make_contains_words_udf
 from .state import Warehouse
 
@@ -229,49 +229,53 @@ def run_wave(
         cfg.blacklist,
         children_rows=extracted,
     )
-    # seen anti-join with the sketch fast path (the sidecar covers waves <
-    # wave; bloom and cuckoo share the no-false-negative prefilter contract);
-    # then subtract THIS wave's scheduled urls (batch seen semantics).
-    # seen_probe="sharded" swaps the whole-filter broadcast for the
-    # file-per-bucket probe (each task loads only its own bucket — the
-    # 10^10-URL form); falls back to broadcast when no sharded sidecar is
-    # committed yet (wave 0, or a warehouse written in broadcast mode).
-    # scale-adaptive probe skip: the sketch prefilter (broadcast bitmaps +
-    # a pandas-UDF probe evaluated on BOTH union branches) pays for itself
+    # seen anti-join, then subtract THIS wave's scheduled urls (batch seen
+    # semantics). One size gate decides whether to probe the sketch, for
+    # every filter kind and probe mode: the prefilter (a broadcast pandas-UDF
+    # probe, or the sharded probe's shuffle + applyInPandas) pays for itself
     # only once the cumulative seen set dwarfs the wave's candidates. While
-    # the whole seen set is itself broadcast-small, the exact anti-join
-    # alone is strictly cheaper — and by the no-false-negative contract the
-    # result is identical with or without the probe. The manifest's exact
-    # per-wave scheduled counts give the cumulative size for free. The
+    # that seen set is itself broadcast-small (config.BROADCAST_MAX_ROWS),
+    # the exact anti-join alone is strictly cheaper, and by the
+    # no-false-negative contract the result is identical with or without the
+    # probe. The manifest's exact per-wave scheduled counts give the
+    # cumulative size for free. Above the gate the wave probes the committed
+    # sidecar (it covers waves < wave; bloom and cuckoo share the prefilter
+    # contract): seen_probe="sharded" loads one bucket file per task (the
+    # 10^10-URL form) and falls back to the broadcast probe when no sharded
+    # sidecar is committed (a warehouse written in broadcast mode). The
     # sidecar UPDATE below is unconditional either way (resume contract).
-    from ..config import small_enough_to_broadcast as _bcast_ok
+    from ..config import small_enough_to_broadcast
 
     _seen_rows = sum(
         int(info.get("counts", {}).get("scheduled", 0))
         for w, info in wh.manifest["waves"].items()
         if int(w) < wave
     )
-    probe_filter = bloom if not _bcast_ok(_seen_rows) else None
-    _sharded_dir = (
-        wh.sharded_dir() if cfg.seen_probe_mode() == "sharded" and bloom is not None else None
-    )
-    if _sharded_dir is not None:
+    _sharded_dir = wh.sharded_dir() if cfg.seen_probe_mode() == "sharded" else None
+    if bloom is None or small_enough_to_broadcast(_seen_rows):
+        seen_probe = "exact"
+        sc_frontier = anti_join_scan(
+            sc_frontier, seen_prev, ["url_hash", "url"], small_rows=extracted
+        )
+    elif _sharded_dir is not None:
         from ..operators.sharded_probe import sharded_prefiltered_anti_join
 
+        seen_probe = "sharded"
         sc_frontier = sharded_prefiltered_anti_join(
             spark, sc_frontier, seen_prev, _sharded_dir, candidates_rows=extracted
         )
-    elif probe_filter is not None and getattr(probe_filter, "kind", "bloom") == "cuckoo":
+    elif bloom.kind == "cuckoo":
         from ..operators.cuckoo import cuckoo_prefiltered_anti_join
 
+        seen_probe = "cuckoo"
         sc_frontier = cuckoo_prefiltered_anti_join(
-            spark, sc_frontier, seen_prev, probe_filter, candidates_rows=extracted
+            spark, sc_frontier, seen_prev, bloom, candidates_rows=extracted
         )
     else:
+        seen_probe = "bloom"
         sc_frontier = bloom_prefiltered_anti_join(
-            spark, sc_frontier, seen_prev, probe_filter, candidates_rows=extracted
+            spark, sc_frontier, seen_prev, bloom, candidates_rows=extracted
         )
-    from ..config import small_enough_to_broadcast
 
     sched_keys = scheduled.select("url_hash", "url")
     if small_enough_to_broadcast(frontier_rows):  # |scheduled| <= |frontier|
@@ -279,14 +283,27 @@ def run_wave(
     sc_frontier = sc_frontier.join(sched_keys, ["url_hash", "url"], "left_anti")
 
     # two independent fills over already-materialized caches — overlap them
-    # (fetched reads matched; deduped reads children). newly_rejected is
-    # not cached: links_out is its only consumer.
+    # (fetched reads matched; deduped reads children). The fetched fill IS
+    # the per-host lineage aggregate: one job both fills the cache and
+    # yields the manifest's lineage. newly_rejected is not cached: links_out
+    # is its only consumer.
     from concurrent.futures import ThreadPoolExecutor as _TPE
 
+    def _lineage_fill():
+        return [
+            {"host": r["host"], "fetched": r["cnt"]}
+            for r in fetched.groupBy("host")
+            .agg(F.count("*").alias("cnt"))
+            .orderBy(F.desc("cnt"), F.asc("host"))
+            .limit(100)  # lineage keeps the hottest hosts; full counts live in parquet
+            .collect()
+        ]
+
     with _TPE(max_workers=2) as _pool:
-        f1 = _pool.submit(_timed, "cache_fetched", fetched.count)
+        f1 = _pool.submit(_timed, "cache_fetched", _lineage_fill)
         f2 = _pool.submit(_timed, "cache_deduped", deduped.count)
-        f1.result(), f2.result()
+        host_lineage = f1.result()
+        f2.result()
 
     # a deferred url rediscovered as a child merges deterministically to the
     # max priority (url_hash/host are functions of url, so min() is exact).
@@ -427,24 +444,14 @@ def run_wave(
 
         _filter_merge = merge_spark_tables
 
-    def _lineage_job():
-        return [
-            {"host": r["host"], "fetched": r["cnt"]}
-            for r in fetched.groupBy("host")
-            .agg(F.count("*").alias("cnt"))
-            .orderBy(F.desc("cnt"), F.asc("host"))
-            .limit(100)  # lineage keeps the hottest hosts; full counts live in parquet
-            .collect()
-        ]
-
     table_paths = {}
     # one pool slot per job: every input is cached, so the jobs only
     # contend for executor cores, and the block is bounded by the slowest
-    # single write. The three metric/sidecar jobs (frontier-in count, host
-    # lineage, seen-filter build) read only filled caches / tiny parquet,
-    # so they back-fill cores the write tail leaves idle (guide §2.6)
-    # instead of running sequentially after the pool.
-    with ThreadPoolExecutor(max_workers=len(writes) + 3) as pool:
+    # single write. The two metric/sidecar jobs (frontier-in count,
+    # seen-filter build) read only filled caches / tiny parquet, so they
+    # back-fill cores the write tail leaves idle (guide §2.6) instead of
+    # running sequentially after the pool.
+    with ThreadPoolExecutor(max_workers=len(writes) + 2) as pool:
         futs = {
             table: pool.submit(
                 _timed, tkey, lambda t=table, w=wv, d=df_: _write_or_skip(t, w, d)
@@ -452,7 +459,6 @@ def run_wave(
             for table, (tkey, wv, df_) in writes.items()
         }
         f_frontier_in = pool.submit(_timed, "c_frontier_in", frontier.count)
-        f_lineage = pool.submit(_timed, "c_lineage", _lineage_job)
         f_filter = (
             pool.submit(_timed, "bloom_update", _filter_build)
             if _filter_build is not None
@@ -461,7 +467,6 @@ def run_wave(
         for table, fut in futs.items():
             table_paths[table] = fut.result()
         frontier_in = f_frontier_in.result()
-        host_lineage = f_lineage.result()
         filter_rows = f_filter.result() if f_filter is not None else None
 
     # -- metrics (observed on the writes: exact, zero extra jobs) -----------
@@ -498,7 +503,7 @@ def run_wave(
         _filter_merge(new_filter, filter_rows)
     wh.commit_wave(
         wave, table_paths, counts, host_lineage, time.time() - t0, new_filter, timings,
-        sharded=cfg.seen_probe_mode() == "sharded",
+        sharded=cfg.seen_probe_mode() == "sharded", seen_probe=seen_probe,
     )
     if new_filter is not bloom:
         vars(bloom).update(vars(new_filter))  # the wave is committed: so is its filter
