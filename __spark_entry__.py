@@ -167,7 +167,7 @@ def q_crawl_bfs_depth3_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
     from webcrawler_woc_spark.plans.crawl import crawl, read_seen
     from webcrawler_woc_spark.plans.state import Warehouse
 
-    cfg = CrawlConfig(whitelist=WHITELIST, words=[], depth=3, use_bloom=True, n_buckets=8)
+    cfg = CrawlConfig(whitelist=WHITELIST, words=[], depth=3, n_buckets=8)
     wh = Warehouse(spark, tempfile.mkdtemp(prefix="wcw_entry_"))
     try:
         crawl(spark, wh, _pages(spark, sf_dir), [(SEED, 1.0)], cfg)

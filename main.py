@@ -22,6 +22,7 @@ Flag parity with the reference (semantics per SURVEY.md §2):
   --host-budget N      per-host politeness budget per wave (north rule)
 Extra (engine-specific):
   --pages PATH         parquet/iceberg path of the pages corpus (fetch sim)
+  --seen-filter KIND   seen-set prefilter: bloom (default) | cuckoo | none
   --warehouse PATH     crawl-state warehouse; rerunning with the same path
                        resumes from the last committed wave automatically
                        (a completed crawl is a clean no-op)
@@ -70,6 +71,8 @@ def read_host_lines(path: str | None) -> list[str] | None:
 
 
 def main(argv: list[str] | None = None) -> int:
+    from webcrawler_woc_spark.operators.bloom import SEEN_FILTERS
+
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("url")
     ap.add_argument("-d", "--depth", type=int, default=None)
@@ -130,12 +133,13 @@ def main(argv: list[str] | None = None) -> int:
              "real WET file cap); hot hosts split into multiple blobs",
     )
     ap.add_argument("--n-buckets", type=int, default=32)
-    ap.add_argument("--no-bloom", action="store_true")
     ap.add_argument(
-        "--seen-filter", choices=("bloom", "cuckoo"), default="bloom",
+        "--seen-filter", choices=(*SEEN_FILTERS, "none"), default="bloom",
         help="seen-set prefilter sketch ahead of the exact anti-join: bloom "
-             "(default) or cuckoo (deletable fingerprints; recrawl expiry). "
-             "--no-bloom disables the prefilter regardless",
+             "(default), cuckoo (deletable fingerprints; recrawl expiry) or "
+             "none (exact anti-join only, no sidecar). A warehouse resumes "
+             "under any choice: the first resumed wave rebuilds the sidecar "
+             "from the seen set",
     )
     ap.add_argument(
         "--seen-probe", choices=("broadcast", "sharded"), default="broadcast",
@@ -215,7 +219,6 @@ def main(argv: list[str] | None = None) -> int:
         trap_filter=args.trap_filter,
         strip_tracking=args.strip_tracking,
         n_buckets=args.n_buckets,
-        use_bloom=not args.no_bloom,
         seen_filter=args.seen_filter,
         seen_probe=args.seen_probe,
         sitemap_xml=args.sitemap_xml,

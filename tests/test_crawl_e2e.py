@@ -45,7 +45,6 @@ def run_both(spark, pages, pages_dict, tmp, **kw):
         words=kw.get("words", WORDS),
         depth=kw.get("depth", 2),
         host_budget=kw.get("host_budget"),
-        use_bloom=kw.get("use_bloom", True),
         timeout_ms=kw.get("timeout_ms"),
     )
     wh = Warehouse(spark, tmp)
@@ -268,7 +267,7 @@ class TestRobotsDisallow:
             url.endswith("robots.txt"), F.lit("text/plain")
         ).otherwise(F.lit("text/html"))
         cfg = CrawlConfig(
-            whitelist=["h0.example"], depth=3, respect_disallow=respect, use_bloom=True
+            whitelist=["h0.example"], depth=3, respect_disallow=respect
         )
         wh = Warehouse(spark, tmp)
         crawl(spark, wh, pages, [("http://h0.example/page/0", 1.0)], cfg,
@@ -322,7 +321,7 @@ class TestTrapFilter:
 
         ct_expr = lambda url: F.lit("text/html")
         cfg = CrawlConfig(
-            whitelist=["h0.example"], depth=3, trap_filter=trap_filter, use_bloom=True
+            whitelist=["h0.example"], depth=3, trap_filter=trap_filter
         )
         wh = Warehouse(spark, tmp)
         crawl(spark, wh, pages, [("http://h0.example/page/0", 1.0)], cfg,
@@ -357,7 +356,6 @@ class TestBroadcastFallbackEquivalence:
             whitelist=[f"host{i}.example" for i in range(3)],
             words=["merge"],
             depth=2,
-            use_bloom=True,
             n_buckets=8,
         )
         seeds = [("http://host0.example/page/0", 1.0)]

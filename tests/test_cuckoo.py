@@ -204,32 +204,73 @@ class TestDistributedDeletion:
 
 
 class TestReviewHardening:
-    def test_resume_with_mismatched_seen_filter_fails_fast(self, spark, sf_dir):
+    def test_resume_with_other_seen_filter_matches_unfiltered(
+        self, spark, sf_dir, monkeypatch
+    ):
+        """A crawl committed with the cuckoo filter resumes with the bloom
+        filter: the first resumed wave rebuilds a bloom sidecar from the
+        seen view, so above the probe gate the crawl equals one with no
+        filter at all."""
         import tempfile
 
+        import webcrawler_woc_spark.config as cfgmod
         from webcrawler_woc_spark.config import CrawlConfig
-        from webcrawler_woc_spark.plans.crawl import crawl
+        from webcrawler_woc_spark.plans import crawl as crawl_mod
+        from webcrawler_woc_spark.plans.crawl import crawl, read_crawl_order, read_seen
         from webcrawler_woc_spark.plans.state import Warehouse
         from webcrawler_woc_spark.sources.corpus import pages_from_documents
 
-        pages = pages_from_documents(spark, sf_dir)
-        seeds = [("http://host0.example/page/0", 1.0)]
-        wl = [f"host{i}.example" for i in range(5)]
-        with tempfile.TemporaryDirectory() as tmp:
-            wh = Warehouse(spark, tmp)
-            crawl(spark, wh, pages, seeds,
-                  CrawlConfig(whitelist=wl, depth=1, n_buckets=8, seen_filter="cuckoo"))
-            # deeper rerun with the default bloom filter must refuse EARLY
-            with pytest.raises(ValueError, match="seen filter"):
-                crawl(spark, wh, pages, seeds,
-                      CrawlConfig(whitelist=wl, depth=2, n_buckets=8, seen_filter="bloom"))
+        pages = pages_from_documents(spark, sf_dir).cache()
+        pages.count()
+        seeds = [(f"http://host{i % 10}.example/page/{i}", 1.0) for i in range(0, 200, 7)]
+        wl = [f"host{i}.example" for i in range(10)]
+        monkeypatch.setattr(cfgmod, "BROADCAST_MAX_ROWS", 0)
 
-    def test_seen_filter_typo_rejected_even_with_use_bloom_false(self):
+        def cfg(seen_filter):
+            return CrawlConfig(whitelist=wl, depth=4, n_buckets=8, seen_filter=seen_filter)
+
+        def state(wh):
+            return (
+                sorted(r["url"] for r in read_seen(wh).collect()),
+                sorted(
+                    (r["wave"], r["host"], r["slot"], r["url"])
+                    for r in read_crawl_order(wh).collect()
+                ),
+            )
+
+        class Stop(RuntimeError):
+            pass
+
+        run_wave = crawl_mod.run_wave
+
+        def until_wave_2(spark_, wh_, pages_, wave, *args, **kwargs):
+            if wave >= 2:
+                raise Stop(wave)
+            return run_wave(spark_, wh_, pages_, wave, *args, **kwargs)
+
+        with tempfile.TemporaryDirectory() as t1, tempfile.TemporaryDirectory() as t2:
+            wh_ref = Warehouse(spark, t1)
+            crawl(spark, wh_ref, pages, seeds, cfg("none"))
+            monkeypatch.setattr(crawl_mod, "run_wave", until_wave_2)
+            with pytest.raises(Stop):
+                crawl(spark, Warehouse(spark, t2), pages, seeds, cfg("cuckoo"))
+            monkeypatch.setattr(crawl_mod, "run_wave", run_wave)
+            wh = Warehouse(spark, t2)
+            assert wh.manifest["waves"]["1"]["sidecar_kind"] == "cuckoo"
+            crawl(spark, wh, pages, seeds, cfg("bloom"))
+            assert state(wh) == state(wh_ref)
+            waves = [wh.manifest["waves"][str(w)] for w in range(4)]
+            assert [w["sidecar_kind"] for w in waves] == ["cuckoo", "cuckoo", "bloom", "bloom"]
+            assert [w["seen_probe"] for w in waves] == ["exact", "cuckoo", "exact", "bloom"]
+        pages.unpersist()
+
+    def test_seen_filter_typo_rejected(self):
         from webcrawler_woc_spark.config import CrawlConfig
 
-        cfg = CrawlConfig(seen_filter="cuckoos", use_bloom=False)
+        cfg = CrawlConfig(seen_filter="cuckoos")
         with pytest.raises(ValueError, match="cuckoos"):
             cfg.seen_filter_kind()
+        assert CrawlConfig(seen_filter="none").seen_filter_kind() is None
 
     def test_stash_fp_multiset_deletion_keeps_survivor(self):
         """Two distinct hashes sharing a (fingerprint, pair) key both

@@ -237,7 +237,7 @@ class TestHttpCrawlParity:
                 }
                 return links, order, text
 
-        base = dict(whitelist=WL, words=["merge"], depth=2, use_bloom=True, n_buckets=8)
+        base = dict(whitelist=WL, words=["merge"], depth=2, n_buckets=8)
         j = run(CrawlConfig(**base))
         h = run(CrawlConfig(**base, fetch_mode="http", http_base=corpus_server))
         assert j[1] == h[1]  # crawl order

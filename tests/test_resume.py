@@ -36,7 +36,7 @@ def _state(wh):
 
 class TestResume:
     def test_kill_after_wave1_resume_identical(self, spark, pages):
-        cfg_full = CrawlConfig(whitelist=WL, depth=3, use_bloom=True, n_buckets=8)
+        cfg_full = CrawlConfig(whitelist=WL, depth=3, n_buckets=8)
 
         with tempfile.TemporaryDirectory() as t1, tempfile.TemporaryDirectory() as t2:
             # uninterrupted reference run
@@ -45,7 +45,7 @@ class TestResume:
 
             # interrupted run: stop after wave 1 (simulated kill: new driver
             # process == new Warehouse object reading the manifest)
-            cfg_partial = CrawlConfig(whitelist=WL, depth=2, use_bloom=True, n_buckets=8)
+            cfg_partial = CrawlConfig(whitelist=WL, depth=2, n_buckets=8)
             wh_a = Warehouse(spark, t2)
             crawl(spark, wh_a, pages, SEEDS, cfg_partial)
             assert wh_a.last_wave == 2  # waves 0,1 + residual-flush entry
@@ -62,7 +62,7 @@ class TestResume:
             assert _state(wh_b) == _state(wh_full)
 
     def test_bloom_sidecar_reloaded_on_resume(self, spark, pages):
-        cfg = CrawlConfig(whitelist=WL, depth=2, use_bloom=True, n_buckets=8)
+        cfg = CrawlConfig(whitelist=WL, depth=2, n_buckets=8)
         with tempfile.TemporaryDirectory() as tmp:
             wh = Warehouse(spark, tmp)
             crawl(spark, wh, pages, SEEDS, cfg)
@@ -76,7 +76,7 @@ class TestResume:
             assert bloom.might_contain(hashes).all()
 
     def test_manifest_lists_lineage(self, spark, pages):
-        cfg = CrawlConfig(whitelist=WL, depth=1, use_bloom=False, n_buckets=8)
+        cfg = CrawlConfig(whitelist=WL, depth=1, seen_filter="none", n_buckets=8)
         with tempfile.TemporaryDirectory() as tmp:
             wh = Warehouse(spark, tmp)
             crawl(spark, wh, pages, SEEDS, cfg)
@@ -111,7 +111,7 @@ def _comparable_manifest(wh) -> dict:
 
 class TestWarehouseLayout:
     def test_waves_write_only_the_three_tables(self, spark, pages):
-        cfg = CrawlConfig(whitelist=WL, depth=2, use_bloom=True, n_buckets=8)
+        cfg = CrawlConfig(whitelist=WL, depth=2, n_buckets=8)
         with tempfile.TemporaryDirectory() as tmp:
             wh = Warehouse(spark, tmp)
             crawl(spark, wh, pages, SEEDS, cfg)
@@ -238,7 +238,7 @@ class TestMidWaveResume:
 
         from webcrawler_woc_spark.plans.wave import cfg_fingerprint, run_wave
 
-        cfg = CrawlConfig(whitelist=WL, depth=1, use_bloom=True, n_buckets=8)
+        cfg = CrawlConfig(whitelist=WL, depth=1, n_buckets=8)
 
         with tempfile.TemporaryDirectory() as t1, tempfile.TemporaryDirectory() as t2:
             # clean reference wave
@@ -289,8 +289,8 @@ class TestMidWaveResume:
 
         from webcrawler_woc_spark.plans.wave import cfg_fingerprint, run_wave
 
-        cfg_old = CrawlConfig(whitelist=WL, depth=1, use_bloom=True, n_buckets=8)
-        cfg_new = CrawlConfig(whitelist=WL[:2], depth=1, use_bloom=True, n_buckets=8)
+        cfg_old = CrawlConfig(whitelist=WL, depth=1, n_buckets=8)
+        cfg_new = CrawlConfig(whitelist=WL[:2], depth=1, n_buckets=8)
 
         with tempfile.TemporaryDirectory() as t1, tempfile.TemporaryDirectory() as t2:
             wh_ref = Warehouse(spark, t1)
@@ -330,7 +330,7 @@ class TestMidWaveResume:
 
         from webcrawler_woc_spark.plans.wave import cfg_fingerprint, run_wave
 
-        cfg = CrawlConfig(whitelist=WL, depth=1, use_bloom=True, n_buckets=8)
+        cfg = CrawlConfig(whitelist=WL, depth=1, n_buckets=8)
 
         with tempfile.TemporaryDirectory() as t2:
             wh_b = Warehouse(spark, t2)
@@ -357,3 +357,93 @@ class TestMidWaveResume:
                 assert os.path.getmtime(os.path.join(p, "_SUCCESS")) != mtimes[t], (
                     f"{t} kept a table from a different-input attempt"
                 )
+
+
+class _StopBeforeWave(RuntimeError):
+    pass
+
+
+# a crawl that crosses the probe gate (BROADCAST_MAX_ROWS = 0) and links back
+# into waves it has seen, so a filter that misses a wave re-crawls its urls
+GATE_SEEDS = [(f"http://host{i % 10}.example/page/{i}", 1.0) for i in range(0, 200, 7)]
+GATE_WL = [f"host{i}.example" for i in range(10)]
+GATE_DEPTH = 6
+
+
+def _gate_cfg(seen_filter: str) -> CrawlConfig:
+    return CrawlConfig(whitelist=GATE_WL, depth=GATE_DEPTH, n_buckets=8, seen_filter=seen_filter)
+
+
+def _full_state(wh):
+    """Seen set, crawl order and the links_out rows of a finished crawl."""
+    from webcrawler_woc_spark.plans.crawl import read_links_out
+
+    links = sorted(
+        (r["wave"], r["url"], r["crawled"], r["link_type"], r["contains_words"])
+        for r in read_links_out(wh).collect()
+    )
+    return (*_state(wh), links)
+
+
+def _crawl_until(spark, wh, pages, cfg, stop_wave: int) -> None:
+    """Crawl, stopping (as if killed) before wave ``stop_wave`` runs."""
+    from webcrawler_woc_spark.plans import crawl as crawl_mod
+
+    run_wave = crawl_mod.run_wave
+
+    def until(spark_, wh_, pages_, wave, *args, **kwargs):
+        if wave >= stop_wave:
+            raise _StopBeforeWave(wave)
+        return run_wave(spark_, wh_, pages_, wave, *args, **kwargs)
+
+    crawl_mod.run_wave = until
+    try:
+        with pytest.raises(_StopBeforeWave):
+            crawl(spark, wh, pages, GATE_SEEDS, cfg)
+    finally:
+        crawl_mod.run_wave = run_wave
+
+
+class TestSeenFilterRebuiltOnResume:
+    """The committed sidecar is a cache of the seen view: a resume that finds
+    no sidecar of the requested kind (waves committed with no filter, or the
+    last wave's file lost) rebuilds it from the seen view, so above the probe
+    gate the filter never misses a crawled url and no url is crawled twice."""
+
+    @pytest.fixture(scope="class")
+    def unfiltered(self, spark, pages):
+        with tempfile.TemporaryDirectory() as tmp:
+            wh = Warehouse(spark, tmp)
+            crawl(spark, wh, pages, GATE_SEEDS, _gate_cfg("none"))
+            return _full_state(wh)
+
+    @pytest.mark.parametrize(
+        "first,then,lose_sidecar",
+        [
+            pytest.param("none", "bloom", False, id="none-bloom"),
+            pytest.param("none", "cuckoo", False, id="none-cuckoo"),
+            pytest.param("bloom", "bloom", True, id="bloom-lost-npz"),
+        ],
+    )
+    def test_resume_matches_unfiltered(
+        self, spark, pages, unfiltered, monkeypatch, first, then, lose_sidecar
+    ):
+        import webcrawler_woc_spark.config as cfgmod
+
+        monkeypatch.setattr(cfgmod, "BROADCAST_MAX_ROWS", 0)
+        with tempfile.TemporaryDirectory() as tmp:
+            _crawl_until(spark, Warehouse(spark, tmp), pages, _gate_cfg(first), stop_wave=3)
+            wh = Warehouse(spark, tmp)
+            assert wh.last_wave == 2
+            if lose_sidecar:
+                os.remove(wh.manifest["waves"]["2"]["bloom"])
+            crawl(spark, wh, pages, GATE_SEEDS, _gate_cfg(then))
+            state = _full_state(wh)
+            waves = [wh.manifest["waves"][str(w)] for w in range(GATE_DEPTH)]
+        seen, order, links = state
+        assert len(order) == len({url for *_, url in order})  # no url crawled twice
+        assert state == unfiltered
+        # the rebuilt sidecar is of the requested kind; the wave that
+        # rebuilt it had none to probe, the later ones probe it
+        assert [w["sidecar_kind"] for w in waves[3:]] == [then] * 3
+        assert [w["seen_probe"] for w in waves[3:]] == ["exact", then, then]

@@ -96,7 +96,7 @@ class TestStripTrackingWired:
         from webcrawler_woc_spark.plans.state import Warehouse
 
         cfg = CrawlConfig(
-            whitelist=["h0.example"], depth=2, strip_tracking=strip, use_bloom=True
+            whitelist=["h0.example"], depth=2, strip_tracking=strip
         )
         wh = Warehouse(spark, tmp)
         crawl(

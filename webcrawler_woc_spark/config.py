@@ -40,7 +40,6 @@ class CrawlConfig:
       Crawl-delay is cached for a host, its effective budget is
       ``max(1, host_budget // crawl_delay)``.
     * ``n_buckets`` — url_hash bucket count of the seen filter's sidecar.
-    * ``use_bloom`` — Bloom prefilter ahead of the exact seen anti-join.
     * ``timeout_ms`` — request-timeout simulation (reference cli.rs:34-35,
       default 10 s): matched pages whose synthetic latency exceeds this are
       fetch failures (op 27). ``None`` (default) disables the gate so fetch
@@ -53,11 +52,12 @@ class CrawlConfig:
     depth: int | None = 1
     host_budget: int | None = None
     n_buckets: int = 32
-    use_bloom: bool = True
-    # which sketch prefilters the seen anti-join: "bloom" (default) or
-    # "cuckoo" (deletable fingerprints — the recrawl/TTL-expiry story,
-    # operators/cuckoo.py); use_bloom=False disables the prefilter entirely
-    # regardless (legacy switch, kept for the --no-bloom CLI surface)
+    # which sketch prefilters the seen anti-join: a kind of
+    # operators/bloom.SEEN_FILTERS — "bloom" (default) or "cuckoo" (deletable
+    # fingerprints, the recrawl/TTL-expiry story, operators/cuckoo.py) — or
+    # "none" (exact anti-join only, no sidecar). Resuming with another kind
+    # than the warehouse was written with is allowed: the first resumed wave
+    # rebuilds the sidecar from the seen view
     seen_filter: str = "bloom"
     # how the wave PROBES the seen filter: "broadcast" ships the whole merged
     # filter to every executor (cheap at sandbox scale); "sharded" writes the
@@ -91,8 +91,6 @@ class CrawlConfig:
     # format; default off preserves reference parity (text/plain only,
     # crawler.rs:294-300) so default-path goldens never move
     sitemap_xml: bool = False
-    max_waves: int = 50  # safety bound for no-depth mode
-    seed_priority: float = 1.0
     child_priority: float = 0.0
     # "join" = corpus equi-join simulation (the default, driver design brief);
     # "http" = real mapInPandas HTTP fetch (operators/httpfetch.py) with the
@@ -105,13 +103,14 @@ class CrawlConfig:
     http_max_per_host: int = 4
 
     def seen_filter_kind(self) -> str | None:
-        """Effective seen-set prefilter: None (disabled), 'bloom', 'cuckoo'.
-        Validates seen_filter in EVERY mode — a typo must raise, not
-        silently run unprefiltered behind a use_bloom=False short-circuit."""
-        if self.seen_filter not in ("bloom", "cuckoo", "none"):
-            raise ValueError(f"unknown seen_filter: {self.seen_filter!r}")
-        if not self.use_bloom or self.seen_filter == "none":
+        """Validated seen-set prefilter: a ``SEEN_FILTERS`` kind, or None for
+        "none". A typo raises rather than running unprefiltered."""
+        from .operators.bloom import SEEN_FILTERS
+
+        if self.seen_filter == "none":
             return None
+        if self.seen_filter not in SEEN_FILTERS:
+            raise ValueError(f"unknown seen_filter: {self.seen_filter!r}")
         return self.seen_filter
 
     def seen_probe_mode(self) -> str:

@@ -17,6 +17,11 @@ anti-join from (new_links ⋈ 10^10 seen) into (small maybe-seen ⋈ seen).
 All hashing is the JVM's xxhash64 (computed once, reused as bucket key, Bloom
 probe source, and join key); k probe positions derive from the single 64-bit
 hash via double hashing (Kirsch-Mitzenmacher).
+
+``SEEN_FILTERS`` at the bottom maps each filter kind to its class; the
+engine (plans/, operators/sharded_probe.py) reaches a filter only through it
+and through the protocol ``PartitionedBloom`` documents, so removing a kind
+is one class and one mapping entry.
 """
 
 from __future__ import annotations
@@ -27,6 +32,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType
+
+from .routing import broadcast_tag, prefiltered_anti_join
 
 DEFAULT_BITS_PER_BUCKET = 1 << 20  # 128 KiB / bucket
 DEFAULT_K = 4
@@ -52,9 +59,21 @@ def _test_bits(bitmap: np.ndarray, positions: np.ndarray) -> np.ndarray:
 
 
 class PartitionedBloom:
-    """n_buckets Bloom bitmaps keyed by pmod(url_hash, n_buckets)."""
+    """n_buckets Bloom bitmaps keyed by pmod(url_hash, n_buckets).
 
-    kind = "bloom"  # sidecar/dispatch tag (PartitionedCuckoo.kind = "cuckoo")
+    The seen-filter protocol, shared with PartitionedCuckoo (the engine
+    reaches either class only through ``SEEN_FILTERS``):
+
+    * ``build_rows(df)`` — distributed per-bucket build over df(url_hash);
+    * ``merge(rows)`` — fold those rows into this filter;
+    * ``probe_udf(spark)`` — broadcast the filter, return a membership UDF;
+    * ``shard_meta()`` / ``bucket_arrays(b)`` — the file-per-bucket layout
+      (operators/sharded_probe.py), and ``bucket_probe(meta, arrays)`` —
+      a membership callable rebuilt from one bucket's arrays;
+    * ``save(path)`` / ``load(path)`` — the whole-filter ``.npz`` sidecar.
+    """
+
+    kind = "bloom"  # SEEN_FILTERS key, sidecar file prefix and manifest tag
 
     def __init__(self, n_buckets: int, m_bits: int = DEFAULT_BITS_PER_BUCKET, k: int = DEFAULT_K):
         self.n_buckets = n_buckets
@@ -81,7 +100,28 @@ class PartitionedBloom:
             out[mask] = _test_bits(self.bitmaps[int(b)], pos)
         return out
 
-    # --- persistence (checkpoint sidecar, see plans/state.py) ---
+    # --- the seen-filter protocol (module functions are looked up at call
+    # time, so wrappers installed on them see every call) ---
+
+    def build_rows(self, df: DataFrame) -> list:
+        return build_bucket_bitmaps(df, self.n_buckets, self.m_bits, self.k)
+
+    def merge(self, rows: list) -> None:
+        self.merge_spark_bitmaps(rows)
+
+    def probe_udf(self, spark: SparkSession):
+        return make_might_contain_udf(spark, self)
+
+    def shard_meta(self) -> dict:
+        return {"kind": self.kind, "n_buckets": self.n_buckets, "m_bits": self.m_bits, "k": self.k}
+
+    def bucket_arrays(self, bucket: int) -> dict:
+        return {"bitmap": self.bitmaps[bucket]}
+
+    @staticmethod
+    def bucket_probe(meta: dict, arrays: dict):
+        bitmap, m_bits, k = arrays["bitmap"], int(meta["m_bits"]), int(meta["k"])
+        return lambda hashes: _test_bits(bitmap, _probes(hashes, m_bits, k))
 
     def save(self, path: str) -> None:
         np.savez_compressed(
@@ -151,27 +191,14 @@ def bloom_prefiltered_anti_join(
     bloom: PartitionedBloom | None,
     candidates_rows: int | None = None,
 ) -> DataFrame:
-    """candidates minus seen, with optional Bloom fast-path.
+    """candidates minus seen, with the broadcast Bloom probe ahead of the
+    exact anti-join; without a bloom the exact anti-join alone
+    (routing.prefiltered_anti_join)."""
+    return prefiltered_anti_join(candidates, seen, broadcast_tag(spark, bloom), candidates_rows)
 
-    With a Bloom filter: definitely-new rows bypass the join entirely;
-    maybe-seen rows are confirmed by a scan-only exact anti-join
-    (routing.anti_join_scan: the cumulative seen set is scanned against a
-    broadcast of the small maybe-seen set, never shuffled). Without a bloom:
-    the same scan-only anti-join over all candidates.
-    """
-    from .routing import anti_join_scan
 
-    if bloom is None:
-        return anti_join_scan(candidates, seen, ["url_hash", "url"], small_rows=candidates_rows)
-    might = make_might_contain_udf(spark, bloom)
-    tagged = candidates.withColumn("_maybe_seen", might(F.col("url_hash")))
-    definitely_new = tagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
-    # the maybe-seen remainder is <= |candidates| (and with a healthy bloom,
-    # a small fraction of it) — the candidates count is a safe upper gate
-    confirmed_new = anti_join_scan(
-        tagged.filter(F.col("_maybe_seen")).drop("_maybe_seen"),
-        seen,
-        ["url_hash", "url"],
-        small_rows=candidates_rows,
-    )
-    return definitely_new.unionByName(confirmed_new)
+from .cuckoo import PartitionedCuckoo  # noqa: E402  (cuckoo.py imports nothing from here)
+
+# the one place a seen-filter kind string selects code: --seen-filter values,
+# the manifest's sidecar_kind and the sharded meta.json "kind" all key it
+SEEN_FILTERS = {cls.kind: cls for cls in (PartitionedBloom, PartitionedCuckoo)}

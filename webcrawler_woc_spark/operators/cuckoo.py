@@ -2,7 +2,9 @@
 operators/bloom.py (the north rule names "bloom/cuckoo URL-seen" — this is
 the cuckoo half).
 
-Same outer shape as PartitionedBloom: one filter table per url_hash bucket
+Same outer shape and the same seen-filter protocol as PartitionedBloom
+(documented there; ``bloom.SEEN_FILTERS["cuckoo"]`` is this class): one
+filter table per url_hash bucket
 (``bucket = pmod(url_hash, n_buckets)``), built distributed with
 ``applyInPandas`` (one small table per bucket crosses the wire, never the
 URLs), merged driver-side, broadcast to executors, and probed by an
@@ -45,6 +47,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType
+
+from .routing import broadcast_tag, prefiltered_anti_join
 
 DEFAULT_M_BUCKETS = 1 << 15  # 32768 4-slot buckets = 131072 slots / partition
 SLOTS = 4
@@ -265,23 +269,44 @@ class PartitionedCuckoo:
             out[mask] = self.tables[b].delete_hashes(hs)
         return out
 
-    # --- persistence (checkpoint sidecar, the PartitionedBloom contract) ---
+    # --- the seen-filter protocol (documented on PartitionedBloom; module
+    # functions are looked up at call time, so wrappers installed on them
+    # see every call) ---
+
+    def build_rows(self, df: DataFrame) -> list:
+        return build_bucket_tables(df, self.n_buckets, self.m)
+
+    def merge(self, rows: list) -> None:
+        merge_spark_tables(self, rows)
+
+    def probe_udf(self, spark: SparkSession):
+        return make_might_contain_udf(spark, self)
+
+    def shard_meta(self) -> dict:
+        return {"kind": self.kind, "n_buckets": self.n_buckets, "m": self.m}
+
+    def bucket_arrays(self, bucket: int) -> dict:
+        t = self.tables[bucket]
+        return {
+            "table": t.table,
+            "stash": np.array(t._stash_list(), dtype=np.int64),
+            "stash_fp": np.array(
+                [[f, i, c] for (f, i), c in sorted(t.stash_fp.items())], dtype=np.int64
+            ).reshape(-1, 3),
+        }
+
+    @staticmethod
+    def bucket_probe(meta: dict, arrays: dict):
+        return CuckooTable.from_state(int(meta["m"]), arrays).might_contain
 
     def save(self, path: str) -> None:
         np.savez_compressed(
             path,
             meta=np.array([self.n_buckets, self.m], dtype=np.int64),
-            **{f"t{b}": t.table for b, t in self.tables.items()},
             **{
-                f"s{b}": np.array(t._stash_list(), dtype=np.int64)
-                for b, t in self.tables.items()
-            },
-            **{
-                f"f{b}": np.array(
-                    [[f, i, c] for (f, i), c in sorted(t.stash_fp.items())],
-                    dtype=np.int64,
-                ).reshape(-1, 3)
-                for b, t in self.tables.items()
+                f"{_NPZ_PREFIX[name]}{b}": arr
+                for b in self.tables
+                for name, arr in self.bucket_arrays(b).items()
             },
         )
 
@@ -292,15 +317,13 @@ class PartitionedCuckoo:
             cuckoo = cls(n_buckets, m)
             for b in range(n_buckets):
                 cuckoo.tables[b] = CuckooTable.from_state(
-                    m,
-                    {
-                        "table": z[f"t{b}"].tobytes(),
-                        "stash": z[f"s{b}"],
-                        "stash_fp": z[f"f{b}"],
-                    },
-                    writable=True,
+                    m, {name: z[f"{p}{b}"] for name, p in _NPZ_PREFIX.items()}, writable=True
                 )
         return cuckoo
+
+
+# bucket array name -> key prefix of the whole-filter .npz (t3 = bucket 3's table)
+_NPZ_PREFIX = {"table": "t", "stash": "s", "stash_fp": "f"}
 
 
 def build_bucket_tables(df: DataFrame, n_buckets: int, m: int) -> list:
@@ -433,21 +456,7 @@ def cuckoo_prefiltered_anti_join(
     cuckoo: PartitionedCuckoo | None,
     candidates_rows: int | None = None,
 ) -> DataFrame:
-    """candidates minus seen with the cuckoo fast-path — drop-in for
-    bloom_prefiltered_anti_join (same exactness argument: no false
-    negatives, so definitely-new rows skip the join; maybe-seen rows are
-    confirmed by the scan-only exact anti-join)."""
-    from .routing import anti_join_scan
-
-    if cuckoo is None:
-        return anti_join_scan(candidates, seen, ["url_hash", "url"], small_rows=candidates_rows)
-    might = make_might_contain_udf(spark, cuckoo)
-    tagged = candidates.withColumn("_maybe_seen", might(F.col("url_hash")))
-    definitely_new = tagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
-    confirmed_new = anti_join_scan(
-        tagged.filter(F.col("_maybe_seen")).drop("_maybe_seen"),
-        seen,
-        ["url_hash", "url"],
-        small_rows=candidates_rows,
-    )
-    return definitely_new.unionByName(confirmed_new)
+    """candidates minus seen, with the broadcast cuckoo probe ahead of the
+    exact anti-join; without a cuckoo the exact anti-join alone
+    (routing.prefiltered_anti_join, the body every filter kind shares)."""
+    return prefiltered_anti_join(candidates, seen, broadcast_tag(spark, cuckoo), candidates_rows)

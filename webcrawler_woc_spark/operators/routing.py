@@ -10,16 +10,18 @@ the identical rule, so crawl order and seen-set are well-defined.
 
 Scale notes:
 * the wave-level dedup + anti-joins shuffle ONLY the freshly-extracted links
-  (bounded by wave out-degree), never the cumulative seen set when the
-  Bloom prefilter (operators/bloom.py) is on — the exact anti-join then runs
-  against the small maybe-seen remainder.
+  (bounded by wave out-degree), never the cumulative seen set: the seen set
+  is only scanned (anti_join_scan), and with a seen filter on
+  (prefiltered_anti_join) only the maybe-seen remainder is checked against it.
 * the seen and rejected sets are filtered views of the warehouse's
   links_out rows (plans/state.py VIEWS); anti_join_scan only scans them.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -72,6 +74,46 @@ def anti_join_scan(
         return small.join(big.select(*keys), keys, "left_anti")
     hits = big.select(*keys).join(F.broadcast(small.select(*keys)), keys, "left_semi")
     return small.join(F.broadcast(hits), keys, "left_anti")
+
+
+def prefiltered_anti_join(
+    candidates: DataFrame,
+    seen: DataFrame,
+    tag: Callable[[DataFrame], DataFrame] | None = None,
+    candidates_rows: int | None = None,
+) -> DataFrame:
+    """candidates minus seen on (url_hash, url), exactly, for every seen
+    filter kind and probe mode.
+
+    ``tag`` adds a boolean ``_maybe_seen`` column answered by a seen filter
+    (a broadcast probe, ``broadcast_tag``, or the bucket-sharded one,
+    operators/sharded_probe.py). A filter has no false negatives, so the
+    definitely-new rows bypass the join and only the maybe-seen rows are
+    confirmed by the scan-only anti-join. With no ``tag`` the scan runs over
+    every candidate. The maybe-seen rows are at most ``candidates_rows``, a
+    safe bound for the broadcast gate.
+    """
+    keys = ["url_hash", "url"]
+    if tag is None:
+        return anti_join_scan(candidates, seen, keys, small_rows=candidates_rows)
+    tagged = tag(candidates)
+    definitely_new = tagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
+    confirmed_new = anti_join_scan(
+        tagged.filter(F.col("_maybe_seen")).drop("_maybe_seen"),
+        seen,
+        keys,
+        small_rows=candidates_rows,
+    )
+    return definitely_new.unionByName(confirmed_new)
+
+
+def broadcast_tag(spark: SparkSession, filt) -> Callable[[DataFrame], DataFrame] | None:
+    """The ``tag`` of prefiltered_anti_join for a driver-held seen filter of
+    any kind: its broadcast membership UDF. None when there is no filter."""
+    if filt is None:
+        return None
+    might = filt.probe_udf(spark)
+    return lambda df: df.withColumn("_maybe_seen", might(F.col("url_hash")))
 
 
 def dedup_wave(children: DataFrame) -> DataFrame:

@@ -9,7 +9,10 @@ build/delete paths already use:
 
 * the filter lives AT REST as ONE SIDECAR FILE PER BUCKET
   (``bucket_00042.npz``) plus a tiny ``meta.json`` — written bucket-files
-  first, meta last, so the meta file doubles as the commit marker;
+  first, meta last, so the meta file doubles as the commit marker. A
+  bucket file holds the filter's ``bucket_arrays`` and meta.json its
+  ``shard_meta``, whose ``kind`` picks the class in ``bloom.SEEN_FILTERS``
+  (the seen-filter protocol, documented on ``PartitionedBloom``);
 * candidates shuffle to their ``pmod(url_hash, n_buckets)`` bucket (the
   exact key the filter was built and is deleted under);
 * each grouped task loads ONLY its own bucket's file — per-task filter
@@ -47,6 +50,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, StructField, StructType
 
+from .routing import prefiltered_anti_join
+
 META_NAME = "meta.json"
 
 # worker-local cache of loaded bucket probes: repeated tasks for the same
@@ -63,34 +68,13 @@ def _bucket_file(sidecar_dir: str, bucket: int) -> str:
 
 
 def save_sharded(filt, sidecar_dir: str) -> None:
-    """Write a PartitionedBloom/PartitionedCuckoo as a file-per-bucket
-    sidecar directory (bucket files first, meta.json last = commit)."""
+    """Write a seen filter of any kind as a file-per-bucket sidecar
+    directory (bucket files first, meta.json last = commit)."""
     os.makedirs(sidecar_dir, exist_ok=True)
-    if filt.kind == "bloom":
-        meta = {
-            "kind": "bloom",
-            "n_buckets": filt.n_buckets,
-            "m_bits": filt.m_bits,
-            "k": filt.k,
-        }
-        for b, bm in filt.bitmaps.items():
-            np.savez_compressed(_bucket_file(sidecar_dir, b), bitmap=bm)
-    elif filt.kind == "cuckoo":
-        meta = {"kind": "cuckoo", "n_buckets": filt.n_buckets, "m": filt.m}
-        for b, t in filt.tables.items():
-            np.savez_compressed(
-                _bucket_file(sidecar_dir, b),
-                table=t.table,
-                stash=np.array(t._stash_list(), dtype=np.int64),
-                stash_fp=np.array(
-                    [[f, i, c] for (f, i), c in sorted(t.stash_fp.items())],
-                    dtype=np.int64,
-                ).reshape(-1, 3),
-            )
-    else:
-        raise ValueError(f"unknown filter kind: {filt.kind!r}")
+    for b in range(filt.n_buckets):
+        np.savez_compressed(_bucket_file(sidecar_dir, b), **filt.bucket_arrays(b))
     with open(os.path.join(sidecar_dir, META_NAME), "w") as fh:
-        json.dump(meta, fh)
+        json.dump(filt.shard_meta(), fh)
 
 
 def read_meta(sidecar_dir: str) -> dict:
@@ -103,24 +87,11 @@ def _load_bucket_probe(sidecar_dir: str, meta: dict, bucket: int):
     ``hashes -> bool ndarray`` membership callable. This is the only
     function that touches filter bytes on the probe path — a task calls it
     exactly once, for its own bucket (pinned in tests)."""
+    from .bloom import SEEN_FILTERS
+
     with np.load(_bucket_file(sidecar_dir, bucket)) as z:
-        if meta["kind"] == "bloom":
-            from .bloom import _probes, _test_bits
-
-            bitmap = z["bitmap"].copy()
-            m_bits, k = int(meta["m_bits"]), int(meta["k"])
-            return lambda hashes: _test_bits(bitmap, _probes(hashes, m_bits, k))
-        from .cuckoo import CuckooTable
-
-        table = CuckooTable.from_state(
-            int(meta["m"]),
-            {
-                "table": z["table"].tobytes(),
-                "stash": z["stash"],
-                "stash_fp": z["stash_fp"],
-            },
-        )
-        return table.might_contain
+        arrays = {name: z[name] for name in z.files}
+    return SEEN_FILTERS[meta["kind"]].bucket_probe(meta, arrays)
 
 
 def _cached_loader(sidecar_dir: str, meta: dict, bucket: int):
@@ -180,19 +151,9 @@ def sharded_prefiltered_anti_join(
     sidecar_dir: str,
     candidates_rows: int | None = None,
 ) -> DataFrame:
-    """candidates minus seen with the sharded fast-path — drop-in for
-    bloom_/cuckoo_prefiltered_anti_join, same exactness argument:
-    definitely-new rows (filter says no — never a false negative) bypass
-    the join; maybe-seen rows are confirmed by the scan-only exact
-    anti-join."""
-    from .routing import anti_join_scan
-
-    tagged = sharded_tag_maybe_seen(candidates, sidecar_dir)
-    definitely_new = tagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
-    confirmed_new = anti_join_scan(
-        tagged.filter(F.col("_maybe_seen")).drop("_maybe_seen"),
-        seen,
-        ["url_hash", "url"],
-        small_rows=candidates_rows,
+    """candidates minus seen with the sharded probe ahead of the exact
+    anti-join (routing.prefiltered_anti_join, the body the broadcast probes
+    share)."""
+    return prefiltered_anti_join(
+        candidates, seen, lambda df: sharded_tag_maybe_seen(df, sidecar_dir), candidates_rows
     )
-    return definitely_new.unionByName(confirmed_new)

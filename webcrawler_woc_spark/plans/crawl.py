@@ -10,7 +10,7 @@ Maps the reference entry points (SURVEY.md §3):
 Resume: the warehouse manifest records the last committed wave; ``crawl``
 called on an existing warehouse continues from there (kill/resume test in
 tests/test_resume.py). Per the north rule every wave commit carries counts,
-per-host lineage and the Bloom sidecar.
+per-host lineage and the seen-filter sidecar.
 """
 
 from __future__ import annotations
@@ -22,30 +22,24 @@ from ..config import CrawlConfig
 from ..operators.fetch import with_host, with_url_hash
 from ..operators.politeness import parse_robots_crawl_delay
 from ..operators.sitemaps import sitemap_children
-from .state import Warehouse
+from .state import Warehouse, uncrawled_links
 from .wave import run_wave
 
 
+# safety bound on the waves of a no-depth crawl
+MAX_WAVES = 50
+
 
 def _load_seen_filter(wh: Warehouse, cfg: CrawlConfig):
-    """Load the seen-filter sidecar, REFUSING a kind mismatch: resuming a
-    cuckoo-written warehouse with --seen-filter bloom (or vice versa) would
-    feed the wrong object into the wave's update path and crash mid-wave
-    AFTER the table writes — fail fast with an actionable message instead.
-    A fresh warehouse (no sidecar yet) loads None and the requested kind is
-    built on the first wave."""
+    """The committed seen-filter sidecar when it is of the requested kind;
+    None when no filter is requested, or none of that kind is committed (a
+    fresh warehouse, one written with another filter or none, or a sidecar
+    file that is gone). The next wave then rebuilds the requested kind from
+    the seen view (plans/wave.py), so the committed filter always covers
+    every crawled url."""
     kind = cfg.seen_filter_kind()
-    if kind is None:
-        return None
-    side = wh.load_seen_filter()
-    side_kind = getattr(side, "kind", "bloom") if side is not None else None
-    if side is not None and side_kind != kind:
-        raise ValueError(
-            f"warehouse sidecar was written by the {side_kind!r} seen filter but "
-            f"this run requests {kind!r}; resume with the matching --seen-filter "
-            "(switching kinds mid-crawl requires rebuilding the sidecar)"
-        )
-    return side
+    side = wh.load_seen_filter() if kind is not None else None
+    return side if side is not None and side.kind == kind else None
 
 
 def seed_frontier(
@@ -132,7 +126,7 @@ def crawl(
             _flush_residual(wh, residual, final_wave)
     else:
         wave = start_wave
-        while wave < cfg.max_waves:
+        while wave < MAX_WAVES:
             frontier = wh.read_frontier(wave)
             if frontier is None or frontier.limit(1).count() == 0:
                 break
@@ -158,44 +152,18 @@ def crawl(
 
 def _flush_residual(wh: Warehouse, residual: DataFrame, final_wave: int) -> None:
     """Emit leftover frontier as crawled=false links (op 19)."""
-    from ..functions.udfs import link_type_col
-
     from pyspark.sql import Observation
 
-    flush = residual.select(
-        F.col("url"),
-        F.col("url_hash"),
-        F.col("host"),
-        F.lit(None).cast("string").alias("content_type"),
-        F.lit(None).cast("map<string,string>").alias("headers"),
-        F.lit(False).alias("crawled"),
-        F.lit(None).cast("string").alias("ipv4"),
-        F.lit(None).cast("string").alias("ipv6"),
-        link_type_col(F.col("url")).alias("link_type"),
-        F.lit(False).alias("contains_words"),
-        F.lit(None).cast("int").alias("slot"),
-    )
+    from ..functions.udfs import link_type_col
+
+    flush = uncrawled_links(residual, link_type_col(F.col("url")))
     # the count rides the write as an observation — the previous read-back
     # count() was a whole extra job per crawl (guide §1.5 zero-extra-jobs
     # metrics, same pattern as run_wave's links_out counts)
     obs = Observation(f"residual_flush_w{final_wave}")
     flush = flush.observe(obs, F.count(F.lit(1)).alias("n"))
     path = wh.write_wave_table("links_out", final_wave, flush)
-    n = int(obs.get["n"])
-    wh.manifest["waves"][str(final_wave)] = {
-        "tables": {"links_out": path},
-        "counts": {"residual_flush": n},
-        "host_lineage": [],
-        "wall_sec": 0.0,
-        # the flush adds no new URLs: carry the previous wave's seen-filter
-        # sidecar forward, kind included (a cuckoo path loaded as a bloom
-        # would fail on the meta shape)
-        "bloom": wh.manifest["waves"].get(str(final_wave - 1), {}).get("bloom"),
-        "sidecar_kind": wh.manifest["waves"].get(str(final_wave - 1), {}).get("sidecar_kind"),
-        "sharded_dir": wh.manifest["waves"].get(str(final_wave - 1), {}).get("sharded_dir"),
-    }
-    wh.manifest["last_wave"] = final_wave
-    wh._commit_manifest()
+    wh.commit_flush(final_wave, path, int(obs.get["n"]))
 
 
 def read_links_out(wh: Warehouse) -> DataFrame | None:

@@ -9,7 +9,8 @@ snapshot-commit contract is implemented directly over parquet):
   records it — readers NEVER list directories, they read exactly the paths
   the manifest names, so a crash mid-write leaves at most invisible orphans;
 * the manifest stores per-wave row counts, per-host lineage, wall time and
-  the Bloom sidecar path => resumable from any completed wave
+  the seen-filter sidecar (``SIDECAR_KEYS``) => resumable from any completed
+  wave
   (north rule: "resumable from checkpoint with per-partition lineage +
   metrics").
 
@@ -29,11 +30,19 @@ import os
 import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from ..operators.bloom import PartitionedBloom
+from ..operators.bloom import SEEN_FILTERS
 
 FORMAT = 2
+
+# the manifest keys naming a wave's seen-filter sidecar: the whole-filter
+# .npz path ("bloom" for every kind, a legacy name), the filter's kind (a
+# SEEN_FILTERS key) and, in sharded mode, its file-per-bucket directory. The
+# sidecar is a cache of the seen view: a wave that finds none of the kind it
+# wants rebuilds it from the seen view (plans/wave.py).
+SIDECAR_KEYS = ("bloom", "sidecar_kind", "sharded_dir")
 
 # name -> (filter over links_out, projected columns); ``wave`` is the
 # partition column of the links_out/wave=K directories
@@ -130,60 +139,71 @@ class Warehouse:
         counts: dict[str, int],
         host_lineage: list[dict] | None,
         wall_sec: float,
-        bloom: PartitionedBloom | None,
+        bloom,
         timings: dict | None = None,
         sharded: bool = False,
         seen_probe: str | None = None,
     ) -> None:
         """Atomically record a completed wave (the Spark 'action barrier').
 
-        ``bloom`` is the seen-set prefilter sidecar and accepts EITHER
-        PartitionedBloom or PartitionedCuckoo (the manifest key keeps its
-        legacy name; ``sidecar_kind`` records which filter wrote it).
-        ``sharded=True`` additionally writes the file-per-bucket layout
+        ``bloom`` is the wave's seen filter (any ``SEEN_FILTERS`` class, or
+        None); it is saved as the wave's sidecar. ``sharded=True``
+        additionally writes the file-per-bucket layout
         (operators/sharded_probe.py) so the next wave can probe without
         broadcasting the merged filter. ``seen_probe`` records how the wave
-        subtracted the seen set: ``exact`` (anti-join alone), ``bloom``,
-        ``cuckoo`` (broadcast probe) or ``sharded``."""
-        bloom_path = None
-        kind = None
-        sharded_dir = None
+        subtracted the seen set: ``exact`` (anti-join alone), a filter kind
+        (broadcast probe) or ``sharded``."""
+        sidecar = dict.fromkeys(SIDECAR_KEYS)
         if bloom is not None:
-            kind = getattr(bloom, "kind", "bloom")
-            bloom_path = os.path.join(self.path, f"{kind}_wave_{wave}.npz")
-            bloom.save(bloom_path)
+            sidecar["sidecar_kind"] = bloom.kind
+            sidecar["bloom"] = os.path.join(self.path, f"{bloom.kind}_wave_{wave}.npz")
+            bloom.save(sidecar["bloom"])
             if sharded:
                 from ..operators.sharded_probe import save_sharded
 
-                sharded_dir = os.path.join(self.path, f"{kind}_sharded_wave_{wave}")
-                save_sharded(bloom, sharded_dir)
-        self.manifest["waves"][str(wave)] = {
+                sidecar["sharded_dir"] = os.path.join(
+                    self.path, f"{bloom.kind}_sharded_wave_{wave}"
+                )
+                save_sharded(bloom, sidecar["sharded_dir"])
+        self._record_wave(wave, {
             "tables": table_paths,
             "counts": counts,
             "host_lineage": host_lineage or [],
             "wall_sec": wall_sec,
-            "bloom": bloom_path,
-            "sidecar_kind": kind,
-            "sharded_dir": sharded_dir,
             "seen_probe": seen_probe,
             "timings": timings or {},
             "committed_at": time.time(),
-        }
+            **sidecar,
+        })
+
+    def commit_flush(self, wave: int, links_out_path: str, rows: int) -> None:
+        """Record the depth-mode residual flush as pseudo-wave ``wave``. It
+        adds no url to the seen set, so it carries the previous wave's
+        sidecar forward."""
+        prev = self.manifest["waves"].get(str(wave - 1), {})
+        self._record_wave(wave, {
+            "tables": {"links_out": links_out_path},
+            "counts": {"residual_flush": rows},
+            "host_lineage": [],
+            "wall_sec": 0.0,
+            **{key: prev.get(key) for key in SIDECAR_KEYS},
+        })
+
+    def _record_wave(self, wave: int, entry: dict) -> None:
+        self.manifest["waves"][str(wave)] = entry
         self.manifest["last_wave"] = wave
         self._commit_manifest()
 
     def load_seen_filter(self, wave: int | None = None):
-        """Seen-filter sidecar (bloom or cuckoo) of the latest (or given)
-        committed wave; None when the wave carried none."""
+        """Seen-filter sidecar of the latest (or given) committed wave; None
+        when the wave carried none, its file is gone, or its kind is not in
+        ``SEEN_FILTERS``."""
         last = self.manifest["last_wave"] if wave is None else wave
-        info = self.manifest["waves"].get(str(last))
-        if info and info.get("bloom") and os.path.exists(info["bloom"]):
-            if info.get("sidecar_kind") == "cuckoo":
-                from ..operators.cuckoo import PartitionedCuckoo
-
-                return PartitionedCuckoo.load(info["bloom"])
-            return PartitionedBloom.load(info["bloom"])
-        return None
+        info = self.manifest["waves"].get(str(last)) or {}
+        cls = SEEN_FILTERS.get(info.get("sidecar_kind"))
+        if cls is None or not info.get("bloom") or not os.path.exists(info["bloom"]):
+            return None
+        return cls.load(info["bloom"])
 
     def sharded_dir(self, wave: int | None = None) -> str | None:
         """Latest (or given) committed wave's file-per-bucket sidecar dir,
@@ -202,3 +222,22 @@ class Warehouse:
 
     def wave_counts(self, wave: int) -> dict:
         return self.manifest["waves"][str(wave)]["counts"]
+
+
+def uncrawled_links(df: DataFrame, link_type: Column) -> DataFrame:
+    """links_out rows for links emitted but not crawled (a wave's newly
+    rejected links, the depth-mode residual flush): no response metadata
+    and no politeness slot."""
+    return df.select(
+        F.col("url"),
+        F.col("url_hash"),
+        F.col("host"),
+        F.lit(None).cast("string").alias("content_type"),
+        F.lit(None).cast("map<string,string>").alias("headers"),
+        F.lit(False).alias("crawled"),
+        F.lit(None).cast("string").alias("ipv4"),
+        F.lit(None).cast("string").alias("ipv6"),
+        link_type.alias("link_type"),
+        F.lit(False).alias("contains_words"),
+        F.lit(None).cast("int").alias("slot"),
+    )

@@ -6,7 +6,7 @@ Maps the reference's wave body (src/crawler.rs:53-99 / 135-192) to:
     scheduled --left join pages (fetch sim)--> fetched
     fetched --MIME gate--> gated --pandas UDFs--> contains_words, child links
     children (+ sitemap children on wave 0 of no-depth) --wave dedup-->
-      --bloom prefilter + anti-join seen--> next frontier candidates
+      --seen-filter prefilter + anti-join seen--> next frontier candidates
       --anti-join rejected--> newly rejected (emitted once)
     writes: links_out (self rows with their slot + rejected rows),
             frontier_{w+1} = candidates ∪ deferred, extracted_text; lineage
@@ -27,13 +27,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import CrawlConfig
-from ..operators.bloom import PartitionedBloom, bloom_prefiltered_anti_join
+from ..operators.bloom import SEEN_FILTERS
 from ..operators.extract import extract_child_links, mime_ok
 from ..operators.fetch import fetch_join, with_host, with_url_hash
 from ..operators.politeness import schedule_wave
-from ..operators.routing import anti_join_scan, dedup_wave, route_children
+from ..operators.routing import (
+    broadcast_tag,
+    dedup_wave,
+    prefiltered_anti_join,
+    route_children,
+)
 from ..functions.udfs import link_type_col, make_contains_words_udf
-from .state import Warehouse
+from .state import Warehouse, uncrawled_links
 
 
 def cfg_fingerprint(cfg: CrawlConfig) -> str:
@@ -55,7 +60,7 @@ def run_wave(
     pages: DataFrame,
     wave: int,
     cfg: CrawlConfig,
-    bloom: PartitionedBloom | None,
+    bloom,
     robots: DataFrame | None = None,
     extra_children: DataFrame | None = None,
     content_type_expr=None,
@@ -239,11 +244,11 @@ def run_wave(
     # no-false-negative contract the result is identical with or without the
     # probe. The manifest's exact per-wave scheduled counts give the
     # cumulative size for free. Above the gate the wave probes the committed
-    # sidecar (it covers waves < wave; bloom and cuckoo share the prefilter
-    # contract): seen_probe="sharded" loads one bucket file per task (the
-    # 10^10-URL form) and falls back to the broadcast probe when no sharded
-    # sidecar is committed (a warehouse written in broadcast mode). The
-    # sidecar UPDATE below is unconditional either way (resume contract).
+    # sidecar (it covers waves < wave): seen_probe="sharded" loads one bucket
+    # file per task (the 10^10-URL form) and falls back to the broadcast
+    # probe when no sharded sidecar is committed (a warehouse written in
+    # broadcast mode). The sidecar UPDATE below is unconditional either way
+    # (resume contract).
     from ..config import small_enough_to_broadcast
 
     _seen_rows = sum(
@@ -254,9 +259,7 @@ def run_wave(
     _sharded_dir = wh.sharded_dir() if cfg.seen_probe_mode() == "sharded" else None
     if bloom is None or small_enough_to_broadcast(_seen_rows):
         seen_probe = "exact"
-        sc_frontier = anti_join_scan(
-            sc_frontier, seen_prev, ["url_hash", "url"], small_rows=extracted
-        )
+        sc_frontier = prefiltered_anti_join(sc_frontier, seen_prev, None, extracted)
     elif _sharded_dir is not None:
         from ..operators.sharded_probe import sharded_prefiltered_anti_join
 
@@ -264,17 +267,10 @@ def run_wave(
         sc_frontier = sharded_prefiltered_anti_join(
             spark, sc_frontier, seen_prev, _sharded_dir, candidates_rows=extracted
         )
-    elif bloom.kind == "cuckoo":
-        from ..operators.cuckoo import cuckoo_prefiltered_anti_join
-
-        seen_probe = "cuckoo"
-        sc_frontier = cuckoo_prefiltered_anti_join(
-            spark, sc_frontier, seen_prev, bloom, candidates_rows=extracted
-        )
     else:
-        seen_probe = "bloom"
-        sc_frontier = bloom_prefiltered_anti_join(
-            spark, sc_frontier, seen_prev, bloom, candidates_rows=extracted
+        seen_probe = bloom.kind
+        sc_frontier = prefiltered_anti_join(
+            sc_frontier, seen_prev, broadcast_tag(spark, bloom), extracted
         )
 
     sched_keys = scheduled.select("url_hash", "url")
@@ -328,22 +324,11 @@ def run_wave(
         F.lit(wave + 1).cast("int").alias("wave"), "url", "url_hash", "host", "priority"
     )
 
-    # -- rejected links become output rows (crawled=false, no metadata) -----
-    rejected_links = newly_rejected.select(
-        F.col("url"),
-        F.col("url_hash"),
-        F.col("host"),
-        F.lit(None).cast("string").alias("content_type"),
-        F.lit(None).cast("map<string,string>").alias("headers"),
-        F.lit(False).alias("crawled"),
-        F.lit(None).cast("string").alias("ipv4"),
-        F.lit(None).cast("string").alias("ipv6"),
-        F.col("link_type"),
-        F.lit(False).alias("contains_words"),
-        F.lit(None).cast("int").alias("slot"),
-        F.lit(True).alias("fetched"),  # unused for rejected; kept for schema
+    # -- rejected links become output rows (crawled=false, no metadata; their
+    # ``fetched`` is NULL and never counted) ---------------------------------
+    links_out = self_links.unionByName(
+        uncrawled_links(newly_rejected, F.col("link_type")), allowMissingColumns=True
     )
-    links_out = self_links.unionByName(rejected_links)
 
     # -- writes (the wave barrier) -----------------------------------------
     from pyspark.sql import Observation
@@ -414,35 +399,21 @@ def run_wave(
         return wh.write_wave_table(table, wv, df_)
 
     # seen-filter build job, defined here so it can OVERLAP the write pool
-    # below (it reads only the already-filled scheduled cache). Both kinds
-    # build distributed (one small table/bitmap per bucket reaches the
-    # driver, never the URLs); the rows are merged into a copy of the
-    # running filter after every write has succeeded, and the copy replaces
-    # the running filter's state only once commit_wave (which saves it) has
-    # returned, so a failed wave leaves the filter as the last commit left it.
+    # below (it reads only the already-filled scheduled cache). The build is
+    # distributed (one small table/bitmap per bucket reaches the driver,
+    # never the URLs); the rows are merged into a copy of the running filter
+    # after every write has succeeded, and the copy replaces the running
+    # filter's state only once commit_wave (which saves it) has returned, so
+    # a failed wave leaves the filter as the last commit left it. The sidecar
+    # is a cache of the seen view: with no committed filter of the requested
+    # kind (wave 0, or a resume over waves committed with another filter,
+    # none, or a lost sidecar file) the wave builds it from the whole seen
+    # view plus its own urls, so the filter it commits covers every crawled
+    # url.
     new_seen = scheduled.select("url_hash", "url")
-    kind = cfg.seen_filter_kind()
-    _filter_build = _filter_merge = None
-    if kind == "bloom":
-        if bloom is None:
-            bloom = PartitionedBloom(cfg.n_buckets)
-        from ..operators.bloom import build_bucket_bitmaps
-
-        def _filter_build(b=bloom):
-            return build_bucket_bitmaps(new_seen, b.n_buckets, b.m_bits, b.k)
-
-        _filter_merge = PartitionedBloom.merge_spark_bitmaps
-    elif kind == "cuckoo":
-        if bloom is None:
-            from ..operators.cuckoo import PartitionedCuckoo
-
-            bloom = PartitionedCuckoo(cfg.n_buckets)
-        from ..operators.cuckoo import build_bucket_tables, merge_spark_tables
-
-        def _filter_build(b=bloom):
-            return build_bucket_tables(new_seen, b.n_buckets, b.m)
-
-        _filter_merge = merge_spark_tables
+    if bloom is None and cfg.seen_filter_kind() is not None:
+        bloom = SEEN_FILTERS[cfg.seen_filter_kind()](cfg.n_buckets)
+        new_seen = new_seen.unionByName(seen_prev)
 
     table_paths = {}
     # one pool slot per job: every input is cached, so the jobs only
@@ -460,8 +431,8 @@ def run_wave(
         }
         f_frontier_in = pool.submit(_timed, "c_frontier_in", frontier.count)
         f_filter = (
-            pool.submit(_timed, "bloom_update", _filter_build)
-            if _filter_build is not None
+            pool.submit(_timed, "bloom_update", lambda: bloom.build_rows(new_seen))
+            if bloom is not None
             else None
         )
         for table, fut in futs.items():
@@ -498,9 +469,9 @@ def run_wave(
         "new_rejected": new_rejected_n,
     }
     new_filter = bloom
-    if _filter_merge is not None:
+    if bloom is not None:
         new_filter = copy.deepcopy(bloom)
-        _filter_merge(new_filter, filter_rows)
+        new_filter.merge(filter_rows)
     wh.commit_wave(
         wave, table_paths, counts, host_lineage, time.time() - t0, new_filter, timings,
         sharded=cfg.seen_probe_mode() == "sharded", seen_probe=seen_probe,
