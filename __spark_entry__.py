@@ -608,13 +608,13 @@ def q_crawl_revalidate_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_crawl_charset_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Effective decode charset (operators/extract.detect_charset): BOMs
+    """Effective decode charset (operators/canonical.detect_charset): BOMs
     cycle on doc_id % 4 (UTF-8 / UTF-16LE / none), the Content-Type
     charset param on doc_id % 3 (ISO-8859-1 / none / NULL header), a
     <meta charset> on doc_id % 5 — so every WHATWG precedence branch
     (BOM > header > meta > utf-8 default) occurs. The oracle predicts all
     four columns arithmetically."""
-    from webcrawler_woc_spark.operators.extract import detect_charset
+    from webcrawler_woc_spark.operators.canonical import detect_charset
 
     d = F.col("doc_id")
     bom_bytes = (
@@ -2293,7 +2293,7 @@ def q_crawl_trap_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_crawl_sniff_mime(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Magic-byte MIME sniffing (operators/extract.sniff_content_type):
+    """Magic-byte MIME sniffing (operators/canonical.sniff_content_type):
     payloads carry real magic prefixes (PNG/GIF/PDF/JPEG/ZIP) or an HTML
     tag chosen by doc_id % 6, while the CLAIMED content type cycles on
     (doc_id div 6) % 3 — INDEPENDENT of the payload family (doc_id % 3
@@ -2301,7 +2301,7 @@ def q_crawl_sniff_mime(spark: SparkSession, sf_dir: str) -> DataFrame:
     mismatch and leaving the agree branch unverified) — so both
     type_mismatch values occur. The oracle predicts sniffed type and
     mismatch arithmetically."""
-    from webcrawler_woc_spark.operators.extract import sniff_content_type
+    from webcrawler_woc_spark.operators.canonical import sniff_content_type
 
     d = F.col("doc_id")
     magic = (
@@ -2733,11 +2733,11 @@ def q_graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_crawl_page_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Structured page metadata (operators/extract.page_metadata): title
+    """Structured page metadata (operators/canonical.page_metadata): title
     always present, meta description on doc_id % 3 == 0, og:title on
     % 4 == 0, html lang on % 5 (en / de / absent) — presence and NULL
     paths all arithmetic-predicted."""
-    from webcrawler_woc_spark.operators.extract import page_metadata
+    from webcrawler_woc_spark.operators.canonical import page_metadata
 
     d = F.col("doc_id")
     ds = d.cast("string")
@@ -2766,11 +2766,11 @@ def q_crawl_page_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_crawl_nofollow_links(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Nofollow outlink profile (operators/extract.nofollow_stats): pages
+    """Nofollow outlink profile (operators/canonical.nofollow_stats): pages
     carry 1 + doc_id % 4 anchor tags — positions 1 and 2 nofollow'd (one
     with a multi-token rel, exercising the word boundary), position 3 a
     decoy 'nofollowish'. Arithmetic oracle."""
-    from webcrawler_woc_spark.operators.extract import nofollow_stats
+    from webcrawler_woc_spark.operators.canonical import nofollow_stats
 
     d = F.col("doc_id")
     html_s = F.concat(
@@ -2930,11 +2930,11 @@ def q_pipeline_host_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_crawl_http_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Header-block parsing (operators/extract.parse_header_block):
+    """Header-block parsing (operators/canonical.parse_header_block):
     synthetic response blocks with a status line (skipped), cased names
     and values (names lowercase, values preserved), and an obs-fold
     continuation on doc_id % 5 == 0. Arithmetic oracle."""
-    from webcrawler_woc_spark.operators.extract import parse_header_block
+    from webcrawler_woc_spark.operators.canonical import parse_header_block
 
     d = F.col("doc_id")
     ds = d.cast("string")

@@ -137,9 +137,9 @@ def main(argv: list[str] | None = None) -> int:
         "--seen-filter", choices=(*SEEN_FILTERS, "none"), default="bloom",
         help="seen-set prefilter sketch ahead of the exact anti-join: bloom "
              "(default), cuckoo (deletable fingerprints; recrawl expiry) or "
-             "none (exact anti-join only, no sidecar). A warehouse resumes "
-             "under any choice: the first resumed wave rebuilds the sidecar "
-             "from the seen set",
+             "none (exact anti-join only). A sidecar is kept only above the "
+             "--seen-probe size gate; a resumed wave that needs one of "
+             "another kind rebuilds it from the seen set",
     )
     ap.add_argument(
         "--seen-probe", choices=("broadcast", "sharded"), default="broadcast",
@@ -148,9 +148,9 @@ def main(argv: list[str] | None = None) -> int:
              "scale); sharded keeps one sidecar file per hash bucket and "
              "each probe task loads only its own bucket (the 10^10-URL "
              "form, where the merged filter is too big to broadcast). "
-             "Neither mode probes while the seen set has at most "
-             "config.BROADCAST_MAX_ROWS urls: the exact anti-join alone "
-             "is cheaper there",
+             "No wave probes, or builds a filter, while the seen set (with "
+             "its own urls, for the build) has at most "
+             "config.BROADCAST_MAX_ROWS urls: the exact anti-join is cheaper",
     )
     ap.add_argument(
         "--sitemap-xml", action="store_true",

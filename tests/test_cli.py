@@ -172,3 +172,76 @@ class TestCliEndToEnd:
         # payload is the golden extracted text shape
         seed_text = next(r.text for r in parsed if r.url.endswith("/page/20"))
         assert seed_text.startswith("Doc 20\n")
+
+
+def _links_json(spark, out_dir: str) -> list:
+    """Every -o JSON row with its (link_type, crawled) partition."""
+    return sorted(map(repr, spark.read.json(out_dir).collect()))
+
+
+class TestKillResume:
+    def test_sigkill_mid_wave_then_rerun_matches_uninterrupted(
+        self, spark, pages_path, tmp_path
+    ):
+        """``kill -9`` the whole crawl (driver, JVM and Python workers) once
+        wave 1 has written its links_out table, then rerun with the same
+        --warehouse: the resumed crawl ends in the state of an uninterrupted
+        one. The kill may land before or after wave 1's manifest commit; a
+        wave without a commit runs again in full. Only one child runs at a
+        time."""
+        import signal
+        import time
+
+        from webcrawler_woc_spark.plans.crawl import read_crawl_order, read_seen
+        from webcrawler_woc_spark.plans.state import Warehouse
+
+        (tmp_path / "wl.txt").write_text("host0.example\nhost1.example\nhost2.example\n")
+
+        def args(run: str) -> list[str]:
+            return [
+                "http://host0.example/page/20", "-d", "3", "--timeout", "0",
+                "-w", str(tmp_path / "wl.txt"), "--pages", pages_path,
+                "--warehouse", str(tmp_path / run / "wh"), "-o", str(tmp_path / run / "out"),
+            ]
+
+        def state(run: str):
+            wh = Warehouse(spark, str(tmp_path / run / "wh"))
+            seen = sorted(r["url"] for r in read_seen(wh).collect())
+            order = sorted(tuple(r) for r in read_crawl_order(wh).collect())
+            return seen, order, _links_json(spark, str(tmp_path / run / "out"))
+
+        ref = _run_main(args("ref"), cwd=str(tmp_path))
+        assert ref.returncode == 0, ref.stderr[-2000:]
+
+        marker = tmp_path / "killed" / "wh" / "links_out" / "wave=1" / "_SUCCESS"
+        proc = subprocess.Popen(
+            [sys.executable, os.path.join(REPO, "main.py"), *args("killed")],
+            cwd=str(tmp_path),
+            env={**os.environ, "SPARK_GRAFT_CPUS": "4"},
+            stdout=subprocess.DEVNULL,
+            stderr=subprocess.DEVNULL,
+            start_new_session=True,  # its own process group: the JVM dies too
+        )
+        try:
+            deadline = time.time() + 420
+            while not marker.exists():
+                assert proc.poll() is None, "the crawl ended before wave 1 wrote links_out"
+                assert time.time() < deadline, "wave 1 never wrote links_out"
+                time.sleep(0.05)
+        finally:
+            try:
+                os.killpg(proc.pid, signal.SIGKILL)
+            except ProcessLookupError:
+                pass
+            proc.wait()
+        with open(tmp_path / "killed" / "wh" / "manifest.json") as f:
+            assert json.load(f)["last_wave"] in (0, 1)  # wave 2 never ran
+
+        rerun = _run_main(args("killed"), cwd=str(tmp_path))
+        assert rerun.returncode == 0, rerun.stderr[-2000:]
+        assert state("killed") == state("ref")
+        for run in ("ref", "killed"):
+            for _, dirs, files in os.walk(tmp_path / run / "wh"):
+                for name in dirs + files:
+                    assert not name.startswith("staging_wave_"), name
+                    assert not name.endswith(".npz") and "_sharded_wave_" not in name, name

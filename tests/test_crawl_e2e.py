@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from webcrawler_woc_spark.config import CrawlConfig
 from webcrawler_woc_spark.oracle.pyoracle import crawl_oracle
 from webcrawler_woc_spark.plans.crawl import crawl, read_crawl_order, read_links_out, read_seen
-from webcrawler_woc_spark.plans.state import Warehouse
+from webcrawler_woc_spark.plans.state import SIDECAR_KEYS, Warehouse
 from webcrawler_woc_spark.sources.corpus import pages_from_documents
 
 SEEDS = [("http://host0.example/page/0", 1.0)]
@@ -382,9 +382,9 @@ class TestBroadcastFallbackEquivalence:
 class TestSeenProbeGate:
     """One size gate decides whether a wave probes the seen filter, for every
     filter kind and probe mode: while the cumulative seen set is at most
-    BROADCAST_MAX_ROWS the wave runs the exact anti-join alone. Either way
-    the crawl equals a crawl with no filter at all, every wave still commits
-    its sidecar (and its sharded directory in sharded mode), and the
+    BROADCAST_MAX_ROWS the wave runs the exact anti-join alone, and a wave
+    whose seen set stays below the gate builds, loads and saves no filter.
+    Either way the crawl equals a crawl with no filter at all, and the
     manifest records which path each wave took."""
 
     COMBOS = [
@@ -444,25 +444,32 @@ class TestSeenProbeGate:
     def test_below_gate_never_probes(
         self, spark, pages, unfiltered, probe_calls, monkeypatch, kind, probe
     ):
-        loads = []
-        real_load = Warehouse.load_seen_filter
+        from webcrawler_woc_spark.operators import bloom, cuckoo
 
-        def spy_load(self, *a, **kw):
-            loads.append(a)
-            return real_load(self, *a, **kw)
+        calls = []
+        for owner, name in (
+            (Warehouse, "load_seen_filter"),
+            (bloom, "build_bucket_bitmaps"),
+            (cuckoo, "build_bucket_tables"),
+        ):
+            real = getattr(owner, name)
 
-        monkeypatch.setattr(Warehouse, "load_seen_filter", spy_load)
+            def spy(*a, _real=real, _name=name, **kw):
+                calls.append(_name)
+                return _real(*a, **kw)
+
+            monkeypatch.setattr(owner, name, spy)
         with tempfile.TemporaryDirectory() as tmp:
             seen, order, waves = self._crawl(spark, pages, tmp, kind, probe)
-            for info in waves:
-                assert info["sidecar_kind"] == kind and os.path.exists(info["bloom"])
-                assert (info["sharded_dir"] is not None) == (probe == "sharded")
+            entries = sorted(os.listdir(tmp))
+        for info in waves:
+            assert {k: info[k] for k in SIDECAR_KEYS} == dict.fromkeys(SIDECAR_KEYS)
+        # no sidecar file or directory, no filter build, no sidecar load
+        assert entries == ["extracted_text", "frontier", "links_out", "manifest.json"]
+        assert calls == []
         assert probe_calls == []
         assert [w["seen_probe"] for w in waves] == ["exact"] * 3
         assert (seen, order) == unfiltered[:2]
-        # crawl() loads the sidecar at start and after wave 0 of a fresh
-        # warehouse; later waves reuse the filter run_wave committed
-        assert len(loads) == 2
         # host lineage (folded into the fetched-cache fill) matches the crawl
         for w, info in enumerate(waves):
             per_host = {}

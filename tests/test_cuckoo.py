@@ -148,9 +148,10 @@ class TestCuckooSeenFilterInCrawl:
     the sidecar must persist/reload as a cuckoo, and a completed warehouse
     must no-op on rerun."""
 
-    def test_crawl_parity_and_sidecar_roundtrip(self, spark, sf_dir):
+    def test_crawl_parity_and_sidecar_roundtrip(self, spark, sf_dir, monkeypatch):
         import tempfile
 
+        import webcrawler_woc_spark.config as cfgmod
         from webcrawler_woc_spark.config import CrawlConfig
         from webcrawler_woc_spark.operators.cuckoo import PartitionedCuckoo
         from webcrawler_woc_spark.plans.crawl import crawl, read_crawl_order
@@ -161,6 +162,8 @@ class TestCuckooSeenFilterInCrawl:
         pages.count()
         seeds = [("http://host0.example/page/0", 1.0)]
         wl = [f"host{i}.example" for i in range(5)]
+        # only a wave whose seen set exceeds the probe gate keeps a sidecar
+        monkeypatch.setattr(cfgmod, "BROADCAST_MAX_ROWS", 0)
 
         def run(seen_filter, tmp):
             cfg = CrawlConfig(whitelist=wl, depth=2, n_buckets=8, seen_filter=seen_filter)

@@ -1,0 +1,27 @@
+"""The crawl engine is ``main.py``'s import closure inside the repository
+(``scripts/engine_size.py``). Operators that only the query catalogue calls
+live outside it, so the engine's size counts only what a crawl can run."""
+
+from __future__ import annotations
+
+import importlib.util
+import os
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _engine_closure() -> dict[str, int]:
+    spec = importlib.util.spec_from_file_location(
+        "engine_size", os.path.join(REPO, "scripts", "engine_size.py")
+    )
+    engine_size = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(engine_size)
+    return engine_size.closure(REPO, "main.py")
+
+
+def test_catalogue_page_probes_are_outside_the_engine():
+    sizes = _engine_closure()
+    assert "webcrawler_woc_spark.plans.wave" in sizes  # the closure is followed
+    assert "webcrawler_woc_spark.operators.extract" in sizes
+    for module in ("canonical", "recrawl"):
+        assert f"webcrawler_woc_spark.operators.{module}" not in sizes

@@ -61,7 +61,11 @@ class TestResume:
 
             assert _state(wh_b) == _state(wh_full)
 
-    def test_bloom_sidecar_reloaded_on_resume(self, spark, pages):
+    def test_bloom_sidecar_reloaded_on_resume(self, spark, pages, monkeypatch):
+        import webcrawler_woc_spark.config as cfgmod
+
+        # only a wave whose seen set exceeds the probe gate keeps a sidecar
+        monkeypatch.setattr(cfgmod, "BROADCAST_MAX_ROWS", 0)
         cfg = CrawlConfig(whitelist=WL, depth=2, n_buckets=8)
         with tempfile.TemporaryDirectory() as tmp:
             wh = Warehouse(spark, tmp)
@@ -167,14 +171,17 @@ class TestFailedWaveWrite:
     ):
         """A failure in wave 1 of a resumed crawl (one of the three table
         writes, the seen-filter sidecar commit_wave saves, or the seen-filter
-        build) leaves the in-memory seen filter untouched; retrying the wave
-        in the same process, with the same filter object, commits the
-        manifest and sidecar of an uninterrupted crawl."""
+        build) leaves the manifest and the committed sidecar untouched;
+        retrying the wave commits the manifest and sidecar of an
+        uninterrupted crawl. The probe gate is forced to 0 so every wave
+        keeps a sidecar."""
+        import webcrawler_woc_spark.config as cfgmod
         from webcrawler_woc_spark.operators import bloom as bloom_op
         from webcrawler_woc_spark.operators import cuckoo as cuckoo_op
         from webcrawler_woc_spark.plans.crawl import seed_frontier
         from webcrawler_woc_spark.plans.wave import run_wave
 
+        monkeypatch.setattr(cfgmod, "BROADCAST_MAX_ROWS", 0)
         where, failing_table = fail
         cfg = CrawlConfig(whitelist=WL, depth=2, n_buckets=8, seen_filter=kind)
         with tempfile.TemporaryDirectory() as t1, tempfile.TemporaryDirectory() as t2:
@@ -183,42 +190,39 @@ class TestFailedWaveWrite:
 
             wh = Warehouse(spark, t2)
             seed_frontier(spark, wh, SEEDS)
-            run_wave(spark, wh, pages, 0, cfg, None)
+            run_wave(spark, wh, pages, 0, cfg)
 
             wh = Warehouse(spark, t2)  # the resumed crawl
-            filt = wh.load_seen_filter()
-            before = _filter_arrays(filt, os.path.join(t2, "before.npz"))
-            if where == "table":
-                write = Warehouse.write_wave_table
+            before = _filter_arrays(wh.load_seen_filter(), os.path.join(t2, "before.npz"))
+            with monkeypatch.context() as mp:
+                if where == "table":
+                    write = Warehouse.write_wave_table
 
-                def failing(self, table, wave, df):
-                    if table == failing_table:
-                        raise _WriteFailed(table)
-                    return write(self, table, wave, df)
+                    def failing(self, table, wave, df):
+                        if table == failing_table:
+                            raise _WriteFailed(table)
+                        return write(self, table, wave, df)
 
-                monkeypatch.setattr(Warehouse, "write_wave_table", failing)
-            elif where == "sidecar":
-                def failing_save(self, path):
-                    raise _WriteFailed(path)
+                    mp.setattr(Warehouse, "write_wave_table", failing)
+                elif where == "sidecar":
+                    def failing_save(self, path):
+                        raise _WriteFailed(path)
 
-                monkeypatch.setattr(type(filt), "save", failing_save)
-            else:
-                def failing_build(*args):
-                    raise _WriteFailed("seen-filter build")
+                    mp.setattr(bloom_op.SEEN_FILTERS[kind], "save", failing_save)
+                else:
+                    def failing_build(*args):
+                        raise _WriteFailed("seen-filter build")
 
-                monkeypatch.setattr(bloom_op, "build_bucket_bitmaps", failing_build)
-                monkeypatch.setattr(cuckoo_op, "build_bucket_tables", failing_build)
-            with pytest.raises(_WriteFailed):
-                run_wave(spark, wh, pages, 1, cfg, filt)
-            monkeypatch.undo()
+                    mp.setattr(bloom_op, "build_bucket_bitmaps", failing_build)
+                    mp.setattr(cuckoo_op, "build_bucket_tables", failing_build)
+                with pytest.raises(_WriteFailed):
+                    run_wave(spark, wh, pages, 1, cfg)
             assert wh.last_wave == 0
-            _assert_same_arrays(_filter_arrays(filt, os.path.join(t2, "after.npz")), before)
-
-            run_wave(spark, wh, pages, 1, cfg, filt)
-            _assert_same_arrays(  # the committed wave's rows reached the filter
-                _filter_arrays(filt, os.path.join(t2, "retried.npz")),
-                _filter_arrays(wh.load_seen_filter(), os.path.join(t2, "committed.npz")),
+            _assert_same_arrays(
+                _filter_arrays(wh.load_seen_filter(), os.path.join(t2, "after.npz")), before
             )
+
+            run_wave(spark, wh, pages, 1, cfg)
             crawl(spark, wh, pages, SEEDS, cfg)  # depth reached: residual flush only
             assert _comparable_manifest(wh) == _comparable_manifest(wh_ref)
             _assert_same_arrays(
@@ -227,16 +231,31 @@ class TestFailedWaveWrite:
             )
 
 
-class TestMidWaveResume:
-    def test_crash_between_table_writes_skips_completed_tables(self, spark, pages):
-        """Simulate a crash AFTER some table writes but BEFORE the manifest
-        commit: rerunning the wave must (a) not rewrite the completed tables
-        (parquet _SUCCESS present), (b) recover exact counts for the skipped
-        observations, (c) commit a manifest identical to a clean run."""
-        import json
-        import os
+def _uncommit_wave0(wh) -> dict:
+    """Erase wave 0's manifest entry, as a kill after its table writes but
+    before its manifest commit leaves it; returns the tables' paths."""
+    manifest_path = os.path.join(wh.path, "manifest.json")
+    with open(manifest_path) as f:
+        m = json.load(f)
+    tables = m["waves"]["0"]["tables"]
+    del m["waves"]["0"]
+    m["last_wave"] = -1
+    with open(manifest_path, "w") as f:
+        json.dump(m, f)
+    return tables
 
-        from webcrawler_woc_spark.plans.wave import cfg_fingerprint, run_wave
+
+def _success_mtimes(tables: dict) -> dict:
+    return {t: os.path.getmtime(os.path.join(p, "_SUCCESS")) for t, p in tables.items()}
+
+
+class TestMidWaveResume:
+    """A wave killed between its table writes and its manifest commit is
+    invisible; its rerun rewrites all three tables and commits the counts of
+    a clean run."""
+
+    def test_crash_between_table_writes_skips_completed_tables(self, spark, pages):
+        from webcrawler_woc_spark.plans.wave import run_wave
 
         cfg = CrawlConfig(whitelist=WL, depth=1, n_buckets=8)
 
@@ -246,48 +265,25 @@ class TestMidWaveResume:
             crawl(spark, wh_ref, pages, SEEDS, cfg)
             ref_counts = wh_ref.wave_counts(0)
 
-            # crashed run: execute wave 0 fully, then erase the manifest
-            # entry and restore the staging sidecar (the commit is the atomic
-            # visibility point — this is exactly the state a kill between
-            # writes and commit leaves, except every table finished;
-            # partial-table crashes differ only in which writes get skipped)
+            # crashed run: execute wave 0 fully, then erase its manifest entry
             wh_b = Warehouse(spark, t2)
             crawl(spark, wh_b, pages, SEEDS, cfg)
             counts_first = wh_b.wave_counts(0)
-            manifest_path = os.path.join(wh_b.path, "manifest.json")
-            m = json.load(open(manifest_path))
-            tables = m["waves"]["0"]["tables"]
-            del m["waves"]["0"]
-            m["last_wave"] = -1
-            json.dump(m, open(manifest_path, "w"))
-            staging = os.path.join(wh_b.path, "staging_wave_0.json")
-            json.dump(
-                {"cfg_fp": cfg_fingerprint(cfg), "input_fp": "", "wave": 0},
-                open(staging, "w"),
-            )
-
-            mtimes = {
-                t: os.path.getmtime(os.path.join(p, "_SUCCESS"))
-                for t, p in tables.items()
-            }
+            _uncommit_wave0(wh_b)
 
             # rerun the wave in a FRESH Warehouse (manifest re-read)
             wh_c = Warehouse(spark, t2)
-            counts = run_wave(spark, wh_c, pages, 0, cfg, bloom=None)
+            counts = run_wave(spark, wh_c, pages, 0, cfg)
             assert counts == counts_first == ref_counts
-            for t, p in tables.items():
-                assert os.path.getmtime(os.path.join(p, "_SUCCESS")) == mtimes[t], (
-                    f"{t} was rewritten despite its _SUCCESS marker"
-                )
-            assert not os.path.exists(staging)  # spent after the commit
+            assert wh_c.wave_counts(0) == ref_counts
+            assert sorted(os.listdir(t2)) == [
+                "extracted_text", "frontier", "links_out", "manifest.json",
+            ]
 
     def test_changed_cfg_invalidates_crashed_attempt(self, spark, pages):
         """Leftover tables from a crashed attempt under a DIFFERENT cfg must
         be rewritten, not mixed into the resumed wave."""
-        import json
-        import os
-
-        from webcrawler_woc_spark.plans.wave import cfg_fingerprint, run_wave
+        from webcrawler_woc_spark.plans.wave import run_wave
 
         cfg_old = CrawlConfig(whitelist=WL, depth=1, n_buckets=8)
         cfg_new = CrawlConfig(whitelist=WL[:2], depth=1, n_buckets=8)
@@ -298,65 +294,33 @@ class TestMidWaveResume:
 
             wh_b = Warehouse(spark, t2)
             crawl(spark, wh_b, pages, SEEDS, cfg_old)  # crashed old-cfg run
-            manifest_path = os.path.join(wh_b.path, "manifest.json")
-            m = json.load(open(manifest_path))
-            tables = m["waves"]["0"]["tables"]
-            del m["waves"]["0"]
-            m["last_wave"] = -1
-            json.dump(m, open(manifest_path, "w"))
-            staging = os.path.join(wh_b.path, "staging_wave_0.json")
-            json.dump(
-                {"cfg_fp": cfg_fingerprint(cfg_old), "input_fp": "", "wave": 0},
-                open(staging, "w"),
-            )
-            mtimes = {
-                t: os.path.getmtime(os.path.join(p, "_SUCCESS")) for t, p in tables.items()
-            }
+            tables = _uncommit_wave0(wh_b)
+            mtimes = _success_mtimes(tables)
 
             wh_c = Warehouse(spark, t2)
-            counts = run_wave(spark, wh_c, pages, 0, cfg_new, bloom=None)
+            counts = run_wave(spark, wh_c, pages, 0, cfg_new)
             assert counts == wh_ref.wave_counts(0)  # new-cfg results, not stale
-            for t, p in tables.items():
-                assert os.path.getmtime(os.path.join(p, "_SUCCESS")) != mtimes[t], (
-                    f"{t} kept a stale old-cfg table"
-                )
+            for t, mtime in _success_mtimes(tables).items():
+                assert mtime != mtimes[t], f"{t} kept a stale old-cfg table"
 
     def test_changed_inputs_invalidate_crashed_attempt(self, spark, pages):
         """Same cfg but DIFFERENT inputs (seed list / corpus identity): the
-        sidecar's input fingerprint must invalidate the crashed attempt's
-        leftovers — cfg alone does not pin a wave's outputs."""
-        import json
-        import os
-
-        from webcrawler_woc_spark.plans.wave import cfg_fingerprint, run_wave
+        crashed attempt's leftovers are rewritten — cfg alone does not pin a
+        wave's outputs."""
+        from webcrawler_woc_spark.plans.wave import run_wave
 
         cfg = CrawlConfig(whitelist=WL, depth=1, n_buckets=8)
 
         with tempfile.TemporaryDirectory() as t2:
             wh_b = Warehouse(spark, t2)
             crawl(spark, wh_b, pages, SEEDS, cfg)  # "crashed" attempt
-            manifest_path = os.path.join(wh_b.path, "manifest.json")
-            m = json.load(open(manifest_path))
-            tables = m["waves"]["0"]["tables"]
-            del m["waves"]["0"]
-            m["last_wave"] = -1
-            json.dump(m, open(manifest_path, "w"))
-            staging = os.path.join(wh_b.path, "staging_wave_0.json")
-            # identical cfg_fp, but the crashed attempt ran with other inputs
-            json.dump(
-                {"cfg_fp": cfg_fingerprint(cfg), "input_fp": "other-inputs", "wave": 0},
-                open(staging, "w"),
-            )
-            mtimes = {
-                t: os.path.getmtime(os.path.join(p, "_SUCCESS")) for t, p in tables.items()
-            }
+            tables = _uncommit_wave0(wh_b)
+            mtimes = _success_mtimes(tables)
 
             wh_c = Warehouse(spark, t2)
-            run_wave(spark, wh_c, pages, 0, cfg, bloom=None, input_fp="")
-            for t, p in tables.items():
-                assert os.path.getmtime(os.path.join(p, "_SUCCESS")) != mtimes[t], (
-                    f"{t} kept a table from a different-input attempt"
-                )
+            run_wave(spark, wh_c, pages, 0, cfg)
+            for t, mtime in _success_mtimes(tables).items():
+                assert mtime != mtimes[t], f"{t} kept a table from a different-input attempt"
 
 
 class _StopBeforeWave(RuntimeError):

@@ -78,7 +78,7 @@ class TestOverflowSafety:
         assert got[2].n_content_lines == 0
 
     def test_nofollow_many_links(self, spark):
-        from webcrawler_woc_spark.operators.extract import nofollow_stats
+        from webcrawler_woc_spark.operators.canonical import nofollow_stats
 
         html = '<a href="/x">y</a>' * 3000
         pages = _pages(spark, [("u", html)])

@@ -136,7 +136,7 @@ class TestUrlTrapFlags:
 
 class TestSniffContentType:
     def test_magic_bytes_beat_the_claim(self, spark):
-        from webcrawler_woc_spark.operators.extract import sniff_content_type
+        from webcrawler_woc_spark.operators.canonical import sniff_content_type
 
         rows = [
             (1, bytes.fromhex("89504E470D0A1A0A") + b"xxxx", "text/html"),
@@ -161,7 +161,7 @@ class TestSniffContentType:
     def test_null_claim_is_mismatch_not_null(self, spark):
         """A fetched page with no Content-Type header must flag 1 (the
         contract is 0/1) — a plain != would null-propagate."""
-        from webcrawler_woc_spark.operators.extract import sniff_content_type
+        from webcrawler_woc_spark.operators.canonical import sniff_content_type
 
         df = spark.createDataFrame(
             [(1, b"%PDF-1.4", None)], "doc_id bigint, html binary, content_type string"
@@ -170,7 +170,7 @@ class TestSniffContentType:
         assert (r.sniffed_type, r.type_mismatch) == ("application/pdf", 1)
 
     def test_scan_only(self, spark):
-        from webcrawler_woc_spark.operators.extract import sniff_content_type
+        from webcrawler_woc_spark.operators.canonical import sniff_content_type
 
         df = spark.createDataFrame(
             [(1, b"<html>", "text/html")], "doc_id bigint, html binary, content_type string"
@@ -399,7 +399,7 @@ class TestResolveRedirects:
 
 class TestDetectCharset:
     def test_whatwg_precedence_and_sources(self, spark):
-        from webcrawler_woc_spark.operators.extract import detect_charset
+        from webcrawler_woc_spark.operators.canonical import detect_charset
 
         meta = b'<html><head><meta charset="windows-1252"></head>'
         rows = [
@@ -431,7 +431,7 @@ class TestDetectCharset:
         """Windows-1252 high bytes (invalid UTF-8) in the prescan window —
         exactly the pages this operator exists to catch — must not crash
         the strict Spark 4 decode."""
-        from webcrawler_woc_spark.operators.extract import detect_charset
+        from webcrawler_woc_spark.operators.canonical import detect_charset
 
         body = b"\x93curly quotes\x94 " * 100  # invalid UTF-8 throughout
         df = spark.createDataFrame(
@@ -442,7 +442,7 @@ class TestDetectCharset:
         assert (r.header_charset, r.charset) == ("windows-1252", "windows-1252")
 
     def test_scan_only(self, spark):
-        from webcrawler_woc_spark.operators.extract import detect_charset
+        from webcrawler_woc_spark.operators.canonical import detect_charset
 
         df = spark.createDataFrame(
             [(1, b"<html>", "text/html")], "doc_id bigint, html binary, content_type string"

@@ -45,7 +45,7 @@ class TestLabelPropagation:
 
 class TestPageMetadata:
     def test_all_fields(self, spark):
-        from webcrawler_woc_spark.operators.extract import page_metadata
+        from webcrawler_woc_spark.operators.canonical import page_metadata
 
         html = (
             '<html lang="en-GB"><head><title> My Page </title>'
@@ -61,7 +61,7 @@ class TestPageMetadata:
         assert r.html_lang == "en-GB"
 
     def test_missing_fields_are_null(self, spark):
-        from webcrawler_woc_spark.operators.extract import page_metadata
+        from webcrawler_woc_spark.operators.canonical import page_metadata
 
         df = spark.createDataFrame([("u", "<html><body>x")], "url string, html_s string")
         pages = df.select("url", F.encode("html_s", "utf-8").alias("html"))
@@ -71,7 +71,7 @@ class TestPageMetadata:
 
 class TestNofollowStats:
     def test_counts_and_word_boundary(self, spark):
-        from webcrawler_woc_spark.operators.extract import nofollow_stats
+        from webcrawler_woc_spark.operators.canonical import nofollow_stats
 
         html = (
             '<a href="/a">a</a>'
@@ -88,7 +88,7 @@ class TestNofollowStats:
         assert r.follow_ratio_ppm == (2 * 1_000_000) // 5
 
     def test_no_links(self, spark):
-        from webcrawler_woc_spark.operators.extract import nofollow_stats
+        from webcrawler_woc_spark.operators.canonical import nofollow_stats
 
         df = spark.createDataFrame([("u", "<p>plain</p>")], "url string, html_s string")
         pages = df.select("url", F.encode("html_s", "utf-8").alias("html"))

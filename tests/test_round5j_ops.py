@@ -38,7 +38,7 @@ class TestHostCapSample:
 
 class TestParseHeaderBlock:
     def test_basic_parse_and_case_rules(self, spark):
-        from webcrawler_woc_spark.operators.extract import parse_header_block
+        from webcrawler_woc_spark.operators.canonical import parse_header_block
 
         block = (
             "HTTP/1.1 200 OK\r\n"
@@ -55,7 +55,7 @@ class TestParseHeaderBlock:
         assert "http/1.1 200 ok" not in got
 
     def test_obs_fold_and_junk_lines(self, spark):
-        from webcrawler_woc_spark.operators.extract import parse_header_block
+        from webcrawler_woc_spark.operators.canonical import parse_header_block
 
         block = "A: one\r\n continued bit\r\nnocolonline\r\nB: two\r\n"
         df = spark.createDataFrame([("u", block)], "url string, header_block string")
@@ -67,7 +67,7 @@ class TestParseHeaderBlock:
         ]
 
     def test_tab_ows_stripped_and_tab_fold(self, spark):
-        from webcrawler_woc_spark.operators.extract import parse_header_block
+        from webcrawler_woc_spark.operators.canonical import parse_header_block
 
         block = "Content-Type:\ttext/html\t\r\n\tfolded\r\n"
         df = spark.createDataFrame([("u", block)], "url string, header_block string")
@@ -77,7 +77,7 @@ class TestParseHeaderBlock:
 
     def test_duplicate_urls_fold_attribution(self, spark):
         """Two captures of one url must not cross-attribute folds."""
-        from webcrawler_woc_spark.operators.extract import parse_header_block
+        from webcrawler_woc_spark.operators.canonical import parse_header_block
 
         b1 = "A: x\r\n fold1\r\n"
         b2 = "B: y\r\nC: z\r\n"
@@ -93,7 +93,7 @@ class TestParseHeaderBlock:
         assert len(folds2) == 1 and folds2[0].header_name == "a"
 
     def test_value_with_colons(self, spark):
-        from webcrawler_woc_spark.operators.extract import parse_header_block
+        from webcrawler_woc_spark.operators.canonical import parse_header_block
 
         block = "Location: https://x.example:8080/p\r\n"
         df = spark.createDataFrame([("u", block)], "url string, header_block string")

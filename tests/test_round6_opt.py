@@ -133,9 +133,10 @@ def test_fast_join_matches_stdlib_urljoin():
 
 def test_join_url_keeps_empty_query_and_fragment():
     """A relative href and the absolute spelling of its target are one URL
-    (WHATWG): an empty query or fragment is kept, however the href is
-    shaped (urljoin drops both, so these rels are not in the cross-check
-    above); a base without an authority joins to nothing."""
+    (WHATWG): an empty query or fragment, or an empty ';' params part of
+    the last segment, is kept, however the href is shaped (urljoin drops
+    all three, so these rels are not in the cross-check above); a base
+    without an authority joins to nothing."""
     from webcrawler_woc_spark.functions.urlnorm import join_url, parse_absolute
 
     base = "http://h.example/a/b?q=1#f"
@@ -150,6 +151,10 @@ def test_join_url_keeps_empty_query_and_fragment():
         ("?#g", "http://h.example/a/b?#g"),
         ("?x=1", "http://h.example/a/b?x=1"),
         ("#g", "http://h.example/a/b?q=1#g"),
+        (";", "http://h.example/a/;"),
+        ("p;", "http://h.example/a/p;"),
+        ("p;?x=1", "http://h.example/a/p;?x=1"),
+        (";#g", "http://h.example/a/;#g"),
     ]:
         assert join_url(base, rel) == parse_absolute(spelled) == spelled, rel
     assert join_url("mailto:foo", "bar") is None

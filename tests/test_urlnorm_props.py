@@ -8,10 +8,13 @@ reference parity; these properties pin the algebra on arbitrary inputs.
 
 from __future__ import annotations
 
+import re
 import string
+from unittest import mock
 
 from hypothesis import given, settings, strategies as st
 
+from webcrawler_woc_spark.functions import urlnorm
 from webcrawler_woc_spark.functions.urlnorm import (
     host_of,
     join_url,
@@ -32,6 +35,62 @@ hostish = st.text(
     max_size=30,
 )
 COMMON_SETTINGS = settings(max_examples=300, deadline=None)
+
+# URL-shaped strings that often take parse_absolute's already-canonical fast
+# paths (and often just miss them: upper case, ports, dot segments, '%',
+# unsafe characters), so the fast and strict paths see the same inputs
+tail_chars = string.ascii_letters + string.digits + "!$&'()*+,-./:;=@_|[]^~%?#{}` \"<>\\"
+fastish_urls = st.builds(
+    lambda scheme, host, sep, tail: scheme + host + sep + tail,
+    st.sampled_from(
+        ["http://", "https://", "ws://", "wss://", "ftp://", "HTTP://", "http:/",
+         "http:", "file://", "mailto:", "tel:", "MAILTO:", "data:"]
+    ),
+    st.text(alphabet=string.ascii_lowercase + string.digits + ".-Aü", max_size=12),
+    st.sampled_from(["/", "", "/./", "/../", ":80/", ":8080/", "?", "#"]),
+    st.text(alphabet=tail_chars, max_size=40),
+)
+# relative hrefs shaped like the ones pages carry
+rel_hrefs = st.builds(
+    lambda head, body: head + body,
+    st.sampled_from(["", "/", "./", "../", "../../", "//", "?", "#", "p:", "http://x.test/"]),
+    st.text(alphabet=tail_chars, max_size=40),
+)
+NEVER = re.compile(r"(?!)")
+
+
+def _strict_parse(raw: str) -> str | None:
+    """parse_absolute with both already-canonical fast paths switched off."""
+    with mock.patch.object(urlnorm, "_FAST_SPECIAL_RE", NEVER), mock.patch.object(
+        urlnorm, "_FAST_OPAQUE_RE", NEVER
+    ):
+        return parse_absolute(raw)
+
+
+def _urljoin_drops_an_empty_part(rel: str) -> bool:
+    """Shapes where urljoin drops an empty component that the fast join
+    keeps (WHATWG keeps all three): an empty query or fragment (the shapes
+    test_fast_join_matches_stdlib_urljoin skips), and RFC 2396 ';params'
+    left empty — the last path segment's first ';' ends it (urljoin
+    splits params off there and drops them when empty). The fast join's
+    answers for both are pinned in test_round6_opt.py
+    test_join_url_keeps_empty_query_and_fragment."""
+    clean = rel.translate(urlnorm._TAB_NL).strip()
+    before_fragment = clean.split("#", 1)[0]
+    path = before_fragment.split("?", 1)[0]
+    last = path.rsplit("/", 1)[-1]
+    return (
+        clean.endswith("#")
+        or before_fragment.endswith("?")
+        or (";" in last and last.index(";") == len(last) - 1)
+    )
+
+
+def _strict_join(base: str, rel: str) -> str | None:
+    """join_url with _fast_join switched off (every rel takes the urljoin
+    or query/fragment-only path)."""
+    with mock.patch.object(urlnorm, "_fast_join", lambda *args: None):
+        return join_url(base, rel)
 
 
 class TestParseAbsoluteProperties:
@@ -82,6 +141,31 @@ class TestParseAbsoluteProperties:
             assert out == absolute
         if out is not None:
             assert parse_absolute(out) == out  # canonical either way
+
+
+class TestFastPathsMatchStrict:
+    """The fast paths are shortcuts, never definitions: with them switched
+    off the kernel must give the same answer, on every input for
+    parse_absolute and on every rel but the _urljoin_drops_an_empty_part
+    shapes for join_url."""
+
+    @COMMON_SETTINGS
+    @given(st.one_of(fastish_urls, url_chars))
+    def test_parse_absolute_fast_paths_match_strict(self, raw):
+        assert parse_absolute(raw) == _strict_parse(raw)
+
+    @COMMON_SETTINGS
+    @given(
+        st.sampled_from(
+            ["http://h.example/", "http://h.example/a/b", "http://h.example/a/b/",
+             "http://h.example/a/b?q=1#f", "https://user@h.example:8080/x/y/z.html"]
+        ),
+        rel_hrefs,
+    )
+    def test_fast_join_matches_strict_join(self, base, rel):
+        if _urljoin_drops_an_empty_part(rel):
+            return
+        assert join_url(base, rel) == _strict_join(base, rel)
 
 
 class TestNormalizeHostProperties:

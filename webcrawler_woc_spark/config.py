@@ -55,9 +55,10 @@ class CrawlConfig:
     # which sketch prefilters the seen anti-join: a kind of
     # operators/bloom.SEEN_FILTERS — "bloom" (default) or "cuckoo" (deletable
     # fingerprints, the recrawl/TTL-expiry story, operators/cuckoo.py) — or
-    # "none" (exact anti-join only, no sidecar). Resuming with another kind
-    # than the warehouse was written with is allowed: the first resumed wave
-    # rebuilds the sidecar from the seen view
+    # "none" (exact anti-join only, no sidecar). A kind keeps a sidecar only
+    # above the probe gate (seen_probe). Resuming with another kind than the
+    # warehouse was written with is allowed: the first resumed wave above
+    # the gate rebuilds the sidecar from the seen view
     seen_filter: str = "bloom"
     # how the wave PROBES the seen filter: "broadcast" ships the whole merged
     # filter to every executor (cheap at sandbox scale); "sharded" writes the
@@ -66,8 +67,8 @@ class CrawlConfig:
     # the 10^10-URL form, where the merged filter (~20 GB at 16-bit cuckoo
     # fingerprints) is too big to broadcast or hold per executor. Neither
     # mode probes while the cumulative seen set is at most
-    # BROADCAST_MAX_ROWS: the wave then runs the exact anti-join alone (the
-    # sidecar is still written every wave)
+    # BROADCAST_MAX_ROWS: the wave then runs the exact anti-join alone, and
+    # only a wave whose seen set after it exceeds the gate keeps a sidecar
     seen_probe: str = "broadcast"
     timeout_ms: int | None = None
     # enforce robots.txt Disallow rules: frontier URLs whose path starts with

@@ -35,8 +35,9 @@ confirmed by the scan-only anti-join.
 
 Like the broadcast probe, it runs only once the cumulative seen set exceeds
 ``config.BROADCAST_MAX_ROWS`` (``plans/wave.py`` gates every probe mode);
-below that the wave runs the exact anti-join alone, and the sharded sidecar
-is still written every wave so a crawl that crosses the gate has it.
+below that the wave runs the exact anti-join alone and writes no sidecar.
+The last wave below the gate writes the first one, so the first wave above
+it has a sidecar to probe.
 """
 
 from __future__ import annotations

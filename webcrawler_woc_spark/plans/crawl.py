@@ -8,9 +8,13 @@ Maps the reference entry points (SURVEY.md §3):
   sitemap seeding on the first wave only, loop until the frontier empties.
 
 Resume: the warehouse manifest records the last committed wave; ``crawl``
-called on an existing warehouse continues from there (kill/resume test in
-tests/test_resume.py). Per the north rule every wave commit carries counts,
-per-host lineage and the seen-filter sidecar.
+called on an existing warehouse continues from there (tests/test_resume.py,
+and a ``kill -9`` of ``main.py`` in tests/test_cli.py). A wave that was
+running when the process died left no manifest entry, so it runs again in
+full. Per the north rule every wave commit carries counts and per-host
+lineage; a wave whose seen set exceeds the probe gate also commits the
+seen-filter sidecar (plans/wave.py), which the wave owns: ``crawl`` holds
+no filter.
 """
 
 from __future__ import annotations
@@ -28,18 +32,6 @@ from .wave import run_wave
 
 # safety bound on the waves of a no-depth crawl
 MAX_WAVES = 50
-
-
-def _load_seen_filter(wh: Warehouse, cfg: CrawlConfig):
-    """The committed seen-filter sidecar when it is of the requested kind;
-    None when no filter is requested, or none of that kind is committed (a
-    fresh warehouse, one written with another filter or none, or a sidecar
-    file that is gone). The next wave then rebuilds the requested kind from
-    the seen view (plans/wave.py), so the committed filter always covers
-    every crawled url."""
-    kind = cfg.seen_filter_kind()
-    side = wh.load_seen_filter() if kind is not None else None
-    return side if side is not None and side.kind == kind else None
 
 
 def seed_frontier(
@@ -88,36 +80,17 @@ def crawl(
 
         disallow = parse_robots_disallow(pages).cache()
 
-    bloom = _load_seen_filter(wh, cfg)
     seed_urls = [u for u, _ in seeds]
-
-    # Mid-wave-resume identity: cfg alone doesn't pin a wave's outputs — the
-    # same cfg with a different seed list or --pages corpus produces different
-    # tables, and a resumed wave must not mix them. Fingerprint the seeds and
-    # the corpus' input files (file-based sources list them deterministically;
-    # an in-memory corpus contributes its empty list plus the seeds, which
-    # still catches the seed-swap case) and thread it into the staging sidecar.
-    import hashlib as _hashlib
-    import json as _json
-
-    input_fp = _hashlib.sha256(
-        _json.dumps([sorted(pages.inputFiles()), sorted(map(list, seeds))]).encode()
-    ).hexdigest()
 
     summary = {"waves": 0, "scheduled_total": 0}
     if cfg.depth is not None:
-        last = -1
         for wave in range(start_wave, cfg.depth):
             # depth mode never consults sitemaps (crawler.rs:30-31)
             counts = run_wave(
-                spark, wh, pages, wave, cfg, bloom, robots, None, content_type_expr,
-                disallow, input_fp=input_fp,
+                spark, wh, pages, wave, cfg, robots, None, content_type_expr, disallow
             )
-            if bloom is None:
-                bloom = _load_seen_filter(wh, cfg)
             summary["waves"] += 1
             summary["scheduled_total"] += counts["scheduled"]
-            last = wave
         # residual flush (crawler.rs:102-108): leftover frontier emitted as
         # fresh uncrawled links, bypassing the rejected dedup.
         final_wave = cfg.depth
@@ -139,11 +112,8 @@ def crawl(
                 else None
             )
             counts = run_wave(
-                spark, wh, pages, wave, cfg, bloom, robots, extra, content_type_expr,
-                disallow, input_fp=input_fp,
+                spark, wh, pages, wave, cfg, robots, extra, content_type_expr, disallow
             )
-            if bloom is None:
-                bloom = _load_seen_filter(wh, cfg)
             summary["waves"] += 1
             summary["scheduled_total"] += counts["scheduled"]
             wave += 1

@@ -8,11 +8,11 @@ snapshot-commit contract is implemented directly over parquet):
 * a wave is visible only once the JSON manifest (written tmp + atomic rename)
   records it — readers NEVER list directories, they read exactly the paths
   the manifest names, so a crash mid-write leaves at most invisible orphans;
-* the manifest stores per-wave row counts, per-host lineage, wall time and
-  the seen-filter sidecar (``SIDECAR_KEYS``) => resumable from any completed
-  wave
-  (north rule: "resumable from checkpoint with per-partition lineage +
-  metrics").
+* the manifest stores per-wave row counts, per-host lineage and wall time
+  => resumable from any completed wave (north rule: "resumable from
+  checkpoint with per-partition lineage + metrics"); a wave whose seen set
+  exceeds the probe gate also records its seen-filter sidecar
+  (``SIDECAR_KEYS``).
 
 Tables (manifest ``format`` 2): each wave writes ``links_out`` (one row per
 discovered link — the wave's crawled urls with their politeness ``slot``,
@@ -39,9 +39,10 @@ FORMAT = 2
 
 # the manifest keys naming a wave's seen-filter sidecar: the whole-filter
 # .npz path ("bloom" for every kind, a legacy name), the filter's kind (a
-# SEEN_FILTERS key) and, in sharded mode, its file-per-bucket directory. The
-# sidecar is a cache of the seen view: a wave that finds none of the kind it
-# wants rebuilds it from the seen view (plans/wave.py).
+# SEEN_FILTERS key) and, in sharded mode, its file-per-bucket directory; all
+# None on a wave below the probe gate. The sidecar is a cache of the seen
+# view: a wave that needs one and finds none of the kind it wants rebuilds it
+# from the seen view (plans/wave.py).
 SIDECAR_KEYS = ("bloom", "sidecar_kind", "sharded_dir")
 
 # name -> (filter over links_out, projected columns); ``wave`` is the
@@ -146,8 +147,9 @@ class Warehouse:
     ) -> None:
         """Atomically record a completed wave (the Spark 'action barrier').
 
-        ``bloom`` is the wave's seen filter (any ``SEEN_FILTERS`` class, or
-        None); it is saved as the wave's sidecar. ``sharded=True``
+        ``bloom`` is the wave's seen filter (any ``SEEN_FILTERS`` class), saved
+        as the wave's sidecar, or None for a wave below the probe gate, which
+        records no sidecar. ``sharded=True``
         additionally writes the file-per-bucket layout
         (operators/sharded_probe.py) so the next wave can probe without
         broadcasting the merged filter. ``seen_probe`` records how the wave

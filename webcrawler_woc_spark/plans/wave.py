@@ -10,8 +10,10 @@ Maps the reference's wave body (src/crawler.rs:53-99 / 135-192) to:
       --anti-join rejected--> newly rejected (emitted once)
     writes: links_out (self rows with their slot + rejected rows),
             frontier_{w+1} = candidates ∪ deferred, extracted_text; lineage
-            and counts go to the manifest. seen, rejected, flagged and crawl
-            order are views of links_out (plans/state.py VIEWS).
+            and counts go to the manifest, and so does the seen-filter
+            sidecar once the seen set exceeds the probe gate. seen,
+            rejected, flagged and crawl order are views of links_out
+            (plans/state.py VIEWS).
 
 Determinism: all order comes from explicit sorts (politeness slots); the
 wave barrier is the parquet write action; within-wave seen semantics are the
@@ -20,7 +22,6 @@ race-free batch interpretation (see operators/routing.py docstring).
 
 from __future__ import annotations
 
-import copy
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -41,31 +42,16 @@ from ..functions.udfs import link_type_col, make_contains_words_udf
 from .state import Warehouse, uncrawled_links
 
 
-def cfg_fingerprint(cfg: CrawlConfig) -> str:
-    """Stable fingerprint of every cfg field that shapes wave outputs — the
-    mid-wave-resume staging sidecar records it so leftovers from a crashed
-    attempt under a DIFFERENT cfg are never mixed into a resumed wave."""
-    import dataclasses
-    import hashlib
-    import json
-
-    return hashlib.sha256(
-        json.dumps(dataclasses.asdict(cfg), sort_keys=True, default=str).encode()
-    ).hexdigest()
-
-
 def run_wave(
     spark: SparkSession,
     wh: Warehouse,
     pages: DataFrame,
     wave: int,
     cfg: CrawlConfig,
-    bloom,
     robots: DataFrame | None = None,
     extra_children: DataFrame | None = None,
     content_type_expr=None,
     disallow: DataFrame | None = None,
-    input_fp: str = "",
 ) -> dict:
     """Execute wave `wave`; commit all outputs; return counts."""
     t0 = time.time()
@@ -204,13 +190,13 @@ def run_wave(
     # broadcasts below.
     timings: dict[str, float] = {}
 
-    def _timed(key: str, fn):
+    def _timed(key: str, fn, *args):
         t = time.time()
-        out = fn()
+        out = fn(*args)
         timings[key] = round(time.time() - t, 3)
         return out
 
-    _timed("cache_scheduled", scheduled.count)  # politeness window only
+    scheduled_rows = _timed("cache_scheduled", scheduled.count)  # politeness window only
     extracted = _timed("cache_children", children.count)  # corpus scan + matched cache
 
     # deduped feeds BOTH routing branches (next-frontier and rejected) —
@@ -243,34 +229,55 @@ def run_wave(
     # the exact anti-join alone is strictly cheaper, and by the
     # no-false-negative contract the result is identical with or without the
     # probe. The manifest's exact per-wave scheduled counts give the
-    # cumulative size for free. Above the gate the wave probes the committed
-    # sidecar (it covers waves < wave): seen_probe="sharded" loads one bucket
-    # file per task (the 10^10-URL form) and falls back to the broadcast
-    # probe when no sharded sidecar is committed (a warehouse written in
-    # broadcast mode). The sidecar UPDATE below is unconditional either way
-    # (resume contract).
+    # cumulative size for free.
+    #
+    # The seen filter is a cache of the seen view, kept only where a wave
+    # will probe it: a wave whose seen set AFTER it exceeds the gate takes
+    # the committed sidecar of the requested kind (it covers waves < wave),
+    # or, with none committed (the wave that crosses the gate, or a resume
+    # over waves committed with another filter, none, or a lost sidecar
+    # file), builds one from the whole seen view plus its own urls; either
+    # way it merges its urls and commit_wave saves the result. So the last
+    # wave below the gate leaves the sidecar the first wave above it probes,
+    # and a wave below the gate builds, saves and loads no filter. The filter
+    # is private to the wave: a wave that fails before its commit changes no
+    # committed state.
     from ..config import small_enough_to_broadcast
 
-    _seen_rows = sum(
+    seen_rows = sum(
         int(info.get("counts", {}).get("scheduled", 0))
         for w, info in wh.manifest["waves"].items()
         if int(w) < wave
     )
-    _sharded_dir = wh.sharded_dir() if cfg.seen_probe_mode() == "sharded" else None
-    if bloom is None or small_enough_to_broadcast(_seen_rows):
+    kind = cfg.seen_filter_kind()
+    committed = filt = None
+    new_seen = scheduled.select("url_hash", "url")
+    if kind is not None and not small_enough_to_broadcast(seen_rows + scheduled_rows):
+        committed = wh.load_seen_filter()
+        if committed is not None and committed.kind != kind:
+            committed = None
+        filt = committed
+        if filt is None:
+            filt = SEEN_FILTERS[kind](cfg.n_buckets)
+            new_seen = new_seen.unionByName(seen_prev)
+    # seen_probe="sharded" loads one bucket file per task (the 10^10-URL
+    # form) and falls back to the broadcast probe when no sharded sidecar is
+    # committed (a warehouse written in broadcast mode)
+    sharded_dir = wh.sharded_dir() if cfg.seen_probe_mode() == "sharded" else None
+    if committed is None or small_enough_to_broadcast(seen_rows):
         seen_probe = "exact"
         sc_frontier = prefiltered_anti_join(sc_frontier, seen_prev, None, extracted)
-    elif _sharded_dir is not None:
+    elif sharded_dir is not None:
         from ..operators.sharded_probe import sharded_prefiltered_anti_join
 
         seen_probe = "sharded"
         sc_frontier = sharded_prefiltered_anti_join(
-            spark, sc_frontier, seen_prev, _sharded_dir, candidates_rows=extracted
+            spark, sc_frontier, seen_prev, sharded_dir, candidates_rows=extracted
         )
     else:
-        seen_probe = bloom.kind
+        seen_probe = committed.kind
         sc_frontier = prefiltered_anti_join(
-            sc_frontier, seen_prev, broadcast_tag(spark, bloom), extracted
+            sc_frontier, seen_prev, broadcast_tag(spark, committed), extracted
         )
 
     sched_keys = scheduled.select("url_hash", "url")
@@ -357,131 +364,49 @@ def run_wave(
         "frontier": ("w_frontier", wave + 1, next_frontier),
         "extracted_text": ("w_text", wave, extracted_text(gated)),
     }
-    # mid-wave resume: a wave that crashed BETWEEN table writes left some
-    # tables complete (parquet _SUCCESS marker) but no manifest entry. Wave
-    # outputs are deterministic given (frontier, corpus, cfg), so completed
-    # tables are skipped, only the missing ones are (re)written, and the
-    # manifest commit below still makes the wave visible atomically.
-    #
-    # The determinism premise is VALIDATED, not assumed: a staging sidecar
-    # records the cfg fingerprint AND the input fingerprint (seed list +
-    # corpus input files, computed by crawl()) before any write; if the
-    # crashed attempt ran under a different cfg OR different inputs (the CLI
-    # re-derives both from flags on every resume), its leftovers are ignored
-    # and every table is rewritten — otherwise a resumed wave could
-    # atomically commit a mix of old-run and new-run tables.
-    import json as _json
-    import os as _os
-
-    cfg_fp = cfg_fingerprint(cfg)
-    staging_path = _os.path.join(wh.path, f"staging_wave_{wave}.json")
-    stale_attempt = True
-    if _os.path.exists(staging_path):
-        try:
-            with open(staging_path) as f:
-                prior = _json.load(f)
-                stale_attempt = (
-                    prior.get("cfg_fp") != cfg_fp or prior.get("input_fp") != input_fp
-                )
-        except (OSError, ValueError):
-            stale_attempt = True
-    with open(staging_path + ".tmp", "w") as f:
-        _json.dump({"cfg_fp": cfg_fp, "input_fp": input_fp, "wave": wave}, f)
-    _os.replace(staging_path + ".tmp", staging_path)
-
-    skipped: set[str] = set()
-
-    def _write_or_skip(table: str, wv: int, df_) -> str:
-        path = wh.table_wave_path(table, wv)
-        if not stale_attempt and _os.path.exists(_os.path.join(path, "_SUCCESS")):
-            skipped.add(table)
-            return path
-        return wh.write_wave_table(table, wv, df_)
-
-    # seen-filter build job, defined here so it can OVERLAP the write pool
-    # below (it reads only the already-filled scheduled cache). The build is
-    # distributed (one small table/bitmap per bucket reaches the driver,
-    # never the URLs); the rows are merged into a copy of the running filter
-    # after every write has succeeded, and the copy replaces the running
-    # filter's state only once commit_wave (which saves it) has returned, so
-    # a failed wave leaves the filter as the last commit left it. The sidecar
-    # is a cache of the seen view: with no committed filter of the requested
-    # kind (wave 0, or a resume over waves committed with another filter,
-    # none, or a lost sidecar file) the wave builds it from the whole seen
-    # view plus its own urls, so the filter it commits covers every crawled
-    # url.
-    new_seen = scheduled.select("url_hash", "url")
-    if bloom is None and cfg.seen_filter_kind() is not None:
-        bloom = SEEN_FILTERS[cfg.seen_filter_kind()](cfg.n_buckets)
-        new_seen = new_seen.unionByName(seen_prev)
-
+    # a wave that crashed before its manifest commit is invisible: the rerun
+    # rewrites all three tables (mode overwrite) and commits them together.
     table_paths = {}
     # one pool slot per job: every input is cached, so the jobs only
     # contend for executor cores, and the block is bounded by the slowest
     # single write. The two metric/sidecar jobs (frontier-in count,
     # seen-filter build) read only filled caches / tiny parquet, so they
     # back-fill cores the write tail leaves idle (guide §2.6) instead of
-    # running sequentially after the pool.
+    # running sequentially after the pool. The filter build is distributed:
+    # one small table/bitmap per bucket reaches the driver, never the urls.
     with ThreadPoolExecutor(max_workers=len(writes) + 2) as pool:
         futs = {
-            table: pool.submit(
-                _timed, tkey, lambda t=table, w=wv, d=df_: _write_or_skip(t, w, d)
-            )
+            table: pool.submit(_timed, tkey, wh.write_wave_table, table, wv, df_)
             for table, (tkey, wv, df_) in writes.items()
         }
         f_frontier_in = pool.submit(_timed, "c_frontier_in", frontier.count)
         f_filter = (
-            pool.submit(_timed, "bloom_update", lambda: bloom.build_rows(new_seen))
-            if bloom is not None
+            pool.submit(_timed, "bloom_update", filt.build_rows, new_seen)
+            if filt is not None
             else None
         )
         for table, fut in futs.items():
             table_paths[table] = fut.result()
         frontier_in = f_frontier_in.result()
-        filter_rows = f_filter.result() if f_filter is not None else None
+        if f_filter is not None:
+            filt.merge(f_filter.result())
 
     # -- metrics (observed on the writes: exact, zero extra jobs) -----------
-    if "links_out" in skipped:
-        # the observation never fired (write skipped on mid-wave resume);
-        # recover the counts from the committed parquet. fetched was dropped
-        # before the write, but for crawled rows fetched <=> content_type
-        # is non-null (fetch_join nulls every response column on failure).
-        lo = spark.read.parquet(table_paths["links_out"])
-        n_scheduled = lo.filter(F.col("crawled")).count()
-        fetch_ok = lo.filter(F.col("crawled") & F.col("content_type").isNotNull()).count()
-        new_rejected_n = lo.filter(~F.col("crawled")).count()
-    else:
-        n_scheduled = int(obs_links.get["scheduled"])
-        fetch_ok = int(obs_links.get["fetch_ok"])
-        new_rejected_n = int(obs_links.get["rejected"])
-    if "frontier" in skipped:
-        new_frontier_n = spark.read.parquet(table_paths["frontier"]).count()
-    else:
-        new_frontier_n = int(obs_frontier.get["n"])
-
+    n_scheduled = int(obs_links.get["scheduled"])
+    fetch_ok = int(obs_links.get["fetch_ok"])
     counts = {
         "frontier_in": frontier_in,
         "scheduled": n_scheduled,
         "fetched": fetch_ok,
         "fetch_failed": n_scheduled - fetch_ok,
         "extracted_links": extracted,
-        "new_frontier": new_frontier_n,
-        "new_rejected": new_rejected_n,
+        "new_frontier": int(obs_frontier.get["n"]),
+        "new_rejected": int(obs_links.get["rejected"]),
     }
-    new_filter = bloom
-    if bloom is not None:
-        new_filter = copy.deepcopy(bloom)
-        new_filter.merge(filter_rows)
     wh.commit_wave(
-        wave, table_paths, counts, host_lineage, time.time() - t0, new_filter, timings,
+        wave, table_paths, counts, host_lineage, time.time() - t0, filt, timings,
         sharded=cfg.seen_probe_mode() == "sharded", seen_probe=seen_probe,
     )
-    if new_filter is not bloom:
-        vars(bloom).update(vars(new_filter))  # the wave is committed: so is its filter
-    try:
-        _os.remove(staging_path)  # the wave is committed; the sidecar is spent
-    except OSError:
-        pass
     scheduled.unpersist()
     if cfg.fetch_mode == "http":
         # matched is localCheckpoint()ed (not cached): DataFrame.unpersist

@@ -1,22 +1,13 @@
-"""Every StructType used by the engine — declared once, no schema inference.
-
-Mirrors the reference data model (SURVEY.md §1):
-* ``Link`` record  -> LINK_SCHEMA      (reference: src/extractors/links.rs:23-40)
-* frontier set     -> FRONTIER_SCHEMA  (reference: src/crawler.rs:43 `to_crawl`)
-* seen set         -> SEEN_SCHEMA      (reference: src/crawler.rs:44 `crawled`)
-* rejected set     -> REJECTED_SCHEMA  (reference: src/crawler.rs:45 `dont_crawl`)
-* pages corpus     -> PAGES_SCHEMA     (BASELINE.json input_hint)
+"""The pages-corpus schema, declared once so a JSON-lines corpus is read
+without schema inference (``main.py --pages-format json`` and the streaming
+sources). The warehouse tables take their schemas from the wave's
+DataFrames.
 """
 
 from __future__ import annotations
 
 from pyspark.sql.types import (
     BinaryType,
-    BooleanType,
-    DoubleType,
-    IntegerType,
-    LongType,
-    MapType,
     StringType,
     StructField,
     StructType,
@@ -31,77 +22,5 @@ PAGES_SCHEMA = StructType(
         StructField("html", BinaryType(), True),
         StructField("text", StringType(), True),
         StructField("lang", StringType(), True),
-    ]
-)
-
-# One row of the `links` DataFrame == reference `Link` struct (links.rs:23-40).
-# `host`/`crawled` are serde-skipped in the reference's JSON output but kept as
-# columns here (partitioning + routing need them).
-LINK_SCHEMA = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("url_hash", LongType(), False),
-        StructField("host", StringType(), True),
-        StructField("content_type", StringType(), True),
-        StructField("headers", MapType(StringType(), StringType()), True),
-        StructField("crawled", BooleanType(), False),
-        StructField("ipv4", StringType(), True),
-        StructField("ipv6", StringType(), True),
-        StructField("link_type", StringType(), False),  # Mail | PhoneNo | Other
-        StructField("contains_words", BooleanType(), False),
-    ]
-)
-
-FRONTIER_SCHEMA = StructType(
-    [
-        StructField("wave", IntegerType(), False),
-        StructField("url", StringType(), False),
-        StructField("url_hash", LongType(), False),
-        StructField("host", StringType(), True),
-        StructField("priority", DoubleType(), False),
-    ]
-)
-
-SEEN_SCHEMA = StructType(
-    [
-        StructField("url_hash", LongType(), False),
-        StructField("url", StringType(), False),
-        StructField("wave", IntegerType(), False),
-    ]
-)
-
-REJECTED_SCHEMA = SEEN_SCHEMA
-
-SEEDS_SCHEMA = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("priority", DoubleType(), False),
-    ]
-)
-
-HOSTLIST_SCHEMA = StructType([StructField("host", StringType(), False)])
-WORDLIST_SCHEMA = StructType([StructField("word", StringType(), False)])
-
-# Per-wave lineage + metrics (north_rule: per-partition lineage + metrics).
-METRICS_SCHEMA = StructType(
-    [
-        StructField("wave", IntegerType(), False),
-        StructField("frontier_in", LongType(), False),
-        StructField("fetched", LongType(), False),
-        StructField("fetch_failed", LongType(), False),
-        StructField("extracted_links", LongType(), False),
-        StructField("new_frontier", LongType(), False),
-        StructField("new_rejected", LongType(), False),
-        StructField("wall_sec", DoubleType(), False),
-    ]
-)
-
-# Crawl-order golden schema (SURVEY.md §7 ordering spec).
-CRAWL_ORDER_SCHEMA = StructType(
-    [
-        StructField("wave", IntegerType(), False),
-        StructField("host", StringType(), True),
-        StructField("slot", IntegerType(), False),
-        StructField("url", StringType(), False),
     ]
 )
