@@ -561,11 +561,11 @@ def q_graph_host_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_crawl_robots_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-page robots directives (operators/politeness.robots_meta_flags):
+    """Per-page robots directives (operators/fetch_policy.robots_meta_flags):
     five doc_id % 5 families cover meta noindex+nofollow, meta noindex
     alone, the X-Robots-Tag header channel, the 'none' shorthand, and a
     clean control; the oracle predicts both flags arithmetically."""
-    from webcrawler_woc_spark.operators.politeness import robots_meta_flags
+    from webcrawler_woc_spark.operators.fetch_policy import robots_meta_flags
 
     d = F.col("doc_id")
     meta = (
@@ -1565,7 +1565,8 @@ def q_crawl_robots_precedence(spark: SparkSession, sf_dir: str) -> DataFrame:
     block every page if group scoping were broken. The oracle predicts every
     verdict arithmetically from the doc-id digits (decoy rules must not
     contribute)."""
-    from webcrawler_woc_spark.operators.politeness import parse_robots_rules, robots_decision
+    from webcrawler_woc_spark.operators.fetch_policy import robots_decision
+    from webcrawler_woc_spark.operators.politeness import parse_robots_rules
 
     h = F.col("id").cast("string")
     robots = spark.range(10).select(
@@ -2613,10 +2614,10 @@ def q_crawl_url_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_crawl_retry_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Retry/backoff planning (operators/politeness.plan_retries):
+    """Retry/backoff planning (operators/fetch_policy.plan_retries):
     n_failures cycles 1..8, so the doubling, the 2^6 cap and the give-up
     gate (> 5) all occur. Pure arithmetic oracle."""
-    from webcrawler_woc_spark.operators.politeness import plan_retries
+    from webcrawler_woc_spark.operators.fetch_policy import plan_retries
 
     d = F.col("doc_id")
     failures = _docs(spark, sf_dir).select(
@@ -2794,7 +2795,7 @@ def q_crawl_adaptive_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     p95, x2, clamped to [1s, 30s]; the outliers show up in
     n_would_timeout. The oracle recomputes the identical order
     statistics."""
-    from webcrawler_woc_spark.operators.politeness import plan_adaptive_timeouts
+    from webcrawler_woc_spark.operators.fetch_policy import plan_adaptive_timeouts
 
     d = F.col("doc_id")
     fetches = _docs(spark, sf_dir).select(
@@ -3041,7 +3042,7 @@ def q_crawl_schedule_makespan(spark: SparkSession, sf_dir: str) -> DataFrame:
     schedule_makespan): ten hosts with arithmetic url counts and delays
     (every third host undeclared → default 500 ms); the critical host and
     the shared makespan column are arithmetic-predicted."""
-    from webcrawler_woc_spark.operators.politeness import schedule_makespan
+    from webcrawler_woc_spark.operators.fetch_policy import schedule_makespan
 
     h = F.col("h")
     hosts = (

@@ -25,3 +25,9 @@ def test_catalogue_page_probes_are_outside_the_engine():
     assert "webcrawler_woc_spark.operators.extract" in sizes
     for module in ("canonical", "recrawl"):
         assert f"webcrawler_woc_spark.operators.{module}" not in sizes
+
+
+def test_catalogue_fetch_policy_is_outside_the_engine():
+    sizes = _engine_closure()
+    assert "webcrawler_woc_spark.operators.politeness" in sizes
+    assert "webcrawler_woc_spark.operators.fetch_policy" not in sizes

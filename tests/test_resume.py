@@ -5,7 +5,9 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import tempfile
+import time
 
 import numpy as np
 import pytest
@@ -411,3 +413,116 @@ class TestSeenFilterRebuiltOnResume:
         # rebuilt it had none to probe, the later ones probe it
         assert [w["sidecar_kind"] for w in waves[3:]] == [then] * 3
         assert [w["seen_probe"] for w in waves[3:]] == ["exact", then, then]
+
+
+POLITE_DEPTH = 4
+POLITENESS = ("robots_delay", "robots_disallow")
+
+
+def _polite_cfg() -> CrawlConfig:
+    # robots Crawl-delay 1 + h % 3 makes the per-host budgets 3, 1 and 1
+    return CrawlConfig(
+        whitelist=GATE_WL, depth=POLITE_DEPTH, n_buckets=8, host_budget=3,
+        respect_disallow=True,
+    )
+
+
+def _polite_state(wh):
+    counts = [wh.manifest["waves"][str(w)]["counts"] for w in range(POLITE_DEPTH)]
+    return (*_full_state(wh), counts)
+
+
+class TestPolitenessCheckpoint:
+    """The robots Crawl-delay and Disallow tables are checkpoint state: the
+    first call parses them from the corpus and records them in the manifest;
+    a resume reads them back and parses no robots.txt."""
+
+    @pytest.fixture(scope="class")
+    def uninterrupted(self, spark, pages):
+        with tempfile.TemporaryDirectory() as tmp:
+            wh = Warehouse(spark, tmp)
+            crawl(spark, wh, pages, GATE_SEEDS, _polite_cfg())
+            tables = wh.manifest["politeness"]
+            assert tables == {name: os.path.join(wh.path, name) for name in POLITENESS}
+            return _polite_state(wh)
+
+    def test_resume_parses_no_robots(self, spark, pages, uninterrupted, monkeypatch):
+        from webcrawler_woc_spark.operators import politeness
+
+        def refuse(*args, **kwargs):
+            raise AssertionError("robots.txt parsed on resume")
+
+        with tempfile.TemporaryDirectory() as tmp:
+            _crawl_until(spark, Warehouse(spark, tmp), pages, _polite_cfg(), stop_wave=2)
+            for name in ("parse_robots_crawl_delay", "parse_robots_disallow"):
+                monkeypatch.setattr(politeness, name, refuse)
+            wh = Warehouse(spark, tmp)
+            crawl(spark, wh, pages, GATE_SEEDS, _polite_cfg())
+            assert _polite_state(wh) == uninterrupted
+
+    def test_manifest_without_politeness_resumes(self, spark, pages, uninterrupted):
+        with tempfile.TemporaryDirectory() as tmp:
+            _crawl_until(spark, Warehouse(spark, tmp), pages, _polite_cfg(), stop_wave=2)
+            # as a warehouse written before the politeness tables were kept
+            wh = Warehouse(spark, tmp)
+            for path in wh.manifest.pop("politeness").values():
+                shutil.rmtree(path)
+            wh._commit_manifest()
+            wh = Warehouse(spark, tmp)
+            crawl(spark, wh, pages, GATE_SEEDS, _polite_cfg())
+            assert sorted(wh.manifest["politeness"]) == sorted(POLITENESS)
+            assert _polite_state(wh) == uninterrupted
+
+
+class TestWarehouseReadsRunNoJob:
+    def test_reads_fire_no_job(self, spark, pages):
+        """Every warehouse read names its table's schema, so building the
+        read runs no schema-inference job."""
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+        cfg = CrawlConfig(whitelist=WL, depth=2, n_buckets=8)
+        with tempfile.TemporaryDirectory() as tmp:
+            wh = Warehouse(spark, tmp)
+            crawl(spark, wh, pages, SEEDS, cfg)
+            try:
+                sc.setJobGroup("warehouse-reads", "warehouse reads")
+                reads = [wh.read_frontier(1), wh.read_waves("seen"), wh.read_waves("rejected")]
+                # control: a read that infers its schema fires a job; jobs
+                # reach the tracker in order, so once the control's is
+                # there, any job of the reads above is too
+                sc.setJobGroup("inferring-read", "inferring read")
+                spark.read.parquet(wh.table_wave_path("frontier", 1))
+                deadline = time.time() + 30
+                while not tracker.getJobIdsForGroup("inferring-read") and time.time() < deadline:
+                    time.sleep(0.1)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+        assert all(df is not None for df in reads)
+        assert tracker.getJobIdsForGroup("inferring-read")
+        assert tracker.getJobIdsForGroup("warehouse-reads") == []
+
+
+def test_call_site_capture_is_off_unless_asked(spark):
+    """get_spark turns PySpark's call-site capture off; extra_conf turns it
+    back on. The setting is static, so the second half needs a new session,
+    made in a child process."""
+    import subprocess
+    import sys
+
+    key = "spark.python.sql.dataFrameDebugging.enabled"
+    assert spark.conf.get(key) == "false"
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    child = (
+        "import sys; sys.path.insert(0, sys.argv[1])\n"
+        "from webcrawler_woc_spark.session import get_spark\n"
+        "s = get_spark(master='local[1]', extra_conf={sys.argv[2]: 'true'})\n"
+        "print('VALUE', s.conf.get(sys.argv[2]))\n"
+        "s.stop()\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", child, repo, key],
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert "VALUE true" in out.stdout.splitlines()

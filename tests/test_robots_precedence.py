@@ -17,7 +17,8 @@ Disallow:
 
 
 def _decide(spark, paths):
-    from webcrawler_woc_spark.operators.politeness import parse_robots_rules, robots_decision
+    from webcrawler_woc_spark.operators.fetch_policy import robots_decision
+    from webcrawler_woc_spark.operators.politeness import parse_robots_rules
 
     robots = spark.createDataFrame([("h.example", ROBOTS)], "host string, text string")
     rules = parse_robots_rules(robots)
@@ -127,7 +128,8 @@ class TestDisallowGroupScoping:
 
 
 def test_other_host_rules_do_not_apply(spark):
-    from webcrawler_woc_spark.operators.politeness import parse_robots_rules, robots_decision
+    from webcrawler_woc_spark.operators.fetch_policy import robots_decision
+    from webcrawler_woc_spark.operators.politeness import parse_robots_rules
 
     robots = spark.createDataFrame([("other.example", ROBOTS)], "host string, text string")
     frontier = spark.createDataFrame(

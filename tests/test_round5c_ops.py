@@ -453,7 +453,7 @@ class TestDetectCharset:
 
 class TestRobotsMetaFlags:
     def test_channels_shorthand_and_word_bounds(self, spark):
-        from webcrawler_woc_spark.operators.politeness import robots_meta_flags
+        from webcrawler_woc_spark.operators.fetch_policy import robots_meta_flags
 
         def pg(meta, hdr=None):
             html = f"<html><head>{meta}</head>".encode()

@@ -67,7 +67,7 @@ class TestUrlPatterns:
 
 class TestPlanRetries:
     def test_backoff_doubles_and_caps(self, spark):
-        from webcrawler_woc_spark.operators.politeness import plan_retries
+        from webcrawler_woc_spark.operators.fetch_policy import plan_retries
 
         rows = [(f"http://h/p{n}", n, 1000000) for n in (1, 2, 3, 7, 8, 9)]
         df = spark.createDataFrame(rows, "url string, n_failures int, last_attempt_ms bigint")
@@ -84,7 +84,7 @@ class TestPlanRetries:
         assert all(got[n].give_up == 0 for n in (1, 2, 3, 7, 8, 9))
 
     def test_give_up_rows(self, spark):
-        from webcrawler_woc_spark.operators.politeness import plan_retries
+        from webcrawler_woc_spark.operators.fetch_policy import plan_retries
 
         df = spark.createDataFrame(
             [("http://h/a", 5, 10), ("http://h/b", 6, 10)],

@@ -98,7 +98,7 @@ class TestNofollowStats:
 
 class TestAdaptiveTimeouts:
     def test_nearest_rank_and_clamps(self, spark):
-        from webcrawler_woc_spark.operators.politeness import plan_adaptive_timeouts
+        from webcrawler_woc_spark.operators.fetch_policy import plan_adaptive_timeouts
 
         rows = (
             # slow host: 20 fetches 1000..20000 -> p95 = 19th value = 19000
@@ -119,7 +119,7 @@ class TestAdaptiveTimeouts:
         assert got["fast"].n_would_timeout == 0
 
     def test_would_timeout_counts_aborted(self, spark):
-        from webcrawler_woc_spark.operators.politeness import plan_adaptive_timeouts
+        from webcrawler_woc_spark.operators.fetch_policy import plan_adaptive_timeouts
 
         # p95 of [100]*19 + [40000] is 100 (19th of 20) -> timeout 1000
         rows = [("h", 100)] * 19 + [("h", 40000)]

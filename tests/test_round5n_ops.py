@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 class TestScheduleMakespan:
     def test_critical_host_and_defaults(self, spark):
-        from webcrawler_woc_spark.operators.politeness import schedule_makespan
+        from webcrawler_woc_spark.operators.fetch_policy import schedule_makespan
 
         rows = [
             ("fast", 100, 100),     # 99 * 100 = 9900
@@ -25,7 +25,7 @@ class TestScheduleMakespan:
         assert all(r.makespan_ms == 19000 for r in got.values())
 
     def test_tied_critical_hosts_all_flagged(self, spark):
-        from webcrawler_woc_spark.operators.politeness import schedule_makespan
+        from webcrawler_woc_spark.operators.fetch_policy import schedule_makespan
 
         df = spark.createDataFrame(
             [("a", 3, 100), ("b", 3, 100)], "host string, n_urls int, delay_ms bigint"

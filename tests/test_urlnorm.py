@@ -61,6 +61,12 @@ def test_whatwg_case(raw, expected):
         ("%2e/x", "http://host0.example/page/x"),
         ("?q='1'", "http://host0.example/page/1?q=%271%27"),
         ("x?q='1'", "http://host0.example/page/x?q=%271%27"),
+        # a protocol-relative rel is the base's scheme + the rel, parsed as
+        # an absolute URL: an empty ';params' part is kept, extra slashes
+        # before a special host are skipped, an empty host fails
+        ("//o.example/p;", "http://o.example/p;"),
+        ("///o.example/p", "http://o.example/p"),
+        ("//", None),
     ],
 )
 def test_whatwg_join_case(rel, expected):

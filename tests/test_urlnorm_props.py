@@ -74,7 +74,9 @@ def _urljoin_drops_an_empty_part(rel: str) -> bool:
     left empty — the last path segment's first ';' ends it (urljoin
     splits params off there and drops them when empty). The fast join's
     answers for both are pinned in test_round6_opt.py
-    test_join_url_keeps_empty_query_and_fragment."""
+    test_join_url_keeps_empty_query_and_fragment. A protocol-relative rel
+    never reaches urljoin (join_url parses it as an absolute URL), so its
+    empty ';params' part is kept on both paths and not skipped."""
     clean = rel.translate(urlnorm._TAB_NL).strip()
     before_fragment = clean.split("#", 1)[0]
     path = before_fragment.split("?", 1)[0]
@@ -82,7 +84,11 @@ def _urljoin_drops_an_empty_part(rel: str) -> bool:
     return (
         clean.endswith("#")
         or before_fragment.endswith("?")
-        or (";" in last and last.index(";") == len(last) - 1)
+        or (
+            not clean.startswith("//")
+            and ";" in last
+            and last.index(";") == len(last) - 1
+        )
     )
 
 

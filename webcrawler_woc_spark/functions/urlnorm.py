@@ -349,6 +349,10 @@ def join_url(base: str, rel: str) -> str | None:
         if rel_clean[0] == "?":
             head = head.split("?", 1)[0]
         joined = head + rel_clean
+    if joined is None and bnetloc and rel_clean[:2] == "//":
+        # protocol-relative: the base's scheme, then the rel parsed as an
+        # absolute URL (WHATWG; urljoin would drop an empty ';params' part)
+        joined = bscheme + ":" + rel_clean
     if joined is None:
         try:
             joined = urljoin(base_canon, rel_clean)

@@ -7,7 +7,9 @@ Maps the reference entry points (SURVEY.md §3):
 * ``crawl_no_depth``    (src/crawler.rs:113-195) -> ``crawl(depth=None)``,
   sitemap seeding on the first wave only, loop until the frontier empties.
 
-Resume: the warehouse manifest records the last committed wave; ``crawl``
+Resume: the warehouse manifest records the last committed wave and the
+politeness tables (robots Crawl-delay, Disallow) the first call parsed from
+the corpus; ``crawl``
 called on an existing warehouse continues from there (tests/test_resume.py,
 and a ``kill -9`` of ``main.py`` in tests/test_cli.py). A wave that was
 running when the process died left no manifest entry, so it runs again in
@@ -23,8 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import CrawlConfig
+from ..operators import politeness
 from ..operators.fetch import with_host, with_url_hash
-from ..operators.politeness import parse_robots_crawl_delay
 from ..operators.sitemaps import sitemap_children
 from .state import Warehouse, uncrawled_links
 from .wave import run_wave
@@ -71,14 +73,17 @@ def crawl(
     if start_wave == 0:
         seed_frontier(spark, wh, seeds, strip_tracking=cfg.strip_tracking)
 
-    robots = None
+    # politeness state is checkpointed: parsed from the corpus robots.txt
+    # pages once per warehouse, read back from it on every call
+    robots = disallow = None
     if cfg.host_budget is not None:
-        robots = parse_robots_crawl_delay(pages).cache()
-    disallow = None
+        robots = wh.politeness_table(
+            "robots_delay", lambda: politeness.parse_robots_crawl_delay(pages)
+        )
     if cfg.respect_disallow:
-        from ..operators.politeness import parse_robots_disallow
-
-        disallow = parse_robots_disallow(pages).cache()
+        disallow = wh.politeness_table(
+            "robots_disallow", lambda: politeness.parse_robots_disallow(pages)
+        )
 
     seed_urls = [u for u, _ in seeds]
 

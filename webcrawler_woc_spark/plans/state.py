@@ -20,7 +20,16 @@ then its newly rejected links), ``frontier`` (the next wave's input) and
 ``extracted_text``; the depth-mode residual flush adds uncrawled rows to
 ``links_out`` at wave = depth. ``seen``, ``rejected``, ``flagged`` and
 ``crawl_order`` are never stored: ``read_waves`` serves them as filtered
-projections of ``links_out`` (``VIEWS``).
+projections of ``links_out`` (``VIEWS``). Every read names its table's
+schema (``TABLE_SCHEMAS``), so no read runs a schema-inference job.
+
+Politeness tables: ``robots_delay`` (host, crawl_delay) for the host
+budget and ``robots_disallow`` (host, prefix) for the Disallow gate, each
+one directory under the root, named by the manifest's ``politeness`` entry.
+Like the seen-filter sidecar they are a cache of derived state: the
+first ``crawl`` call whose config needs one and whose manifest names none
+parses it from the corpus robots.txt pages and records it; every call then
+reads it back, so a resume never parses robots.txt again.
 """
 
 from __future__ import annotations
@@ -29,6 +38,7 @@ import json
 import os
 import shutil
 import time
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -53,6 +63,28 @@ VIEWS = {
     "flagged": ("crawled AND contains_words", ("url", "wave")),
     "crawl_order": ("crawled", ("wave", "host", "slot", "url")),
 }
+
+# the stored tables' columns as written; a read of <table>/wave=K directories
+# adds the ``wave`` partition column
+TABLE_SCHEMAS = {
+    "links_out": (
+        "url string, url_hash bigint, host string, content_type string, "
+        "headers map<string,string>, crawled boolean, ipv4 string, ipv6 string, "
+        "link_type string, contains_words boolean, slot int"
+    ),
+    "frontier": "wave int, url string, url_hash bigint, host string, priority double",
+    "extracted_text": "url string, text string",
+    "robots_delay": "host string, crawl_delay int",
+    "robots_disallow": "host string, prefix string",
+}
+
+
+def view(links_out: DataFrame | None, name: str) -> DataFrame | None:
+    """The ``VIEWS`` projection ``name`` of a ``links_out`` read."""
+    if links_out is None:
+        return None
+    cond, cols = VIEWS[name]
+    return links_out.filter(cond).select(*cols)
 
 
 class Warehouse:
@@ -107,29 +139,51 @@ class Warehouse:
         A ``VIEWS`` name reads the waves' ``links_out``, filtered and
         projected; the residual flush is not a wave's routing output (its
         uncrawled rows were never rejected), so no view reads it."""
-        view = VIEWS.get(table)
-        source = "links_out" if view else table
+        is_view = table in VIEWS
+        source = "links_out" if is_view else table
         last = self.manifest["last_wave"] if up_to_wave is None else up_to_wave
         paths = [
             info["tables"][source]
             for w_str, info in self.manifest["waves"].items()
             if int(w_str) <= last
             and source in info.get("tables", {})
-            and not (view and "residual_flush" in info["counts"])
+            and not (is_view and "residual_flush" in info["counts"])
         ]
         if not paths:
             return None
-        df = self.spark.read.option("basePath", os.path.join(self.path, source)).parquet(*paths)
-        if view:
-            cond, cols = view
-            df = df.filter(cond).select(*cols)
-        return df
+        df = self._read(source, paths, partitioned=True)
+        return view(df, table) if is_view else df
 
     def read_frontier(self, wave: int) -> DataFrame | None:
         path = self.table_wave_path("frontier", wave)
         if not os.path.exists(path):
             return None
-        return self.spark.read.parquet(path)
+        return self._read("frontier", [path])
+
+    def _read(self, table: str, paths: list[str], partitioned: bool = False) -> DataFrame:
+        """Parquet ``paths`` of ``table`` read with its known schema (plus the
+        ``wave`` partition column when ``partitioned``): no inference job."""
+        schema = TABLE_SCHEMAS[table]
+        reader = self.spark.read
+        if partitioned:
+            reader = reader.option("basePath", os.path.join(self.path, table))
+            schema += ", wave int"
+        return reader.schema(schema).parquet(*paths)
+
+    def politeness_table(self, name: str, derive: Callable[[], DataFrame]) -> DataFrame:
+        """The politeness table ``name``. When the manifest names none
+        (a fresh crawl, a warehouse written before the table was kept, a
+        config that newly needs it) or its directory is gone, ``derive()``
+        is written under the root and recorded first; either way the stored
+        table is read back."""
+        tables = self.manifest.setdefault("politeness", {})
+        path = tables.get(name)
+        if path is None or not os.path.exists(path):
+            path = os.path.join(self.path, name)
+            derive().write.mode("overwrite").parquet(path)
+            tables[name] = path
+            self._commit_manifest()
+        return self._read(name, [path])
 
     # --------------------------------------------------------------- commit
 

@@ -24,7 +24,7 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import CrawlConfig
@@ -39,7 +39,7 @@ from ..operators.routing import (
     route_children,
 )
 from ..functions.udfs import link_type_col, make_contains_words_udf
-from .state import Warehouse, uncrawled_links
+from .state import Warehouse, uncrawled_links, view
 
 
 def run_wave(
@@ -80,6 +80,14 @@ def run_wave(
         from ..operators.traps import filter_traps
 
         frontier = filter_traps(frontier)
+
+    # the exact post-gate frontier size rides the schedule's cache fill (the
+    # first action over the frontier) as an observation, not a job of its own.
+    # An empty frontier reports no metrics (AQE replaces its empty stage, the
+    # observed one, with an empty relation); it is also the only frontier
+    # that schedules nothing, as every host schedules at least its slot 1.
+    obs_frontier_in = Observation(f"frontier_in_w{wave}")
+    frontier = frontier.observe(obs_frontier_in, F.count(F.lit(1)).alias("n"))
 
     # -- politeness schedule (defines deterministic crawl order) ------------
     scheduled, deferred = schedule_wave(frontier, robots, cfg.host_budget)
@@ -204,8 +212,11 @@ def run_wave(
     deduped = with_host(with_url_hash(dedup_wave(children))).cache()
 
     # -- routing ------------------------------------------------------------
-    seen_prev = wh.read_waves("seen", up_to_wave=wave - 1)
-    rejected_prev = wh.read_waves("rejected", up_to_wave=wave - 1)
+    # one links_out read serves both views (the residual flush is committed
+    # after the last wave, so no wave's read reaches it)
+    links_prev = wh.read_waves("links_out", up_to_wave=wave - 1)
+    seen_prev = view(links_prev, "seen")
+    rejected_prev = view(links_prev, "rejected")
     empty_seen = spark.createDataFrame([], "url_hash long, url string")
     seen_prev = seen_prev.select("url_hash", "url") if seen_prev is not None else empty_seen
     rejected_prev = (
@@ -338,8 +349,6 @@ def run_wave(
     )
 
     # -- writes (the wave barrier) -----------------------------------------
-    from pyspark.sql import Observation
-
     # counts ride the write actions as observations — no extra jobs.
     obs_links = Observation(f"links_out_w{wave}")
     links_out = links_out.observe(
@@ -369,17 +378,16 @@ def run_wave(
     table_paths = {}
     # one pool slot per job: every input is cached, so the jobs only
     # contend for executor cores, and the block is bounded by the slowest
-    # single write. The two metric/sidecar jobs (frontier-in count,
-    # seen-filter build) read only filled caches / tiny parquet, so they
-    # back-fill cores the write tail leaves idle (guide §2.6) instead of
-    # running sequentially after the pool. The filter build is distributed:
-    # one small table/bitmap per bucket reaches the driver, never the urls.
-    with ThreadPoolExecutor(max_workers=len(writes) + 2) as pool:
+    # single write. The seen-filter build reads only filled caches / tiny
+    # parquet, so it back-fills cores the write tail leaves idle (guide
+    # §2.6) instead of running sequentially after the pool. The filter build
+    # is distributed: one small table/bitmap per bucket reaches the driver,
+    # never the urls.
+    with ThreadPoolExecutor(max_workers=len(writes) + 1) as pool:
         futs = {
             table: pool.submit(_timed, tkey, wh.write_wave_table, table, wv, df_)
             for table, (tkey, wv, df_) in writes.items()
         }
-        f_frontier_in = pool.submit(_timed, "c_frontier_in", frontier.count)
         f_filter = (
             pool.submit(_timed, "bloom_update", filt.build_rows, new_seen)
             if filt is not None
@@ -387,7 +395,6 @@ def run_wave(
         )
         for table, fut in futs.items():
             table_paths[table] = fut.result()
-        frontier_in = f_frontier_in.result()
         if f_filter is not None:
             filt.merge(f_filter.result())
 
@@ -395,7 +402,7 @@ def run_wave(
     n_scheduled = int(obs_links.get["scheduled"])
     fetch_ok = int(obs_links.get["fetch_ok"])
     counts = {
-        "frontier_in": frontier_in,
+        "frontier_in": int(obs_frontier_in.get["n"]) if scheduled_rows else 0,
         "scheduled": n_scheduled,
         "fetched": fetch_ok,
         "fetch_failed": n_scheduled - fetch_ok,

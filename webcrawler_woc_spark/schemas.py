@@ -1,7 +1,7 @@
 """The pages-corpus schema, declared once so a JSON-lines corpus is read
 without schema inference (``main.py --pages-format json`` and the streaming
-sources). The warehouse tables take their schemas from the wave's
-DataFrames.
+sources). The warehouse tables' schemas are ``plans/state.py``
+``TABLE_SCHEMAS``.
 """
 
 from __future__ import annotations

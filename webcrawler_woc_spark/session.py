@@ -5,9 +5,19 @@ Design notes (100 TB target):
   join under zipf host skew.
 * Arrow on — every Python-side kernel is an Arrow-batched pandas UDF.
 * Shuffle partitions are fixed (deterministic plans in tests) but should be
-  sized to ~2-3x total cores on a real cluster; the crawl driver re-partitions
-  state tables by ``pmod(url_hash, n_buckets)`` so wave-over-wave joins on
-  url_hash are co-partitioned.
+  sized to ~2-3x total cores on a real cluster. Warehouse tables are written
+  with whatever partitioning the wave's plan ends in; no join relies on it.
+* PySpark's call-site capture is off
+  (``spark.python.sql.dataFrameDebugging.enabled=false``). With it on, every
+  ``F.*`` and DataFrame call adds about five py4j round trips (active session,
+  conf read, origin set and clear), and the crawl driver builds thousands of
+  them per wave: a resumed ``crawl_polite`` call made ~6.1k main-thread round
+  trips with it on and ~2.7k with it off (``scripts/py4j_calls.py``). What is
+  lost is the Python file:line in Spark's analysis errors; to get it back
+  pass ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``
+  to the ``get_spark`` call that creates the session (it is a static
+  setting, and PySpark reads it once per process, at the first wrapped
+  call).
 """
 
 from __future__ import annotations
@@ -54,8 +64,7 @@ def get_spark(
         # near-empty tasks — measured 2-3.8s per subplan job on an 82-URL
         # wave. With AQE coalescing the caches, crawl_depth3 dropped ~2x
         # (27.8s -> ~14s median at the bench config). Output partitioning of
-        # cached frames is never relied upon (state tables repartition
-        # explicitly on write), so this is safe.
+        # cached frames is never relied upon, so this is safe.
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         # Input split sizing (optimization guide §6): the sandbox's parquet
         # inputs are single small files, so the 128m default packs each whole
@@ -75,6 +84,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # no call-site capture (module docstring); extra_conf turns it back on
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if extra_conf:
         for k, v in extra_conf.items():
