@@ -14,8 +14,8 @@ not counted; the last call is counted.
 Every round trip goes through py4j's ``GatewayConnection.send_command``; the
 script wraps it in this process and prints one JSON line with the calls made
 on the main thread (the driver's plan building; a blocking action counts as
-one) and on all threads (the write pools' threads included), plus the call's
-wall time. ``--conf`` passes Spark settings through ``get_spark(extra_conf=)``,
+one) and on all threads (the write pools' threads included), plus the Spark
+jobs the call started and its wall time. ``--conf`` passes Spark settings through ``get_spark(extra_conf=)``,
 e.g. ``--conf spark.python.sql.dataFrameDebugging.enabled=true`` to count
 with PySpark's call-site capture turned back on.
 
@@ -135,6 +135,7 @@ def main(argv: list[str] | None = None) -> int:
 
         counter = CallCounter()
         counter.install()
+        tracker = spark.sparkContext.statusTracker()  # jobs outside any group
         for i in range(args.warm + 1):
             path = os.path.join(work, f"call{i}")
             shutil.copytree(snapshot, path)
@@ -145,13 +146,16 @@ def main(argv: list[str] | None = None) -> int:
                 f.write(text.replace(snapshot + os.sep, path + os.sep))
             wh = Warehouse(spark, path)
             counter.on = i == args.warm
+            jobs_before = set(tracker.getJobIdsForGroup(None))
             t0 = time.time()
             summary = crawl_mod.crawl(spark, wh, pages, seeds, cfg)
             run_s = time.time() - t0
             counter.on = False
+            jobs = len(set(tracker.getJobIdsForGroup(None)) - jobs_before)
         print(json.dumps({
             "main_thread_calls": counter.main,
             "all_thread_calls": counter.total,
+            "spark_jobs": jobs,
             "run_s": round(run_s, 3),
             "waves": summary["waves"],
             "scheduled": summary["scheduled_total"],

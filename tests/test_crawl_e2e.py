@@ -234,6 +234,78 @@ class TestTimeoutMode:
         assert seen_tmo != seen_plain
 
 
+class TestOneResponsePerWave:
+    """A wave reads one fetch response: the same ``fetched`` and
+    ``content_type`` decide its links_out metadata and which bodies it
+    parses. Join mode, 10 s timeout; the seeds cover every response kind:
+    text/html, charset=utf-8, charset=iso-8859-1 and text/plain pages, a
+    timed-out page (page/0) and a url outside the corpus."""
+
+    SEEDS = [
+        ("http://host0.example/page/20", 1.0),
+        ("http://host0.example/page/30", 1.0),
+        ("http://host1.example/page/1", 1.0),
+        ("http://host5.example/page/105", 1.0),
+        ("http://host1.example/sitemap0.txt", 1.0),
+        ("http://host0.example/page/0", 1.0),
+        ("http://host2.example/missing/2", 1.0),
+    ]
+
+    @pytest.fixture(scope="class")
+    def run(self, spark, pages):
+        cfg = CrawlConfig(whitelist=WHITELIST, words=WORDS, depth=3, timeout_ms=10_000)
+        with tempfile.TemporaryDirectory(prefix="wcw_e2e_response_") as tmp:
+            wh = Warehouse(spark, tmp)
+            crawl(spark, wh, pages, self.SEEDS, cfg)
+            yield wh
+
+    def test_metadata_and_body_gated_alike(self, run, pages):
+        """Per wave, the parsed bodies (extracted_text urls) are the crawled
+        links_out rows whose content type passes the MIME gate (NULL on a
+        failed or timed-out fetch), and the rows html_body_gate selects over
+        the wave's fetch_matched rows."""
+        from webcrawler_woc_spark.operators.extract import HTML_MIMES, html_body_gate
+        from webcrawler_woc_spark.operators.fetch import (
+            default_content_type_expr,
+            fetch_matched,
+        )
+
+        wh = run
+        links = read_links_out(wh).filter(F.col("crawled"))
+        texts = wh.read_waves("extracted_text")
+        corpus_urls = set()
+        kinds = set()
+        for wave in range(3):
+            crawled = links.filter(F.col("wave") == wave)
+            rows = crawled.select("url", "content_type").collect()
+            html_rows = {
+                r["url"] for r in rows
+                if r["content_type"] is not None and r["content_type"].lower() in HTML_MIMES
+            }
+            matched = fetch_matched(crawled.select("url", "url_hash"), pages)
+            gated = {
+                r["url"]
+                for r in matched.filter(
+                    html_body_gate(F.col("url"), default_content_type_expr, 10_000)
+                ).select("url").collect()
+            }
+            text_urls = {
+                r["url"] for r in texts.filter(F.col("wave") == wave).select("url").collect()
+            }
+            assert text_urls == html_rows == gated, wave
+            corpus_urls |= {r["url"] for r in matched.select("url").collect()}
+            kinds |= {(r["url"] in corpus_urls, r["content_type"]) for r in rows}
+        # (in the corpus, content_type) of every kind the seeds hold
+        assert {
+            (True, "text/html"),
+            (True, "text/html; charset=utf-8"),
+            (True, "text/html; charset=iso-8859-1"),
+            (True, "text/plain"),
+            (True, None),
+            (False, None),
+        } <= kinds
+
+
 class TestRobotsDisallow:
     """Opt-in robots Disallow gate: a linked /private page must never be
     scheduled when respect_disallow=True; engine == oracle either way."""

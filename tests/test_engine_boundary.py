@@ -31,3 +31,15 @@ def test_catalogue_fetch_policy_is_outside_the_engine():
     sizes = _engine_closure()
     assert "webcrawler_woc_spark.operators.politeness" in sizes
     assert "webcrawler_woc_spark.operators.fetch_policy" not in sizes
+
+
+def test_corpus_generator_is_outside_the_engine():
+    # the fetch simulation owns the Content-Type rule; the corpus generator
+    # re-exports the same function for the catalogue, perfbench and tests
+    from webcrawler_woc_spark.operators import fetch
+    from webcrawler_woc_spark.sources import corpus
+
+    sizes = _engine_closure()
+    assert "webcrawler_woc_spark.operators.fetch" in sizes
+    assert "webcrawler_woc_spark.sources.corpus" not in sizes
+    assert corpus.default_content_type_expr is fetch.default_content_type_expr

@@ -8,7 +8,12 @@ pruning — the three properties that make the design viable at 100 TB.
 import pytest
 from pyspark.sql import functions as F
 
-from webcrawler_woc_spark.operators.fetch import fetch_join, with_host, with_url_hash
+from webcrawler_woc_spark.operators.fetch import (
+    fetch_join,
+    fetch_matched,
+    with_host,
+    with_url_hash,
+)
 from webcrawler_woc_spark.operators.routing import anti_join_scan
 from webcrawler_woc_spark.plans.explain import (
     assert_broadcast_join,
@@ -72,6 +77,14 @@ class TestFetchJoinPlan:
         # the corpus scan must NOT read warc_ts/lang (unused by fetch)
         assert_read_schema_only(
             fetched, {"url", "html", "text", "wave", "url_hash", "host", "priority"}
+        )
+
+    def test_fetch_matched_reads_only_url_and_html(self, spark, pages_path, frontier):
+        # the wave caches fetch_matched whole, so no later projection prunes
+        # its corpus scan: the scan must read the key and the body only
+        pages = spark.read.parquet(pages_path)
+        assert_read_schema_only(
+            fetch_matched(frontier, pages), {"url", "html", "wave", "url_hash", "host", "priority"}
         )
 
 

@@ -67,10 +67,47 @@ def test_whatwg_case(raw, expected):
         ("//o.example/p;", "http://o.example/p;"),
         ("///o.example/p", "http://o.example/p"),
         ("//", None),
+        # a rel qualified with the base's own special scheme is the
+        # scheme-less rel; another scheme makes it absolute
+        ("http:p;", "http://host0.example/page/p;"),
+        ("HTTP:/x;", "http://host0.example/x;"),
+        ("http:p:q", "http://host0.example/page/p:q"),
+        ("http://o.example/p;", "http://o.example/p;"),
+        ("https:p", "https://p/"),
+        ("", BASE),
     ],
 )
 def test_whatwg_join_case(rel, expected):
     assert join_url(BASE, rel) == expected
+
+
+# (base, rel, WHATWG result) where the base's query or fragment matters, or
+# the base has no authority
+WHATWG_JOIN_CASES = [
+    # an empty rel is the base up to its fragment
+    ("http://h.example/p#x", "", "http://h.example/p"),
+    ("http://h.example/p?q#x", " \t", "http://h.example/p?q"),
+    ("http://h.example/p?q#x", "http:", "http://h.example/p?q"),
+    ("http://h.example/p?q#x", "http:#y", "http://h.example/p?q#y"),
+    ("http://h.example/p?q#x", "http:?r", "http://h.example/p?r"),
+    # a base without an authority joins only absolute rels
+    ("mailto:a@h.example", "p", None),
+    ("mailto:a@h.example", "mailto:b@h.example", "mailto:b@h.example"),
+    ("mailto:a@h.example", "http://o.example/p;", "http://o.example/p;"),
+    # only a special scheme makes a same-scheme rel relative
+    ("foo://h.example/a/b", "foo:x", "foo:x"),
+    ("foo://h.example/a/b", "x", "foo://h.example/a/x"),
+]
+
+
+@pytest.mark.parametrize("base,rel,expected", WHATWG_JOIN_CASES)
+def test_whatwg_join_against_base(base, rel, expected):
+    assert join_url(base, rel) == expected
+
+
+def test_empty_href_drops_the_page_fragment():
+    # <a href=""> on a page fetched as http://h.example/p#x links to the page
+    assert normalize_url("", "http://h.example/p#x") == "http://h.example/p"
 
 
 class TestParseAbsolute:

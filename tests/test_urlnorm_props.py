@@ -11,6 +11,7 @@ from __future__ import annotations
 import re
 import string
 from unittest import mock
+from urllib.parse import urljoin
 
 from hypothesis import given, settings, strategies as st
 
@@ -67,35 +68,43 @@ def _strict_parse(raw: str) -> str | None:
         return parse_absolute(raw)
 
 
-def _urljoin_drops_an_empty_part(rel: str) -> bool:
-    """Shapes where urljoin drops an empty component that the fast join
+def _urljoin_drops_an_empty_part(base: str, rel: str) -> bool:
+    """Path rels where urljoin drops an empty component that the fast join
     keeps (WHATWG keeps all three): an empty query or fragment (the shapes
     test_fast_join_matches_stdlib_urljoin skips), and RFC 2396 ';params'
     left empty — the last path segment's first ';' ends it (urljoin
     splits params off there and drops them when empty). The fast join's
     answers for both are pinned in test_round6_opt.py
-    test_join_url_keeps_empty_query_and_fragment. A protocol-relative rel
-    never reaches urljoin (join_url parses it as an absolute URL), so its
-    empty ';params' part is kept on both paths and not skipped."""
+    test_join_url_keeps_empty_query_and_fragment. Only a path rel reaches
+    the join _strict_join swaps for urljoin: an absolute, empty, query- or
+    fragment-only or protocol-relative rel (after a same-scheme qualifier
+    is removed) takes the same path on both sides and is not skipped."""
     clean = rel.translate(urlnorm._TAB_NL).strip()
+    scheme = urlnorm._rel_scheme_re.match(clean)
+    if scheme is not None:
+        if clean[: scheme.end() - 1].lower() != base.split(":", 1)[0]:
+            return False
+        clean = clean[scheme.end():]
+    if clean[:1] in ("", "?", "#") or clean.startswith("//"):
+        return False
     before_fragment = clean.split("#", 1)[0]
     path = before_fragment.split("?", 1)[0]
     last = path.rsplit("/", 1)[-1]
     return (
         clean.endswith("#")
         or before_fragment.endswith("?")
-        or (
-            not clean.startswith("//")
-            and ";" in last
-            and last.index(";") == len(last) - 1
-        )
+        or (";" in last and last.index(";") == len(last) - 1)
     )
 
 
 def _strict_join(base: str, rel: str) -> str | None:
-    """join_url with _fast_join switched off (every rel takes the urljoin
-    or query/fragment-only path)."""
-    with mock.patch.object(urlnorm, "_fast_join", lambda *args: None):
+    """join_url with the fast path join swapped for stdlib urljoin over the
+    same base (scheme, authority, path) — the reference for path rels."""
+
+    def reference(bscheme, bnetloc, bpath, rel):
+        return urljoin(f"{bscheme}://{bnetloc}{bpath}", rel)
+
+    with mock.patch.object(urlnorm, "_fast_join", reference):
         return join_url(base, rel)
 
 
@@ -169,7 +178,7 @@ class TestFastPathsMatchStrict:
         rel_hrefs,
     )
     def test_fast_join_matches_strict_join(self, base, rel):
-        if _urljoin_drops_an_empty_part(rel):
+        if _urljoin_drops_an_empty_part(base, rel):
             return
         assert join_url(base, rel) == _strict_join(base, rel)
 

@@ -36,7 +36,7 @@ written; WHATWG and the url crate give ``http://127.0.0.1/``).
 from __future__ import annotations
 
 import re
-from urllib.parse import unquote, urljoin
+from urllib.parse import unquote
 
 # Schemes the WHATWG standard treats as "special" (authority-based).
 SPECIAL_SCHEMES: dict[str, int | None] = {
@@ -274,8 +274,8 @@ def _fast_join(bscheme: str, bnetloc: str, bpath: str, rel: str) -> str | None:
     the base re-parse urljoin pays on EVERY call — the hot 55% of the link
     kernel (cross-validated against stdlib urljoin in
     tests/test_round6_opt.py). Unlike urljoin it keeps an empty query or
-    fragment ('p?' -> '.../p?'), as WHATWG does. Returns None to mean 'fall
-    back to join_url's slower paths'.
+    fragment ('p?' -> '.../p?') and an empty ';params' part, as WHATWG does.
+    Returns None for the rels join_url resolves before it reaches here.
     """
     if not rel or not bnetloc or rel.startswith("//") or _rel_scheme_re.match(rel):
         return None  # authority-less bases (mailto:, data:) never join here
@@ -320,7 +320,17 @@ def _fast_join(bscheme: str, bnetloc: str, bpath: str, rel: str) -> str | None:
 
 
 def join_url(base: str, rel: str) -> str | None:
-    """RFC-3986 join then canonicalize (reference links.rs:109-118)."""
+    """Resolve ``rel`` against ``base`` as WHATWG does, then canonicalize
+    (reference links.rs:109-118).
+
+    A rel with a scheme is parsed as an absolute URL, unless the base's
+    scheme is special and the same (``http:p`` against an http base), where it
+    resolves as the scheme-less rel (``p``). A scheme-less rel against a base
+    without an authority (``mailto:``) resolves to None. Then: empty -> the
+    base up to its fragment; query- or fragment-only -> the base up to the
+    replaced part; protocol-relative -> the base's scheme + the rel, parsed
+    as absolute; anything else is a path, joined by ``_fast_join``.
+    """
     parts = _base_cache.get(base, _MISS)
     if parts is _MISS:
         if len(_base_cache) >= _CACHE_MAX:
@@ -340,24 +350,29 @@ def join_url(base: str, rel: str) -> str | None:
         return None
     base_canon, bscheme, bnetloc, bpath = parts
     rel_clean = rel.translate(_TAB_NL).strip()
-    joined = _fast_join(bscheme, bnetloc, bpath, rel_clean)
-    if joined is None and bnetloc and rel_clean[:1] in ("?", "#"):
-        # query/fragment-only: the base up to the replaced part, keeping an
-        # empty query or fragment (WHATWG; urljoin would drop '?' and '#'
-        # and, for '?', keep the base's query)
+    scheme = _rel_scheme_re.match(rel_clean)
+    if scheme is not None:
+        if bscheme not in SPECIAL_SCHEMES or rel_clean[: scheme.end() - 1].lower() != bscheme:
+            return _parse_absolute_cached(rel_clean)
+        rel_clean = rel_clean[scheme.end():]
+        if _rel_scheme_re.match(rel_clean):
+            rel_clean = "./" + rel_clean  # a path segment, not a scheme
+    if not bnetloc:
+        return None
+    if not rel_clean:
+        joined = base_canon.split("#", 1)[0]
+    elif rel_clean[0] in "?#":
+        # the base up to the replaced part, keeping an empty query or fragment
         head = base_canon.split("#", 1)[0]
         if rel_clean[0] == "?":
             head = head.split("?", 1)[0]
         joined = head + rel_clean
-    if joined is None and bnetloc and rel_clean[:2] == "//":
-        # protocol-relative: the base's scheme, then the rel parsed as an
-        # absolute URL (WHATWG; urljoin would drop an empty ';params' part)
+    elif rel_clean[:2] == "//":
+        # protocol-relative: an empty ';params' part is kept, extra slashes
+        # before a special host are skipped, an empty host fails
         joined = bscheme + ":" + rel_clean
-    if joined is None:
-        try:
-            joined = urljoin(base_canon, rel_clean)
-        except ValueError:
-            return None
+    else:
+        joined = _fast_join(bscheme, bnetloc, bpath, rel_clean)
     return _parse_absolute_cached(joined)
 
 

@@ -34,9 +34,10 @@ def html_body_gate(url_col, content_type_expr, timeout_ms: int | None):
 
     MIME gate (exact equality, links.rs:171-176) AND the request-timeout
     simulation (cli.rs:34-35 / crawler.rs:14-20: a timed-out response's body
-    is never read). THE single definition shared by fetch_join's metadata
-    path and the wave extraction path — keeping it in one place is what
-    guarantees links_out metadata and the extracted corpus can't diverge.
+    is never read), evaluated over ``fetch_matched`` rows. The wave does not
+    call it: it gates ``fetch_join``'s own ``fetched`` and ``content_type``
+    columns. This is the same predicate for callers that hold only the
+    matched rows (the one-wave replay, tests).
     """
     from .fetch import synth_fetch_ms
 

@@ -10,8 +10,14 @@ Scale notes:
   ``pmod(xxhash64(url), n_buckets)`` so repeated waves shuffle only the
   (small) frontier side — at 10^10 URLs the pages side is the 100 TB table
   and must never be re-shuffled per wave. AQE skew-join covers hot-host skew.
-* only ``url, html, text`` are read from the corpus (column pruning reaches
-  the parquet scan; verified in tests via the explain plan).
+* only ``url, html`` are read from the corpus (column pruning reaches the
+  parquet scan; verified in tests via the explain plan).
+
+This module owns the simulated response: its latency (``synth_fetch_ms``),
+its DNS records (``synth_ipv4``/``synth_ipv6``) and its Content-Type rule
+(``default_content_type_expr``). The wave reads the response once, from the
+frame ``fetch_join`` returns: its ``fetched`` and ``content_type`` columns
+decide both the links_out metadata and which bodies are parsed.
 """
 
 from __future__ import annotations
@@ -64,6 +70,24 @@ def synth_ipv6(host: Column) -> Column:
     return F.when(di.isNotNull(), F.concat(F.lit("fd00::"), F.lower(F.hex(di))))
 
 
+def default_content_type_expr(url: Column) -> Column:
+    """Fetch-time Content-Type derivation rule for the derived corpus
+    (FIXTURES.md §1): *.txt -> text/plain; doc_id%100<5 -> charset=utf-8;
+    doc_id%100 in (5,6) -> charset=iso-8859-1 (fails the exact MIME gate);
+    else text/html."""
+    # guarded cast: non-/page/ urls extract '' and a bare ANSI cast of ''
+    # THROWS under Spark 4 — the CASE branch keeps the cast unevaluated
+    # until the match is known non-empty (python twin returns text/html)
+    d = F.regexp_extract(url, r"/page/(\d+)$", 1)
+    doc_id = F.when(d != "", d.cast("bigint"))
+    return (
+        F.when(url.endswith(".txt"), F.lit("text/plain"))
+        .when(doc_id % 100 < 5, F.lit("text/html; charset=utf-8"))
+        .when((doc_id % 100 >= 5) & (doc_id % 100 < 7), F.lit("text/html; charset=iso-8859-1"))
+        .otherwise(F.lit("text/html"))
+    )
+
+
 def fetch_matched(
     frontier: DataFrame, pages: DataFrame, frontier_rows: int | None = None
 ) -> DataFrame:
@@ -83,11 +107,7 @@ def fetch_matched(
     """
     from ..config import small_enough_to_broadcast
 
-    pages_side = pages.select(
-        F.col("url").alias("p_url"),
-        F.col("html"),
-        F.col("text").alias("page_text"),
-    )
+    pages_side = pages.select(F.col("url").alias("p_url"), F.col("html"))
     if small_enough_to_broadcast(frontier_rows):
         bf = F.broadcast(frontier)
         matched = pages_side.join(bf, bf["url"] == pages_side["p_url"], "inner")
@@ -111,12 +131,13 @@ def fetch_join(
     url_hash, host, priority; a politeness schedule's ``slot`` rides along
     to the wave's links_out rows), then::
 
-        fetched(bool), content_type, headers, ipv4, ipv6, html, page_text
+        fetched(bool), content_type, headers, ipv4, ipv6, html
 
     * ``fetched`` false => fetch failure: content_type/headers/ipv4/ipv6/html
       are NULL (reference crawler.rs:209-216 emits the bare link);
     * on success, content_type is derived from the url by
-      ``content_type_expr`` (simulation rule, FIXTURES.md §1), headers is the
+      ``content_type_expr`` (default ``default_content_type_expr``, the
+      simulation rule of FIXTURES.md §1), headers is the
       simulated response header map, DNS columns are synthetic
       (crawler.rs:219-224);
     * ``timeout_ms`` (op 27): a matched row whose synthetic latency
@@ -129,8 +150,6 @@ def fetch_join(
     below would otherwise rebuild the probe join and rescan pages).
     """
     if content_type_expr is None:
-        from ..sources.corpus import default_content_type_expr
-
         content_type_expr = default_content_type_expr
 
     # Join strategy for 100 TB: a plain left join (frontier ⋈ pages) would
@@ -150,24 +169,19 @@ def fetch_join(
         *keys,
         F.lit(None).cast("string").alias("p_url"),
         F.lit(None).cast("binary").alias("html"),
-        F.lit(None).cast("string").alias("page_text"),
     )
-    joined = matched.select(*keys, "p_url", "html", "page_text").unionByName(failed)
+    joined = matched.select(*keys, "p_url", "html").unionByName(failed)
     fetched = F.col("p_url").isNotNull()
     if timeout_ms is not None:
         # timed-out rows keep their frontier identity but lose the response
         # (body never read, crawler.rs:209-216) — same shape as a miss
         fetched = fetched & (synth_fetch_ms(F.col("url")) < F.lit(timeout_ms))
-        joined = joined.select(
-            *keys, "p_url",
-            F.when(fetched, F.col("html")).alias("html"),
-            F.when(fetched, F.col("page_text")).alias("page_text"),
-        )
-    ct = F.when(fetched, content_type_expr(F.col("url")))
+        joined = joined.select(*keys, "p_url", F.when(fetched, F.col("html")).alias("html"))
+    content_type = content_type_expr(F.col("url"))
     headers = F.when(
         fetched,
         F.create_map(
-            F.lit("content-type"), content_type_expr(F.col("url")),
+            F.lit("content-type"), content_type,
             F.lit("content-length"), F.length(F.col("html")).cast("string"),
         ),
     )
@@ -175,12 +189,11 @@ def fetch_join(
     return joined.select(
         *keys,
         fetched.alias("fetched"),
-        ct.alias("content_type"),
+        F.when(fetched, content_type).alias("content_type"),
         headers.alias("headers"),
         F.when(fetched, synth_ipv4(host)).alias("ipv4"),
         F.when(fetched, synth_ipv6(host)).alias("ipv6"),
         F.col("html"),
-        F.col("page_text"),
     )
 
 

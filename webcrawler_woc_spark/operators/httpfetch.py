@@ -125,9 +125,8 @@ def http_fetch_join(
     """Fetch every frontier row (url, url_hash, host, priority) over HTTP.
 
     Returns the ``fetch_join`` contract columns: the frontier's columns,
-    then fetched, content_type, headers, ipv4, ipv6, html, page_text
-    (page_text is NULL — a real fetch has no golden text; extraction derives
-    text from the body downstream, same as the gated simulation path).
+    then fetched, content_type, headers, ipv4, ipv6, html (extraction
+    derives text from the body downstream, same as the simulation path).
     """
     from .fetch import synth_ipv4, synth_ipv6
 
@@ -151,5 +150,4 @@ def http_fetch_join(
         F.when(fetched, synth_ipv4(F.col("host"))).alias("ipv4"),
         F.when(fetched, synth_ipv6(F.col("host"))).alias("ipv6"),
         "html",
-        F.lit(None).cast("string").alias("page_text"),
     )

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.udfs import link_type_col, links_from_text_udf, sitemap_urls_udf
+from .fetch import default_content_type_expr
 
 
 def robots_url_of(seed_url: str) -> str:
@@ -90,7 +91,7 @@ def sitemap_children(
     real-web behavior (Common Crawl sitemaps are XML) behind an opt-in so
     default-path goldens never move."""
     if content_type_expr is None:
-        from ..sources.corpus import default_content_type_expr as content_type_expr
+        content_type_expr = default_content_type_expr
 
     seeds_df = spark.createDataFrame(
         [(u, robots_url_of(u)) for u in seed_urls], "seed_url string, robots_url string"

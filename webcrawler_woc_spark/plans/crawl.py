@@ -39,12 +39,13 @@ MAX_WAVES = 50
 def seed_frontier(
     spark: SparkSession, wh: Warehouse, seeds: list[tuple[str, float]],
     strip_tracking: bool = False,
-) -> DataFrame:
-    """Wave-0 frontier from parsed seed URLs (reference cli.rs:114-117:
-    unparsable seeds abort; here they are dropped with the same effect of
-    never being crawled). ``strip_tracking`` applies the same tracking-param
-    canonicalization the waves apply to extracted children — the seed must
-    live in the same URL space as the seen set it founds."""
+) -> int:
+    """Write the wave-0 frontier from parsed seed URLs and return its row
+    count (reference cli.rs:114-117: unparsable seeds abort; here they are
+    dropped with the same effect of never being crawled). ``strip_tracking``
+    applies the same tracking-param canonicalization the waves apply to
+    extracted children — the seed must live in the same URL space as the
+    seen set it founds."""
     from ..functions.urlnorm import parse_absolute, strip_tracking_params
 
     rows = []
@@ -57,7 +58,7 @@ def seed_frontier(
     df = spark.createDataFrame(rows, "wave int, url string, priority double")
     df = with_host(with_url_hash(df)).select("wave", "url", "url_hash", "host", "priority")
     wh.write_wave_table("frontier", 0, df)
-    return df
+    return len(rows)
 
 
 def crawl(
@@ -70,8 +71,9 @@ def crawl(
 ) -> dict:
     """Run (or resume) a crawl; returns summary counts."""
     start_wave = wh.last_wave + 1
+    frontier_rows = 0
     if start_wave == 0:
-        seed_frontier(spark, wh, seeds, strip_tracking=cfg.strip_tracking)
+        frontier_rows = seed_frontier(spark, wh, seeds, strip_tracking=cfg.strip_tracking)
 
     # politeness state is checkpointed: parsed from the corpus robots.txt
     # pages once per warehouse, read back from it on every call
@@ -103,11 +105,13 @@ def crawl(
         if residual is not None:
             _flush_residual(wh, residual, final_wave)
     else:
+        # the loop ends on the committed frontier size, not a count job: the
+        # seed count, then each wave's manifest ``new_frontier`` (a depth-mode
+        # residual flush commits none: nothing is left to crawl)
+        if start_wave > 0:
+            frontier_rows = wh.wave_counts(start_wave - 1).get("new_frontier", 0)
         wave = start_wave
-        while wave < MAX_WAVES:
-            frontier = wh.read_frontier(wave)
-            if frontier is None or frontier.limit(1).count() == 0:
-                break
+        while wave < MAX_WAVES and frontier_rows:
             extra = (
                 sitemap_children(
                     spark, pages, seed_urls,
@@ -121,6 +125,7 @@ def crawl(
             )
             summary["waves"] += 1
             summary["scheduled_total"] += counts["scheduled"]
+            frontier_rows = counts["new_frontier"]
             wave += 1
     return summary
 

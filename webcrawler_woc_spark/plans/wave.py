@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from ..config import CrawlConfig
 from ..operators.bloom import SEEN_FILTERS
 from ..operators.extract import extract_child_links, mime_ok
-from ..operators.fetch import fetch_join, with_host, with_url_hash
+from ..operators.fetch import fetch_join, fetch_matched, with_host, with_url_hash
 from ..operators.politeness import schedule_wave
 from ..operators.routing import (
     broadcast_tag,
@@ -93,24 +93,24 @@ def run_wave(
     scheduled, deferred = schedule_wave(frontier, robots, cfg.host_budget)
     scheduled = scheduled.cache()  # reused: fetch, seen-filter build, anti-join
 
-    # -- fetch simulation ---------------------------------------------------
+    # -- fetch (one response frame per wave) --------------------------------
+    # ``fetched`` has fetch_join's columns in both modes; its ``fetched`` and
+    # ``content_type`` decide the links_out metadata AND which bodies are
+    # parsed (``gated`` below), so the two cannot diverge. In join mode
     # ``matched`` is cached so the corpus is scanned EXACTLY ONCE per wave:
     # the fetch-failure anti-join, the word scan, extraction, and the text
     # write all read the (wave-bounded) hit set from cache, never rescanning
     # pages. At 10^10-URL scale this cache is the wave's politeness-bounded
     # working set (use MEMORY_AND_DISK semantics — Spark default spills).
-    from ..operators.fetch import fetch_matched
-
     if cfg.fetch_mode == "http":
         # real HTTP fetch (operators/httpfetch.py): one mapInPandas pool per
-        # host partition, same output contract as fetch_join, so the rest of
-        # the wave is mode-agnostic. localCheckpoint (NOT cache): the live
-        # fetch is non-deterministic, so its output must be PINNED — cache
-        # eviction / task retry would re-issue real GETs and let the two
-        # consumers (slim metadata path, gated extraction path) observe
-        # different responses, breaking wave determinism and politeness.
-        # Lineage truncation makes recompute impossible by construction.
-        # eager=False: the first action below materializes it exactly once.
+        # host partition. localCheckpoint (NOT cache): the live fetch is
+        # non-deterministic, so its output must be PINNED — cache eviction /
+        # task retry would re-issue real GETs and let the two consumers (slim
+        # metadata path, gated extraction path) observe different responses,
+        # breaking wave determinism and politeness. Lineage truncation makes
+        # recompute impossible by construction. eager=False: the first action
+        # below materializes it exactly once.
         from ..operators.httpfetch import http_fetch_join
 
         matched = http_fetch_join(
@@ -130,7 +130,12 @@ def run_wave(
             timeout_ms=cfg.timeout_ms,
             frontier_rows=frontier_rows,
         )
+    # the body gate (crawler.rs:209-227): fetched (corpus hit, not timed
+    # out, or a 2xx over the wire) AND the exact MIME gate
     gate = F.col("fetched") & mime_ok(F.col("content_type"))
+    # in join mode the failed-fetch union branch folds away under the gate:
+    # one Filter over the matched cache
+    gated = fetched.filter(gate).select("url", "html")
     if cfg.words:
         words_udf = make_contains_words_udf(cfg.words)
         fetched = fetched.withColumn(
@@ -140,7 +145,7 @@ def run_wave(
         fetched = fetched.withColumn("contains_words", F.lit(False))
     # metadata consumers (self rows, flagged, counts, lineage) never need the
     # page bytes — cache the slim projection, not the html payload.
-    fetched = fetched.drop("html", "page_text").cache()
+    fetched = fetched.drop("html").cache()
 
     # -- self rows: every scheduled URL becomes a crawled Link, carrying its
     # politeness slot (the crawl-order view reads it back) -----------------
@@ -160,23 +165,6 @@ def run_wave(
     )
 
     # -- extraction ---------------------------------------------------------
-    # html lives only in the matched cache; the body gate (MIME + timeout) is
-    # THE shared html_body_gate expression — identical to fetch_join's, so
-    # links_out metadata and the extracted corpus cannot diverge.
-    from ..operators.extract import html_body_gate
-
-    if cfg.fetch_mode == "http":
-        # http mode gates on the ACTUAL response metadata (fetched already
-        # encodes timeout/refused; content_type came off the wire)
-        gated = matched.filter(
-            F.col("fetched") & mime_ok(F.col("content_type"))
-        ).select("url", "html")
-    else:
-        if content_type_expr is None:
-            from ..sources.corpus import default_content_type_expr as content_type_expr
-        gated = matched.filter(
-            html_body_gate(F.col("url"), content_type_expr, cfg.timeout_ms)
-        ).select("url", "html")
     children = extract_child_links(gated).select("url", "link_type")
     if cfg.strip_tracking:
         # tracking-param canonicalization BEFORE the wave dedup, so utm_*

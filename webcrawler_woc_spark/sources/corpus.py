@@ -47,6 +47,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# the fetch simulation owns the fetch-time Content-Type rule; the corpus
+# generator re-exports it next to its Python twin below
+from ..operators.fetch import default_content_type_expr  # noqa: F401
+
 N_HOSTS = 10
 EPOCH_2026 = 1767225600  # 2026-01-01T00:00:00Z
 
@@ -170,24 +174,6 @@ def pages_from_documents(spark: SparkSession, sf_dir: str, n_docs: int | None = 
     if n_docs is None:
         n_docs = documents.count()
     return doc_pages(documents, n_docs).unionByName(robots_sitemap_pages(spark, n_docs))
-
-
-def default_content_type_expr(url: Column) -> Column:
-    """Fetch-time Content-Type derivation rule for the derived corpus
-    (FIXTURES.md §1): *.txt -> text/plain; doc_id%100<5 -> charset=utf-8;
-    doc_id%100 in (5,6) -> charset=iso-8859-1 (fails the exact MIME gate);
-    else text/html."""
-    # guarded cast: non-/page/ urls extract '' and a bare ANSI cast of ''
-    # THROWS under Spark 4 — the CASE branch keeps the cast unevaluated
-    # until the match is known non-empty (python twin returns text/html)
-    d = F.regexp_extract(url, r"/page/(\d+)$", 1)
-    doc_id = F.when(d != "", d.cast("bigint"))
-    return (
-        F.when(url.endswith(".txt"), F.lit("text/plain"))
-        .when(doc_id % 100 < 5, F.lit("text/html; charset=utf-8"))
-        .when((doc_id % 100 >= 5) & (doc_id % 100 < 7), F.lit("text/html; charset=iso-8859-1"))
-        .otherwise(F.lit("text/html"))
-    )
 
 
 def default_content_type_py(url: str) -> str:
