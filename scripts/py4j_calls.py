@@ -89,6 +89,52 @@ def pick_seeds(pages, n: int, seed: int) -> list[tuple[str, float]]:
     return [(ok[int(i)], 1.0) for i in picked]
 
 
+def polite_config(seeds: list[tuple[str, float]]):
+    """The ``crawl_polite``-shaped config over the seeds' hosts."""
+    from webcrawler_woc_spark.config import CrawlConfig
+    from webcrawler_woc_spark.functions.urlnorm import host_of
+
+    return CrawlConfig(
+        whitelist=sorted({host_of(u) for u, _ in seeds}), words=["merge"], depth=2,
+        timeout_ms=TIMEOUT_MS, host_budget=32, respect_disallow=True,
+        seen_filter="cuckoo", seen_probe="sharded",
+    )
+
+
+def crawl_wave0(spark, pages, seeds, cfg, snapshot: str) -> None:
+    """Run wave 0 of the crawl into a warehouse at ``snapshot``."""
+    from webcrawler_woc_spark.plans import crawl as crawl_mod
+    from webcrawler_woc_spark.plans.state import Warehouse
+
+    run_wave = crawl_mod.run_wave
+
+    def first_wave_only(spark_, wh_, pages_, wave, *a, **kw):
+        if wave > 0:
+            raise _StopAfterWave0
+        return run_wave(spark_, wh_, pages_, wave, *a, **kw)
+
+    crawl_mod.run_wave = first_wave_only
+    try:
+        crawl_mod.crawl(spark, Warehouse(spark, snapshot), pages, seeds, cfg)
+    except _StopAfterWave0:
+        pass
+    finally:
+        crawl_mod.run_wave = run_wave
+
+
+def resumable_copy(spark, snapshot: str, path: str):
+    """A copy of the wave-0 warehouse at ``path``, opened for a resume."""
+    from webcrawler_woc_spark.plans.state import Warehouse
+
+    shutil.copytree(snapshot, path)
+    manifest = os.path.join(path, "manifest.json")
+    with open(manifest) as f:
+        text = f.read()
+    with open(manifest, "w") as f:
+        f.write(text.replace(snapshot + os.sep, path + os.sep))
+    return Warehouse(spark, path)
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--pages", required=True, help="pages corpus parquet")
@@ -98,10 +144,7 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--conf", action="append", default=[], metavar="KEY=VALUE")
     args = ap.parse_args(argv)
 
-    from webcrawler_woc_spark.config import CrawlConfig
-    from webcrawler_woc_spark.functions.urlnorm import host_of
     from webcrawler_woc_spark.plans import crawl as crawl_mod
-    from webcrawler_woc_spark.plans.state import Warehouse
     from webcrawler_woc_spark.session import get_spark
 
     extra = dict(kv.split("=", 1) for kv in args.conf)
@@ -110,41 +153,15 @@ def main(argv: list[str] | None = None) -> int:
     try:
         pages = spark.read.parquet(args.pages)
         seeds = pick_seeds(pages, args.seeds, args.seed)
-        hosts = sorted({host_of(u) for u, _ in seeds})
-        cfg = CrawlConfig(
-            whitelist=hosts, words=["merge"], depth=2, timeout_ms=TIMEOUT_MS,
-            host_budget=32, respect_disallow=True, seen_filter="cuckoo",
-            seen_probe="sharded",
-        )
-
+        cfg = polite_config(seeds)
         snapshot = os.path.join(work, "wave0")
-        run_wave = crawl_mod.run_wave
-
-        def first_wave_only(spark_, wh_, pages_, wave, *a, **kw):
-            if wave > 0:
-                raise _StopAfterWave0
-            return run_wave(spark_, wh_, pages_, wave, *a, **kw)
-
-        crawl_mod.run_wave = first_wave_only
-        try:
-            crawl_mod.crawl(spark, Warehouse(spark, snapshot), pages, seeds, cfg)
-        except _StopAfterWave0:
-            pass
-        finally:
-            crawl_mod.run_wave = run_wave
+        crawl_wave0(spark, pages, seeds, cfg, snapshot)
 
         counter = CallCounter()
         counter.install()
         tracker = spark.sparkContext.statusTracker()  # jobs outside any group
         for i in range(args.warm + 1):
-            path = os.path.join(work, f"call{i}")
-            shutil.copytree(snapshot, path)
-            manifest = os.path.join(path, "manifest.json")
-            with open(manifest) as f:
-                text = f.read()
-            with open(manifest, "w") as f:
-                f.write(text.replace(snapshot + os.sep, path + os.sep))
-            wh = Warehouse(spark, path)
+            wh = resumable_copy(spark, snapshot, os.path.join(work, f"call{i}"))
             counter.on = i == args.warm
             jobs_before = set(tracker.getJobIdsForGroup(None))
             t0 = time.time()

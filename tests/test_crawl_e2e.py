@@ -451,6 +451,156 @@ class TestBroadcastFallbackEquivalence:
         assert fallback == base
 
 
+class TestChildrenGateReplan:
+    def test_replanned_wave_matches_ungated_crawl(self, spark, pages, monkeypatch, tmp_path):
+        """run_wave plans its routing for the broadcast case while the
+        children fill runs, and plans it again only when the fill reports
+        more than BROADCAST_MAX_ROWS children. With the gate between one
+        wave's frontier size and its children count (and at or above every
+        frontier, seen-set and rejected-set size of the crawl), only that
+        gate flips: the wave routes twice and the crawl equals the ungated
+        one."""
+        import webcrawler_woc_spark.config as cfgmod
+        from webcrawler_woc_spark.plans import wave as wave_mod
+
+        cfg = CrawlConfig(whitelist=WHITELIST, words=WORDS, depth=3)
+
+        def run(path):
+            wh = Warehouse(spark, str(path))
+            crawl(spark, wh, pages, SEEDS, cfg)
+            seen = sorted(r["url"] for r in read_seen(wh).collect())
+            order = sorted(
+                (r["wave"], r["host"], r["slot"], r["url"]) for r in read_crawl_order(wh).collect()
+            )
+            links = sorted(map(repr, read_links_out(wh).collect()))
+            counts = {w: i["counts"] for w, i in wh.manifest["waves"].items()}
+            return seen, order, links, counts
+
+        base = run(tmp_path / "ungated")
+        waves = [base[3][str(w)] for w in range(cfg.depth)]
+        sizes = [
+            max(
+                w["frontier_in"],
+                sum(v["scheduled"] for v in waves[: i + 1]),
+                sum(v["new_rejected"] for v in waves[:i]),
+            )
+            for i, w in enumerate(waves)
+        ]
+        gate = max(sizes)
+        flipped = [i for i, w in enumerate(waves) if w["extracted_links"] > gate]
+        assert flipped, "the fixture needs a wave with more children than any other size"
+
+        routes = []
+        split = wave_mod.split_children
+
+        def spy(*a, **kw):
+            routes.append(1)
+            return split(*a, **kw)
+
+        monkeypatch.setattr(wave_mod, "split_children", spy)
+        monkeypatch.setattr(cfgmod, "BROADCAST_MAX_ROWS", gate)
+        assert run(tmp_path / "gated") == base
+        assert len(routes) == cfg.depth + len(flipped)
+
+
+class TestWaveJobs:
+    def test_resumed_budgeted_wave_job_count(self, spark, pages):
+        """The Spark jobs of one resumed budgeted wave (robots Crawl-delay
+        and Disallow, a 10 s timeout, a word scan), counted with the status
+        tracker: the schedule fill, the children fill, three table writes
+        and the lineage. The layout before the ranked cache and the
+        pipelined fills (a lineage + slim fetched fill and a deduped fill
+        between the fills and the writes, a frontier write that re-read the
+        frontier and anti-joined the scheduled urls) ran 31 on this wave."""
+        from webcrawler_woc_spark.operators import politeness
+        from webcrawler_woc_spark.plans.crawl import seed_frontier
+        from webcrawler_woc_spark.plans.wave import run_wave
+
+        cfg = CrawlConfig(
+            whitelist=WHITELIST, words=["merge"], depth=2, host_budget=2,
+            timeout_ms=10_000, respect_disallow=True,
+        )
+        seeds = [("http://host0.example/page/260", 1.0), ("http://host1.example/page/111", 1.0)]
+        tracker = spark.sparkContext.statusTracker()
+        with tempfile.TemporaryDirectory() as tmp:
+            wh = Warehouse(spark, tmp)
+            seed_frontier(spark, wh, seeds)
+            robots = wh.politeness_table(
+                "robots_delay", lambda: politeness.parse_robots_crawl_delay(pages)
+            )
+            disallow = wh.politeness_table(
+                "robots_disallow", lambda: politeness.parse_robots_disallow(pages)
+            )
+            run_wave(spark, wh, pages, 0, cfg, robots, None, None, disallow)
+            wh = Warehouse(spark, tmp)  # the resumed call
+            before = set(tracker.getJobIdsForGroup(None))
+            counts = run_wave(spark, wh, pages, 1, cfg, robots, None, None, disallow)
+            jobs = len(set(tracker.getJobIdsForGroup(None)) - before)
+        assert counts["fetched"] and counts["extracted_links"] and counts["frontier_in"] > counts["scheduled"]
+        assert jobs == 21, counts
+
+
+class TestLatencyHash:
+    """``synth_fetch_ms`` holds one ``aggregate`` over the url's characters
+    (its square-and-mod mix is the finish lambda), and ``fetch_join``
+    projects ``fetched`` once, deriving the response columns from it."""
+
+    FOLD = "aggregate(filter(split(url"  # the latency hash's fold, as a plan prints it
+
+    def test_values_unchanged(self, spark, pages):
+        """Value for value on the corpus: the two-aggregate form it
+        replaced, and the oracle's Python twin."""
+        from webcrawler_woc_spark.operators.fetch import FETCH_MS_MOD, synth_fetch_ms
+        from webcrawler_woc_spark.oracle.pyoracle import _fetch_ms
+
+        url = F.col("url")
+        fp = F.aggregate(
+            F.filter(F.split(url, ""), lambda c: c != ""),
+            F.lit(0).cast("bigint"),
+            lambda acc, c: (acc * 31 + F.ascii(c)) % FETCH_MS_MOD,
+        )
+        m = F.pmod(fp, F.lit(1_000_003))
+        rows = pages.select(
+            "url", synth_fetch_ms(url).alias("got"), F.pmod(m * m, F.lit(19_997)).alias("want")
+        ).collect()
+        assert len(rows) > 100
+        for r in rows:
+            assert r["got"] == r["want"] == _fetch_ms(r["url"]), r["url"]
+
+    def test_fewer_copies_in_the_wave_plans(self, spark, pages, monkeypatch, tmp_path):
+        """Copies of the fold in the optimized plans (cached subplans
+        included) of a 10 s-timeout wave's ``gated`` frame and links_out
+        write. With ``fetched`` inlined into each response column, two
+        folds per copy and links_out reading a slim cache of every column,
+        they held 6 and 104."""
+        from webcrawler_woc_spark.plans import wave as wave_mod
+
+        plans = {}
+        extract = wave_mod.extract_child_links
+        write = Warehouse.write_wave_table
+
+        def optimized(df) -> str:
+            return df._jdf.queryExecution().optimizedPlan().toString()
+
+        def spy_extract(gated):
+            plans["gated"] = gated
+            return extract(gated)
+
+        def spy_write(self, table, wave, df):
+            if (table, wave) == ("links_out", 0):  # as the writes run: caches filled
+                plans["gated"] = optimized(plans["gated"])
+                plans["links_out"] = optimized(df)
+            return write(self, table, wave, df)
+
+        monkeypatch.setattr(wave_mod, "extract_child_links", spy_extract)
+        monkeypatch.setattr(Warehouse, "write_wave_table", spy_write)
+        cfg = CrawlConfig(whitelist=WHITELIST, words=WORDS, depth=1, timeout_ms=10_000)
+        crawl(spark, Warehouse(spark, str(tmp_path)), pages,
+              [("http://host0.example/page/20", 1.0)], cfg)
+        copies = {k: v.count(self.FOLD) for k, v in plans.items()}
+        assert copies == {"gated": 3, "links_out": 11}
+
+
 class TestSeenProbeGate:
     """One size gate decides whether a wave probes the seen filter, for every
     filter kind and probe mode: while the cumulative seen set is at most

@@ -16,6 +16,9 @@ CASES = [
     "foo:bar",
     "ftp://files.example/a",
     "http://host3.example/",
+    # a file URL's empty host is no host, on both sides
+    "file:///etc/passwd",
+    "file://h.example/p",
 ]
 
 

@@ -233,6 +233,99 @@ class TestFailedWaveWrite:
             )
 
 
+def _tree_digest(root: str) -> dict:
+    """relative path -> content hash of every file under ``root``."""
+    import hashlib
+
+    out = {}
+    for d, _, files in os.walk(root):
+        for name in files:
+            path = os.path.join(d, name)
+            with open(path, "rb") as f:
+                out[os.path.relpath(path, root)] = hashlib.sha256(f.read()).hexdigest()
+    return out
+
+
+def _fill_threads() -> set:
+    import threading
+
+    return {t for t in threading.enumerate() if t.name.startswith("ThreadPoolExecutor")}
+
+
+class TestFailedFill:
+    """run_wave runs its schedule and children fills on a background thread
+    while it plans the writes. A job that fails in either fill fails the
+    wave: the error reaches the caller, nothing is committed, the warehouse
+    and the committed sidecar are unchanged byte for byte, no fill or pool
+    thread and no Spark job is left running, and a rerun commits what an
+    uninterrupted crawl commits. The probe gate is forced to 0 so wave 0
+    commits a sidecar; the host budget makes the ranked frontier defer."""
+
+    @pytest.mark.parametrize("fill", ["schedule", "children"])
+    def test_failed_fill_commits_nothing_and_rerun_matches(
+        self, spark, pages, monkeypatch, fill
+    ):
+        from pyspark.sql import functions as F
+
+        import webcrawler_woc_spark.config as cfgmod
+        from webcrawler_woc_spark.plans import wave as wave_mod
+        from webcrawler_woc_spark.plans.crawl import seed_frontier
+
+        monkeypatch.setattr(cfgmod, "BROADCAST_MAX_ROWS", 0)
+        cfg = CrawlConfig(whitelist=WL, depth=2, n_buckets=8, seen_filter="bloom", host_budget=1)
+        message = f"injected {fill} fill failure"
+
+        def boom(url):
+            raise RuntimeError(message)
+
+        failing = F.udf(boom, "string")
+
+        def wave0(path):
+            wh = Warehouse(spark, path)
+            seed_frontier(spark, wh, SEEDS)
+            wave_mod.run_wave(spark, wh, pages, 0, cfg)
+            return Warehouse(spark, path)
+
+        def finish(wh):
+            wave_mod.run_wave(spark, wh, pages, 1, cfg)
+            crawl(spark, wh, pages, SEEDS, cfg)  # depth reached: residual flush only
+
+        with tempfile.TemporaryDirectory() as t1, tempfile.TemporaryDirectory() as t2:
+            wh_ref = wave0(t1)
+            finish(wh_ref)
+
+            wh = wave0(t2)
+            before = _tree_digest(t2)
+            threads = _fill_threads()
+            with monkeypatch.context() as mp:
+                if fill == "schedule":
+                    rank = wave_mod.rank_frontier
+                    mp.setattr(
+                        wave_mod, "rank_frontier",
+                        lambda *a, **kw: rank(*a, **kw).withColumn("url", failing("url")),
+                    )
+                else:
+                    extract = wave_mod.extract_child_links
+                    mp.setattr(
+                        wave_mod, "extract_child_links",
+                        lambda gated: extract(gated).withColumn("url", failing("url")),
+                    )
+                with pytest.raises(Exception, match=message):
+                    wave_mod.run_wave(spark, wh, pages, 1, cfg)
+            assert wh.last_wave == 0
+            assert _tree_digest(t2) == before  # manifest, tables and sidecar
+            assert _fill_threads() <= threads
+            assert list(spark.sparkContext.statusTracker().getActiveJobsIds()) == []
+
+            finish(wh)
+            assert _comparable_manifest(wh) == _comparable_manifest(wh_ref)
+            assert _state(wh) == _state(wh_ref)
+            _assert_same_arrays(
+                _filter_arrays(wh.load_seen_filter(), os.path.join(t2, "got.npz")),
+                _filter_arrays(wh_ref.load_seen_filter(), os.path.join(t1, "want.npz")),
+            )
+
+
 def _uncommit_wave0(wh) -> dict:
     """Erase wave 0's manifest entry, as a kill after its table writes but
     before its manifest commit leaves it; returns the tables' paths."""

@@ -43,6 +43,17 @@ WHATWG_CASES = [
     ("http://a%00b.example/", None),
     ("http://a%25b.example/", None),
     ("http://a^b.example/", None),
+    # a file URL's host may be empty; localhost and a drive letter are no host
+    ("file:///etc/passwd", "file:///etc/passwd"),
+    ("file:///", "file:///"),
+    ("file://", "file:///"),
+    ("file:/etc/passwd", "file:///etc/passwd"),
+    ("file:etc", "file:///etc"),
+    ("file://h.example/p", "file://h.example/p"),
+    ("file://LOCALHOST/p", "file:///p"),
+    ("file://C:/x", "file:///C:/x"),
+    ("file:///a/./b/../c?q#f", "file:///a/c?q#f"),
+    ("file:\\\\h.example\\p", "file://h.example/p"),
 ]
 
 
@@ -75,6 +86,11 @@ def test_whatwg_case(raw, expected):
         ("http://o.example/p;", "http://o.example/p;"),
         ("https:p", "https://p/"),
         ("", BASE),
+        # a special base reads "\" as "/" before the query and fragment
+        ("\\\\o.example/p", "http://o.example/p"),
+        ("\\x\\y", "http://host0.example/x/y"),
+        ("a\\b", "http://host0.example/page/a/b"),
+        ("http:\\\\o.example\\p", "http://o.example/p"),
     ],
 )
 def test_whatwg_join_case(rel, expected):
@@ -97,6 +113,14 @@ WHATWG_JOIN_CASES = [
     # only a special scheme makes a same-scheme rel relative
     ("foo://h.example/a/b", "foo:x", "foo:x"),
     ("foo://h.example/a/b", "x", "foo://h.example/a/x"),
+    # "\" is a path separator only in a special URL
+    ("http://h.example/a/b", "\\\\o.example/p", "http://o.example/p"),
+    ("http://h.example/a/b", "\\x\\y", "http://h.example/x/y"),
+    ("http://h.example/a/b", "a\\b", "http://h.example/a/a/b"),
+    ("foo://h.example/a/b", "x\\y", "foo://h.example/a/x\\y"),
+    # a file base with an empty host joins paths
+    ("file:///etc/passwd", "x", "file:///etc/x"),
+    ("file:///etc/passwd", "../y?q", "file:///y?q"),
 ]
 
 

@@ -27,7 +27,11 @@ WHATWG behaviors implemented (public spec, https://url.spec.whatwg.org):
   existing ``%`` bytes are never re-encoded or decoded;
 * non-special schemes (mailto:, tel:, ...) keep an opaque path;
 * fragments are preserved (the reference does NOT strip fragments unless the
-  raw href *starts* with ``#``).
+  raw href *starts* with ``#``);
+* a special URL reads ``\\`` as ``/`` (in a relative reference, before its
+  query and fragment);
+* a ``file:`` URL's host may be empty (``file:///etc/passwd``), and
+  ``localhost`` or a Windows drive letter is no host.
 
 Known gap: numeric IPv4 hosts are not parsed (``http://0x7f.1/`` stays as
 written; WHATWG and the url crate give ``http://127.0.0.1/``).
@@ -172,22 +176,25 @@ def parse_absolute(raw: str) -> str | None:
             out += "#" + _pct_encode(frag, _FRAG_SAFE)
         return out
 
+    userinfo = ""
+    port: str | None = None
+    if scheme == "file":
+        # a file URL's host may be empty ("file:///etc/passwd"); it has no
+        # userinfo or port
+        parsed = _file_host(rest)
+        if parsed is None:
+            return None
+        host, tail = parsed
+        return _with_path(f"file://{host}", tail)
+
     # Special scheme: authority required. WHATWG tolerates 0..n slashes.
     rest2 = rest.lstrip("/\\")
     if rest2 == "":
         return None  # e.g. "http://" — empty host is a parse error
-    # split authority / path?query#fragment
-    sep_idx = len(rest2)
-    for i, ch in enumerate(rest2):
-        if ch in "/?#\\":
-            sep_idx = i
-            break
-    authority = rest2[:sep_idx]
-    tail = rest2[sep_idx:].replace("\\", "/")
+    authority, tail = _split_authority(rest2)
     if authority == "":
         return None
 
-    userinfo = ""
     hostport = authority
     if "@" in authority:
         userinfo, hostport = authority.rsplit("@", 1)
@@ -195,7 +202,6 @@ def parse_absolute(raw: str) -> str | None:
     if hostport == "":
         return None
     # IPv6 literal
-    port: str | None = None
     if hostport.startswith("["):
         end = hostport.find("]")
         if end == -1:
@@ -224,6 +230,45 @@ def parse_absolute(raw: str) -> str | None:
         elif int(port) > 65535:
             return None
 
+    out = f"{scheme}://{userinfo}{host}"
+    if port is not None:
+        out += f":{port}"
+    return _with_path(out, tail)
+
+
+def _split_authority(rest: str) -> tuple[str, str]:
+    """(authority, path?query#fragment) of a special URL's text after its
+    scheme and slashes; a backslash is a slash."""
+    sep_idx = len(rest)
+    for i, ch in enumerate(rest):
+        if ch in "/?#\\":
+            sep_idx = i
+            break
+    return rest[:sep_idx], rest[sep_idx:].replace("\\", "/")
+
+
+_DRIVE_LETTER_RE = re.compile(r"^[A-Za-z][:|]$")
+
+
+def _file_host(rest: str) -> tuple[str, str] | None:
+    """(host, path?query#fragment) of a file URL's text after ``file:``, as
+    the WHATWG file states read it: a host only after two slashes, empty
+    when the authority is empty, a Windows drive letter or ``localhost``;
+    None when the host is invalid."""
+    if rest[:1] not in ("/", "\\") or rest[1:2] not in ("/", "\\"):
+        return "", rest.replace("\\", "/")
+    authority, tail = _split_authority(rest[2:])
+    if authority == "" or _DRIVE_LETTER_RE.match(authority):
+        return "", rest[2:].replace("\\", "/")
+    host = _domain_to_ascii(authority)
+    if not host:
+        return None
+    return ("" if host == "localhost" else host), tail
+
+
+def _with_path(out: str, tail: str) -> str:
+    """``out`` (scheme, authority) + the canonical path, query and fragment
+    of a special URL's ``tail``."""
     frag = None
     if "#" in tail:
         tail, frag = tail.split("#", 1)
@@ -234,12 +279,7 @@ def parse_absolute(raw: str) -> str | None:
     path = _remove_dot_segments(path)
     if not path.startswith("/"):
         path = "/" + path
-    path = _pct_encode(path, _PATH_SAFE)
-
-    out = f"{scheme}://{userinfo}{host}"
-    if port is not None:
-        out += f":{port}"
-    out += path
+    out += _pct_encode(path, _PATH_SAFE)
     if query is not None:
         out += "?" + _pct_encode(query, _SPECIAL_QUERY_SAFE)
     if frag is not None:
@@ -266,6 +306,7 @@ def _parse_absolute_cached(s: str) -> str | None:
 
 
 _rel_scheme_re = re.compile(r"^[A-Za-z][A-Za-z0-9+.\-]*:")
+_PATH_END_RE = re.compile(r"[?#]")
 
 
 def _fast_join(bscheme: str, bnetloc: str, bpath: str, rel: str) -> str | None:
@@ -277,8 +318,8 @@ def _fast_join(bscheme: str, bnetloc: str, bpath: str, rel: str) -> str | None:
     fragment ('p?' -> '.../p?') and an empty ';params' part, as WHATWG does.
     Returns None for the rels join_url resolves before it reaches here.
     """
-    if not rel or not bnetloc or rel.startswith("//") or _rel_scheme_re.match(rel):
-        return None  # authority-less bases (mailto:, data:) never join here
+    if not rel or rel.startswith("//") or _rel_scheme_re.match(rel):
+        return None  # join_url resolves these before it calls here
     frag = None
     if "#" in rel:
         rel, frag = rel.split("#", 1)
@@ -326,10 +367,12 @@ def join_url(base: str, rel: str) -> str | None:
     A rel with a scheme is parsed as an absolute URL, unless the base's
     scheme is special and the same (``http:p`` against an http base), where it
     resolves as the scheme-less rel (``p``). A scheme-less rel against a base
-    without an authority (``mailto:``) resolves to None. Then: empty -> the
-    base up to its fragment; query- or fragment-only -> the base up to the
-    replaced part; protocol-relative -> the base's scheme + the rel, parsed
-    as absolute; anything else is a path, joined by ``_fast_join``.
+    without an authority (``mailto:``; a ``file:`` base may have an empty
+    host) resolves to None. Against a special base a ``\\`` before the
+    rel's query and fragment is a ``/``. Then: empty -> the base up to its
+    fragment; query- or fragment-only -> the base up to the replaced part;
+    protocol-relative -> the base's scheme + the rel, parsed as absolute;
+    anything else is a path, joined by ``_fast_join``.
     """
     parts = _base_cache.get(base, _MISS)
     if parts is _MISS:
@@ -357,8 +400,13 @@ def join_url(base: str, rel: str) -> str | None:
         rel_clean = rel_clean[scheme.end():]
         if _rel_scheme_re.match(rel_clean):
             rel_clean = "./" + rel_clean  # a path segment, not a scheme
-    if not bnetloc:
+    if not bnetloc and bscheme != "file":
         return None
+    if "\\" in rel_clean and bscheme in SPECIAL_SCHEMES:
+        # a special URL reads "\" as "/" before its query and fragment
+        cut = _PATH_END_RE.search(rel_clean)
+        cut = cut.start() if cut else len(rel_clean)
+        rel_clean = rel_clean[:cut].replace("\\", "/") + rel_clean[cut:]
     if not rel_clean:
         joined = base_canon.split("#", 1)[0]
     elif rel_clean[0] in "?#":
@@ -452,7 +500,8 @@ def host_of(url: str) -> str | None:
     m = _SCHEME_RE.match(url)
     if not m or m.group(1).lower() not in SPECIAL_SCHEMES:
         return None
-    rest = m.group(2).lstrip("/")
+    rest = m.group(2)
+    rest = rest[2:] if rest.startswith("//") else rest.lstrip("/")
     end = len(rest)
     for i, ch in enumerate(rest):
         if ch in "/?#":

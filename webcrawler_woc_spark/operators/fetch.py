@@ -38,15 +38,21 @@ def synth_fetch_ms(url: Column) -> Column:
     mix — the raw rolling hash has NO avalanche (urls sharing a prefix land
     in one contiguous block, so whole url families would share a timeout
     fate); squaring makes neighbors jump ~2m apart mod a prime. All
-    intermediates < 2^63, engine-identical integer math."""
+    intermediates < 2^63, engine-identical integer math. The mix is the
+    aggregate's finish lambda, so the expression holds ONE aggregate over
+    the url's characters (``m * m`` of an inlined ``m`` would hold two)."""
     chars = F.filter(F.split(url, ""), lambda c: c != "")
-    fp = F.aggregate(
+
+    def mix(fp):
+        m = F.pmod(fp, F.lit(1_000_003))
+        return F.pmod(m * m, F.lit(19_997))
+
+    return F.aggregate(
         chars,
         F.lit(0).cast("bigint"),
         lambda acc, c: (acc * 31 + F.ascii(c)) % FETCH_MS_MOD,
+        mix,
     )
-    m = F.pmod(fp, F.lit(1_000_003))
-    return F.pmod(m * m, F.lit(19_997))
 
 
 def synth_ipv4(host: Column) -> Column:
@@ -171,13 +177,17 @@ def fetch_join(
         F.lit(None).cast("binary").alias("html"),
     )
     joined = matched.select(*keys, "p_url", "html").unionByName(failed)
-    fetched = F.col("p_url").isNotNull()
+    ok = F.col("p_url").isNotNull()
     if timeout_ms is not None:
         # timed-out rows keep their frontier identity but lose the response
         # (body never read, crawler.rs:209-216) — same shape as a miss
-        fetched = fetched & (synth_fetch_ms(F.col("url")) < F.lit(timeout_ms))
-        joined = joined.select(*keys, "p_url", F.when(fetched, F.col("html")).alias("html"))
+        ok = ok & (synth_fetch_ms(F.col("url")) < F.lit(timeout_ms))
+    # ``fetched`` is projected once, and every column below reads it: the
+    # latency expression is not inlined into each of them
+    joined = joined.select(*keys, "html", ok.alias("fetched"))
+    fetched = F.col("fetched")
     content_type = content_type_expr(F.col("url"))
+    html = F.when(fetched, F.col("html")) if timeout_ms is not None else F.col("html")
     headers = F.when(
         fetched,
         F.create_map(
@@ -188,12 +198,12 @@ def fetch_join(
     host = F.col("host")
     return joined.select(
         *keys,
-        fetched.alias("fetched"),
+        fetched,
         F.when(fetched, content_type).alias("content_type"),
         headers.alias("headers"),
         F.when(fetched, synth_ipv4(host)).alias("ipv4"),
         F.when(fetched, synth_ipv6(host)).alias("ipv6"),
-        F.col("html"),
+        html.alias("html"),
     )
 
 

@@ -13,16 +13,18 @@ The Python oracle implements the identical rule, making "matching crawl
 ordering" testable.
 
 Scale notes: the window per host is the classic skew hazard (a hot host with
-10^7 frontier URLs lands on one task). ``schedule_wave`` therefore pre-trims
+10^7 frontier URLs lands on one task). ``rank_frontier`` therefore pre-trims
 each host partition with a cheap salted partial top-k (group by
 (host, salt) -> local top-budget) before the exact per-host window, bounding
-any single task to salt_buckets * budget rows. AQE skew-join handles the
-residual.
+the exact window's input to salt_buckets * budget rows per host; the trimmed
+rows stay in their salt partitions. AQE skew-join handles the residual. The
+ranked frame keeps every frontier row, so ``scheduled`` and ``deferred`` are
+two filters of it: no anti-join splits them.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 DEFAULT_CRAWL_DELAY = 1
@@ -229,6 +231,71 @@ def filter_disallowed(frontier: DataFrame, disallow: DataFrame) -> DataFrame:
     return fr.join(d, cond, "left_anti").drop("_path")
 
 
+def rank_frontier(
+    frontier: DataFrame,
+    robots: DataFrame | None,
+    host_budget: int | None,
+    salt_buckets: int = 16,
+) -> DataFrame:
+    """Every frontier row with its politeness rank: the frontier's columns
+    plus ``slot`` (1-based within host over (priority DESC, url ASC)) and
+    ``_budget`` (``max(1, host_budget // crawl_delay)``; NULL with no
+    budget). A row is scheduled when ``is_scheduled()``; the rows the salted
+    pre-trim drops cannot be, and carry a NULL ``slot``.
+
+    ``host_budget None`` -> no cap: every row has its slot (slots still
+    define the deterministic order).
+    """
+    order = (F.desc("priority"), F.asc("url"))
+
+    if host_budget is None:
+        w_host = Window.partitionBy("host").orderBy(*order)
+        return frontier.withColumn(
+            "slot", F.row_number().over(w_host).cast("int")
+        ).withColumn("_budget", F.lit(None).cast("int"))
+
+    # salted partial top-k: local rank within (host, salt) can only be <= the
+    # exact per-host rank, so keeping local_rank <= budget is a safe superset.
+    salt = F.pmod(F.xxhash64(F.col("url")), F.lit(salt_buckets))
+    w_salt = Window.partitionBy("host", salt).orderBy(*order)
+
+    if robots is not None:
+        frontier = frontier.join(F.broadcast(robots), on="host", how="left")
+        budget = F.greatest(
+            F.lit(1),
+            (F.lit(host_budget) / F.coalesce(F.col("crawl_delay"), F.lit(DEFAULT_CRAWL_DELAY))).cast("int"),
+        )
+    else:
+        budget = F.lit(host_budget)
+
+    # the survivors share one exact per-host window partition (_part -1);
+    # the trimmed rows stay spread over their salt buckets and get no slot
+    pre = frontier.withColumn("_budget", budget).withColumn(
+        "_part",
+        F.when(F.row_number().over(w_salt) <= F.col("_budget"), F.lit(-1)).otherwise(salt),
+    )
+    w_exact = Window.partitionBy("host", "_part").orderBy(*order)
+    slot = F.when(F.col("_part") == -1, F.row_number().over(w_exact))
+    return pre.withColumn("slot", slot.cast("int")).drop("_part", "crawl_delay")
+
+
+def is_scheduled() -> Column:
+    """Over ``rank_frontier`` rows: the row's slot is within its host's
+    budget (every ranked row, with no budget)."""
+    return F.coalesce(
+        F.col("_budget").isNull() | (F.col("slot") <= F.col("_budget")), F.lit(False)
+    )
+
+
+def split_ranked(ranked: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(scheduled, deferred) as two filters of one ``rank_frontier`` frame:
+    scheduled rows keep their ``slot``, deferred rows have the frontier's
+    columns only."""
+    due = is_scheduled()
+    frontier_cols = [c for c in ranked.columns if c not in ("slot", "_budget")]
+    return ranked.filter(due).drop("_budget"), ranked.filter(~due).select(*frontier_cols)
+
+
 def schedule_wave(
     frontier: DataFrame,
     robots: DataFrame | None,
@@ -242,39 +309,8 @@ def schedule_wave(
     * deferred rows (over budget) are returned unchanged for re-enqueue.
 
     ``host_budget None`` -> no cap: everything is scheduled (slots still
-    assigned — they define the deterministic order).
+    assigned — they define the deterministic order), nothing deferred.
+    Both are filters of ``rank_frontier``'s one ranked frame, so a caller
+    that caches that frame (plans/wave.py) reads the frontier once.
     """
-    w_exact = Window.partitionBy("host").orderBy(F.desc("priority"), F.asc("url"))
-
-    if host_budget is None:
-        scheduled = frontier.withColumn("slot", F.row_number().over(w_exact).cast("int"))
-        return scheduled, frontier.limit(0)
-
-    # salted partial top-k: local rank within (host, salt) can only be <= the
-    # exact per-host rank, so keeping local_rank <= budget is a safe superset.
-    salt = F.pmod(F.xxhash64(F.col("url")), F.lit(salt_buckets))
-    w_salt = Window.partitionBy("host", salt).orderBy(F.desc("priority"), F.asc("url"))
-
-    if robots is not None:
-        frontier = frontier.join(F.broadcast(robots), on="host", how="left")
-        budget = F.greatest(
-            F.lit(1),
-            (F.lit(host_budget) / F.coalesce(F.col("crawl_delay"), F.lit(DEFAULT_CRAWL_DELAY))).cast("int"),
-        )
-    else:
-        budget = F.lit(host_budget)
-
-    pre = frontier.withColumn("_local_rank", F.row_number().over(w_salt)).withColumn(
-        "_budget", budget
-    )
-    survivors = pre.filter(F.col("_local_rank") <= F.col("_budget"))
-    ranked = survivors.withColumn("slot", F.row_number().over(w_exact).cast("int"))
-
-    scheduled = ranked.filter(F.col("slot") <= F.col("_budget")).drop(
-        "_local_rank", "_budget", "crawl_delay"
-    )
-    # deferred = frontier minus scheduled (anti-join on url)
-    deferred = frontier.drop("crawl_delay").join(
-        scheduled.select("url"), on="url", how="left_anti"
-    )
-    return scheduled, deferred
+    return split_ranked(rank_frontier(frontier, robots, host_budget, salt_buckets))

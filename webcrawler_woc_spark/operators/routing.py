@@ -9,12 +9,17 @@ seen set *before* wave-w children are routed. The Python oracle implements
 the identical rule, so crawl order and seen-set are well-defined.
 
 Scale notes:
-* the wave-level dedup + anti-joins shuffle ONLY the freshly-extracted links
-  (bounded by wave out-degree), never the cumulative seen set: the seen set
-  is only scanned (anti_join_scan), and with a seen filter on
-  (prefiltered_anti_join) only the maybe-seen remainder is checked against it.
+* while the seen set (or the rejected set) is at most BROADCAST_MAX_ROWS
+  rows, its exact size is in the manifest and the wave subtracts it with ONE
+  left-anti join against a broadcast of it (subtract_known): nothing is
+  shuffled but the wave's own children.
+* above that, the wave-level dedup + anti-joins shuffle ONLY the
+  freshly-extracted links (bounded by wave out-degree), never the cumulative
+  seen set: the seen set is only scanned (anti_join_scan), and with a seen
+  filter on (prefiltered_anti_join) only the maybe-seen remainder is checked
+  against it.
 * the seen and rejected sets are filtered views of the warehouse's
-  links_out rows (plans/state.py VIEWS); anti_join_scan only scans them.
+  links_out rows (plans/state.py VIEWS); the anti-joins only scan them.
 """
 
 from __future__ import annotations
@@ -125,6 +130,39 @@ def dedup_wave(children: DataFrame) -> DataFrame:
     return children.groupBy("url").agg(F.min("link_type").alias("link_type"))
 
 
+def split_children(
+    children: DataFrame, whitelist: list[str] | None, blacklist: list[str] | None
+) -> tuple[DataFrame, DataFrame]:
+    """(crawlable, uncrawlable) children by the should_crawl policy."""
+    sc = should_crawl_col(F.col("host"), whitelist, blacklist)
+    tagged = children.withColumn("should_crawl", sc)
+    return tagged.filter(F.col("should_crawl")), tagged.filter(~F.col("should_crawl"))
+
+
+def subtract_known(
+    candidates: DataFrame,
+    known: DataFrame | None,
+    known_rows: int,
+    candidates_rows: int | None = None,
+) -> DataFrame:
+    """candidates minus ``known`` on (url_hash, url), exactly.
+
+    ``known_rows`` is the exact size of ``known`` (the wave reads it from the
+    manifest). While it is at most BROADCAST_MAX_ROWS this is ONE left-anti
+    join against a broadcast of ``known``; above that, ``anti_join_scan``
+    (``known`` only scanned, its broadcast gated on ``candidates_rows``).
+    No ``known`` (nothing committed yet) subtracts nothing.
+    """
+    from ..config import small_enough_to_broadcast
+
+    keys = ["url_hash", "url"]
+    if known is None:
+        return candidates
+    if small_enough_to_broadcast(known_rows):
+        return candidates.join(F.broadcast(known.select(*keys)), keys, "left_anti")
+    return anti_join_scan(candidates, known, keys, small_rows=candidates_rows)
+
+
 def route_children(
     children: DataFrame,
     seen: DataFrame,
@@ -142,14 +180,11 @@ def route_children(
     * crawl-worthy but already seen -> silently dropped (crawler.rs:90).
 
     Anti-joins run on url_hash (cheap 8-byte shuffle key) then confirm on the
-    full url — hash collisions cannot drop a truly-new URL.
+    full url — hash collisions cannot drop a truly-new URL. The wave routes
+    with ``split_children`` and ``subtract_known`` instead, which know the
+    seen and rejected sets' sizes.
     """
-    sc = should_crawl_col(F.col("host"), whitelist, blacklist)
-    tagged = children.withColumn("should_crawl", sc)
-
-    crawlable = tagged.filter(F.col("should_crawl"))
-    uncrawlable = tagged.filter(~F.col("should_crawl"))
-
+    crawlable, uncrawlable = split_children(children, whitelist, blacklist)
     next_frontier = anti_join_scan(crawlable, seen, ["url_hash", "url"], small_rows=children_rows)
     newly_rejected = anti_join_scan(
         uncrawlable, rejected, ["url_hash", "url"], small_rows=children_rows
