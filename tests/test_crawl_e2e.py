@@ -163,6 +163,42 @@ class TestPoliteness:
             assert r["n"] <= 6
 
 
+class TestDuplicateSeeds:
+    """Seeds naming one url twice are one frontier row, the last priority
+    winning as in the oracle: at budget 1 a trimmed copy must not stay
+    deferred and be crawled again a wave later, and at budget 2 both copies
+    must not be scheduled in wave 0."""
+
+    SEEDS = [
+        ("http://host0.example/page/0", 0.5),
+        ("http://host0.example/page/1", 1.0),
+        ("http://host0.example/page/1", 1.0),
+        ("http://host0.example/page/0", 2.0),
+    ]
+
+    @pytest.mark.parametrize("budget", [1, 2])
+    def test_each_url_crawled_once(self, spark, pages, pages_dict, budget):
+        cfg = CrawlConfig(whitelist=WHITELIST, words=WORDS, depth=3, host_budget=budget)
+        with tempfile.TemporaryDirectory() as tmp:
+            wh = Warehouse(spark, tmp)
+            crawl(spark, wh, pages, self.SEEDS, cfg)
+            order = sorted(
+                (r["wave"], r["host"], r["slot"], r["url"])
+                for r in read_crawl_order(wh).collect()
+            )
+            crawled = sorted(
+                r["url"] for r in read_links_out(wh).filter("crawled").collect()
+            )
+        oracle = crawl_oracle(
+            pages_dict, self.SEEDS, whitelist=WHITELIST, words=WORDS, depth=3,
+            host_budget=budget,
+        )
+        assert order == sorted(oracle.crawl_order)
+        assert crawled == sorted(l["url"] for l in oracle.links_out if l["crawled"])
+        assert len(crawled) == len(set(crawled))
+        assert (0, "host0.example", 1, "http://host0.example/page/0") in order
+
+
 class TestNoListsQuirk:
     def test_only_seed_crawled(self, spark, pages, pages_dict):
         # neither whitelist nor blacklist => should_crawl always false
@@ -449,6 +485,33 @@ class TestBroadcastFallbackEquivalence:
         monkeypatch.setattr(cfgmod, "BROADCAST_MAX_ROWS", 0)
         fallback = run(tmp_path / "wh_shuffle")
         assert fallback == base
+
+
+class TestKnownSetGate:
+    def test_scanned_seen_set_matches_oracle(self, spark, pages, pages_dict, monkeypatch):
+        """Between KNOWN_SET_BROADCAST_MAX_ROWS and BROADCAST_MAX_ROWS the
+        wave builds no seen filter and subtracts the seen and rejected sets
+        with the scan-only anti_join_scan (plus the scheduled-keys
+        anti-join) instead of one broadcast of them. With that gate at 0 and
+        the filter gate at its default, a budgeted crawl equals the oracle."""
+        import webcrawler_woc_spark.config as cfgmod
+
+        monkeypatch.setattr(cfgmod, "KNOWN_SET_BROADCAST_MAX_ROWS", 0)
+        with tempfile.TemporaryDirectory() as tmp:
+            wh, oracle = run_both(spark, pages, pages_dict, tmp, depth=3, host_budget=2)
+            seen = {r["url"] for r in read_seen(wh).collect()}
+            order = sorted(
+                (r["wave"], r["host"], r["slot"], r["url"]) for r in read_crawl_order(wh).collect()
+            )
+            rejected = {r["url"] for r in wh.read_waves("rejected").collect()}
+            probes = {
+                i["seen_probe"] for i in wh.manifest["waves"].values()
+                if "residual_flush" not in i["counts"]
+            }
+        assert seen == oracle.seen
+        assert order == sorted(oracle.crawl_order)
+        assert rejected == oracle.rejected
+        assert probes == {"exact"}
 
 
 class TestChildrenGateReplan:

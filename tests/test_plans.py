@@ -14,7 +14,7 @@ from webcrawler_woc_spark.operators.fetch import (
     with_host,
     with_url_hash,
 )
-from webcrawler_woc_spark.operators.routing import anti_join_scan
+from webcrawler_woc_spark.operators.routing import anti_join_scan, subtract_known
 from webcrawler_woc_spark.plans.explain import (
     assert_broadcast_join,
     assert_no_sort_merge_join,
@@ -130,6 +130,36 @@ class TestAntiJoinPlan:
         }
         got = {r["url"] for r in anti_join_scan(small, big.limit(20), ["url_hash", "url"]).collect()}
         assert got == expected
+
+
+class TestSubtractKnownPlan:
+    """A known set at most KNOWN_SET_BROADCAST_MAX_ROWS is subtracted with
+    one broadcast of it; above that gate the set is only scanned, against a
+    broadcast of the candidates (anti_join_scan's two broadcast joins)."""
+
+    @pytest.fixture
+    def sides(self, spark, pages_path):
+        big = spark.read.parquet(pages_path).select(
+            F.xxhash64("url").alias("url_hash"), F.col("url")
+        )
+        return big.filter(F.col("url").contains("/page/1")).limit(50), big.limit(20)
+
+    def test_below_gate_one_broadcast_of_the_set(self, sides):
+        small, known = sides
+        out = subtract_known(small, known, known_rows=20)
+        plan = assert_broadcast_join(out)
+        assert "LeftSemi" not in plan
+
+    def test_above_gate_scans_the_set(self, sides, monkeypatch):
+        import webcrawler_woc_spark.config as cfgmod
+
+        small, known = sides
+        expected = {r["url"] for r in subtract_known(small, known, known_rows=20).collect()}
+        monkeypatch.setattr(cfgmod, "KNOWN_SET_BROADCAST_MAX_ROWS", 19)
+        out = subtract_known(small, known, known_rows=20)
+        plan = assert_broadcast_join(out, count=2)
+        assert "LeftSemi" in plan
+        assert {r["url"] for r in out.collect()} == expected
 
 
 class TestCodegen:

@@ -22,6 +22,26 @@ def small_enough_to_broadcast(rows: int | None) -> bool:
     return rows is None or rows <= BROADCAST_MAX_ROWS
 
 
+# Rows up to which a wave subtracts a set it already knows (the cumulative
+# seen or rejected urls) with ONE left-anti join against a broadcast of the
+# whole set (operators/routing.subtract_known), rather than scanning the set
+# against a broadcast of the wave's children (anti_join_scan). The broadcast
+# side is collected through the driver, so its cost grows with the set, while
+# the scan is parallel. Measured on 4 cores (local[4]), the subtraction of
+# 5k and of 50k children (half of them known) from a seen set stored as 8
+# wave files, median of 5: one broadcast 0.47 / 0.34 s vs the scan 0.53 /
+# 0.45 s at 100k rows; 0.53 / 0.43 vs 0.45 / 0.44 s at 150k; 0.65 / 0.57 vs
+# 0.51 / 0.46 s at 300k; 1.38 / 1.41 vs 0.57 / 0.67 s at 1M. Never above
+# BROADCAST_MAX_ROWS.
+KNOWN_SET_BROADCAST_MAX_ROWS = 100_000
+
+
+def broadcast_known_set(rows: int) -> bool:
+    """A known set of ``rows`` rows (an exact manifest count) is subtracted
+    with one broadcast of it (see KNOWN_SET_BROADCAST_MAX_ROWS)."""
+    return rows <= min(BROADCAST_MAX_ROWS, KNOWN_SET_BROADCAST_MAX_ROWS)
+
+
 @dataclass
 class CrawlConfig:
     """Parameters of one crawl run.

@@ -9,10 +9,11 @@ seen set *before* wave-w children are routed. The Python oracle implements
 the identical rule, so crawl order and seen-set are well-defined.
 
 Scale notes:
-* while the seen set (or the rejected set) is at most BROADCAST_MAX_ROWS
-  rows, its exact size is in the manifest and the wave subtracts it with ONE
-  left-anti join against a broadcast of it (subtract_known): nothing is
-  shuffled but the wave's own children.
+* while the seen set (or the rejected set) is at most
+  KNOWN_SET_BROADCAST_MAX_ROWS rows (config.py, with the measured
+  crossover), its exact size is in the manifest and the wave subtracts it
+  with ONE left-anti join against a broadcast of it (subtract_known):
+  nothing is shuffled but the wave's own children.
 * above that, the wave-level dedup + anti-joins shuffle ONLY the
   freshly-extracted links (bounded by wave out-degree), never the cumulative
   seen set: the seen set is only scanned (anti_join_scan), and with a seen
@@ -126,8 +127,13 @@ def dedup_wave(children: DataFrame) -> DataFrame:
 
     Keeps an arbitrary-but-deterministic row per url via min aggregation —
     (url, link_type) is functionally dependent on url, so min() is exact.
+    ``links`` counts the child links the row stands for (their sum is the
+    wave's extracted-links count); a caller that does not read it costs
+    nothing, as the optimizer prunes the unread aggregate.
     """
-    return children.groupBy("url").agg(F.min("link_type").alias("link_type"))
+    return children.groupBy("url").agg(
+        F.min("link_type").alias("link_type"), F.count(F.lit(1)).alias("links")
+    )
 
 
 def split_children(
@@ -148,17 +154,18 @@ def subtract_known(
     """candidates minus ``known`` on (url_hash, url), exactly.
 
     ``known_rows`` is the exact size of ``known`` (the wave reads it from the
-    manifest). While it is at most BROADCAST_MAX_ROWS this is ONE left-anti
-    join against a broadcast of ``known``; above that, ``anti_join_scan``
-    (``known`` only scanned, its broadcast gated on ``candidates_rows``).
-    No ``known`` (nothing committed yet) subtracts nothing.
+    manifest). While it is at most KNOWN_SET_BROADCAST_MAX_ROWS this is ONE
+    left-anti join against a broadcast of ``known``; above that,
+    ``anti_join_scan`` (``known`` only scanned, its broadcast gated on
+    ``candidates_rows``). No ``known`` (nothing committed yet) subtracts
+    nothing.
     """
-    from ..config import small_enough_to_broadcast
+    from ..config import broadcast_known_set
 
     keys = ["url_hash", "url"]
     if known is None:
         return candidates
-    if small_enough_to_broadcast(known_rows):
+    if broadcast_known_set(known_rows):
         return candidates.join(F.broadcast(known.select(*keys)), keys, "left_anti")
     return anti_join_scan(candidates, known, keys, small_rows=candidates_rows)
 

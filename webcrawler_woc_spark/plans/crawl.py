@@ -45,16 +45,19 @@ def seed_frontier(
     dropped with the same effect of never being crawled). ``strip_tracking``
     applies the same tracking-param canonicalization the waves apply to
     extracted children — the seed must live in the same URL space as the
-    seen set it founds."""
+    seen set it founds. Seeds with one canonical url are one frontier row,
+    the last one's priority winning: every frontier holds a url once, which
+    the politeness split relies on (a trimmed copy would stay deferred)."""
     from ..functions.urlnorm import parse_absolute, strip_tracking_params
 
-    rows = []
+    priorities: dict[str, float] = {}
     for raw, priority in seeds:
         canon = parse_absolute(raw)
         if canon is not None:
             if strip_tracking:
                 canon = strip_tracking_params(canon)
-            rows.append((0, canon, float(priority)))
+            priorities[canon] = float(priority)
+    rows = [(0, url, priority) for url, priority in priorities.items()]
     df = spark.createDataFrame(rows, "wave int, url string, priority double")
     df = with_host(with_url_hash(df)).select("wave", "url", "url_hash", "host", "priority")
     wh.write_wave_table("frontier", 0, df)

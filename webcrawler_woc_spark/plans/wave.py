@@ -34,13 +34,14 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import CrawlConfig, small_enough_to_broadcast
+from ..config import CrawlConfig, broadcast_known_set, small_enough_to_broadcast
 from ..operators.bloom import SEEN_FILTERS
 from ..operators.extract import extract_child_links, extracted_text, mime_ok
 from ..operators.fetch import fetch_join, fetch_matched, with_host, with_url_hash
 from ..operators.politeness import is_scheduled, rank_frontier, split_ranked
 from ..operators.routing import (
     broadcast_tag,
+    dedup_wave,
     prefiltered_anti_join,
     split_children,
     subtract_known,
@@ -192,12 +193,10 @@ def run_wave(
                 )
             if extra_children is not None:
                 children = children.unionByName(extra_children.select("url", "link_type"))
-            # the wave dedup (dedup_wave's one row per url, plus the links
-            # it stood for) is what the fill caches: both routing branches
-            # read it, and the extraction runs exactly once
-            deduped = with_host(with_url_hash(children.groupBy("url").agg(
-                F.min("link_type").alias("link_type"), F.count(F.lit(1)).alias("_links")
-            )))
+            # the wave dedup (one row per url, with the links it stands for)
+            # is what the fill caches: both routing branches read it, and
+            # the extraction runs exactly once
+            deduped = with_host(with_url_hash(dedup_wave(children)))
 
             def _children_fill():
                 f_sched.result()  # a failed schedule fill fails this one unrun
@@ -207,7 +206,7 @@ def run_wave(
                     matched.cache()
                 deduped.cache()
                 # corpus scan + matched cache; the exact children count
-                return int(deduped.agg(F.sum("_links")).first()[0] or 0)
+                return int(deduped.agg(F.sum("links")).first()[0] or 0)
 
             f_children = fills.submit(_timed, "cache_children", _children_fill)
             text_out = extracted_text(gated)
@@ -248,10 +247,12 @@ def run_wave(
 
             # The seen set after this wave (committed seen plus this wave's
             # scheduled urls, batch seen semantics) is exactly known. While
-            # it is broadcast-small (config.BROADCAST_MAX_ROWS), the seen
-            # anti-join is ONE left-anti against a broadcast of it, and no
-            # filter is built, loaded or probed: by the no-false-negative
-            # contract the result is identical with or without a probe.
+            # it is at most config.BROADCAST_MAX_ROWS no filter is built,
+            # loaded or probed: by the no-false-negative contract the result
+            # is identical with or without a probe. The exact anti-join is
+            # then ONE left-anti against a broadcast of seen ∪ scheduled
+            # while that set is at most config.KNOWN_SET_BROADCAST_MAX_ROWS
+            # (the measured crossover), else the scan-only anti_join_scan.
             #
             # Above the gate the seen filter is a cache of the seen view,
             # kept only where a wave will probe it: the wave takes the
@@ -299,7 +300,7 @@ def run_wave(
                 newly_rejected = subtract_known(
                     uncrawlable, rejected_prev, rejected_rows, children_rows
                 )
-                if small_enough_to_broadcast(seen_after):
+                if broadcast_known_set(seen_after):
                     known = sched_keys
                     if seen_prev is not None:
                         known = known.unionByName(seen_prev)
@@ -356,7 +357,8 @@ def run_wave(
             # planned for the broadcast case while the children fill runs;
             # planned again only when the fill reports more children than a
             # broadcast takes. Above the seen gate the probe is planned once,
-            # for the exact children count.
+            # for the exact children count (a probe is built as it is
+            # planned).
             planned = _route(None) if small_enough_to_broadcast(seen_after) else None
             extracted = f_children.result()
         finally:
